@@ -29,8 +29,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from pyspark.sql import DataFrame  # noqa: E402
+
 from vat_etl_spark.queries import QUERIES  # noqa: E402
-from vat_etl_spark.session import get_spark  # noqa: E402
+from vat_etl_spark.session import get_spark, release_engine_caches  # noqa: E402
 
 BENCH_QUERIES = [
     "vat_summary",
@@ -108,14 +110,14 @@ MULTI_JOB_BENCH = [
     # — the exact-truth recall audit stays in the registered
     # ann_graph_search (oracle/pytest tier), so the gate stops re-flagging
     # the audit harness every time the recall budget moves. Runs via
-    # _run_ann_serve below, not the QUERIES registry.
+    # key_plan below, not the QUERIES registry.
     "ann_graph_serve",
     # the composed end-to-end corpus build (round-10 ask): the FULL
     # curation funnel (Gopher -> classifier -> perplexity -> exact dedup
     # -> line dedup -> span removal -> SimHash gate -> leakage-safe split)
     # written partitionBy(split, shard) into a temp dir, funnel counters
     # asserted every pass. This is the flagship LLM deliverable; it runs
-    # via _run_corpus_build below, not the QUERIES registry.
+    # via run_key below, not the QUERIES registry.
     "corpus_build_full",
     # the same composed build with the CCNet train-once split (round 12):
     # the perplexity stage SCORES against a persisted LM (estimated once
@@ -134,8 +136,7 @@ MULTI_JOB_BENCH = [
 # separates spread from shift like every other entry.
 PASS_CAP = {"corpus_build_full": 2, "corpus_build_fixed_lm": 2}
 
-# set in main() before the timed passes; reported in the artifact
-_CPU_PROBE: float | None = None
+CORPUS_KEYS = ("corpus_build_full", "corpus_build_fixed_lm")
 
 # one-time per-process KN LM estimate for corpus_build_fixed_lm: the whole
 # point of the fixed-LM shape is that estimation is AMORTIZED across
@@ -162,54 +163,14 @@ def _bench_lm_dir(spark, sf_dir: str) -> str:
     return _BENCH_LM_DIRS[sf_dir]
 
 
-def _run_ann_serve(spark, sf_dir: str) -> None:
-    """One serve-only ANN pass (audit-preset budget, no exact-truth
-    audit) into the noop sink — the index is built/validated by the warm
-    pass, so timed passes measure beam search against the persisted
-    graph."""
-    from vat_etl_spark.queries.similarity import ann_graph_serve
-
-    ann_graph_serve(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-
-
-def _run_corpus_build(spark, sf_dir: str, lm_dir: str | None = None) -> None:
-    """One timed end-to-end build_corpus run into a fresh temp dir, with
-    the funnel-counter sanity contract asserted (monotone non-increasing
-    doc counts, nonzero output) so a silently-empty funnel can never post
-    a fast time. With ``lm_dir``: the fixed-LM perplexity stage (scores
-    against the persisted LM instead of re-estimating)."""
-    import shutil
-    import tempfile
-
-    from vat_etl_spark.queries.llm_pipeline import build_corpus
-
-    out = tempfile.mkdtemp(prefix="bench_corpus_")
-    try:
-        m = build_corpus(spark, sf_dir, f"{out}/corpus", lm_dir=lm_dir)
-        docs = list(m["funnel"].values())  # insertion-ordered stage counts
-        assert docs[0] > 0 and docs[-1] > 0, m["funnel"]
-        assert all(a >= b for a, b in zip(docs, docs[1:])), m["funnel"]
-        assert m["docs_written"] == docs[-1], m
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-
-
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else -1.0
-    spark = get_spark("bench")
-
-    # Fixed pure-JVM/CPU probe (round-13, verdict task 6): the regression
-    # gate normalizes by machine drift estimated FROM prior-round query
-    # walls, which conflates plan changes with host state. This probe is
-    # invariant across rounds (no I/O, no shuffle, whole-stage-codegen
-    # xxhash64 fold over a fixed range), so its wall isolates the host:
-    # compare cpu_probe_sec across BENCH_r*.json artifacts to attribute a
-    # slow round to the box, not the code. Median of 3 after one warm.
-    global _CPU_PROBE
+def cpu_probe(spark) -> float:
+    """Fixed pure-JVM/CPU probe (round-13, verdict task 6): the regression
+    gate normalizes by machine drift estimated FROM prior-round query
+    walls, which conflates plan changes with host state. This probe is
+    invariant across rounds (no I/O, no shuffle, whole-stage-codegen
+    xxhash64 fold over a fixed range), so its wall isolates the host:
+    compare cpu_probe_sec across BENCH_r*.json artifacts to attribute a
+    slow round to the box, not the code. Median of 3 after one warm."""
 
     def _probe() -> float:
         t0 = time.perf_counter()
@@ -219,7 +180,137 @@ def main() -> None:
         return time.perf_counter() - t0
 
     _probe()
-    _CPU_PROBE = round(statistics.median(_probe() for _ in range(3)), 3)
+    return round(statistics.median(_probe() for _ in range(3)), 3)
+
+
+def key_plan(spark, key: str, sf_dir: str) -> DataFrame:
+    """The DataFrame a non-corpus bench key writes: a registry query, or
+    the serve-only ANN pass (audit-preset budget, no exact-truth audit)
+    against the persisted graph index."""
+    if key == "ann_graph_serve":
+        from vat_etl_spark.queries.similarity import ann_graph_serve
+
+        return ann_graph_serve(spark, sf_dir)
+    return QUERIES[key](spark, sf_dir)
+
+
+def run_key(spark, key: str, sf_dir: str, plan: DataFrame | None = None) -> dict:
+    """Run one bench key once, end to end. A corpus key runs build_corpus
+    into a fresh temp dir (with the fixed LM for corpus_build_fixed_lm),
+    asserts the funnel-counter sanity contract (monotone non-increasing
+    doc counts, nonzero output) so a silently-empty funnel can never post
+    a fast time, and returns the build's ``funnel``, ``stage_walls`` and
+    ``docs_written``. Any other key writes ``plan`` (default: built here
+    by :func:`key_plan`) into the noop sink and returns {}."""
+    if key not in CORPUS_KEYS:
+        if plan is None:
+            plan = key_plan(spark, key, sf_dir)
+        plan.write.format("noop").mode("overwrite").save()
+        return {}
+    import shutil
+    import tempfile
+
+    from vat_etl_spark.queries.llm_pipeline import build_corpus
+
+    lm_dir = _bench_lm_dir(spark, sf_dir) if key == "corpus_build_fixed_lm" else None
+    out = tempfile.mkdtemp(prefix="bench_corpus_")
+    try:
+        m = build_corpus(spark, sf_dir, f"{out}/corpus", lm_dir=lm_dir)
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+    docs = list(m["funnel"].values())  # insertion-ordered stage counts
+    assert docs[0] > 0 and docs[-1] > 0, m["funnel"]
+    assert all(a >= b for a, b in zip(docs, docs[1:])), m["funnel"]
+    assert m["docs_written"] == docs[-1], m
+    return {k: m[k] for k in ("funnel", "stage_walls", "docs_written")}
+
+
+def release_caches(spark) -> None:
+    """Drop every engine cache and fail if a persisted RDD or a cached
+    plan survives: a timed run must not read a cache an earlier run
+    built (VERDICT r15 #1: otherwise span_removal_plan's cache_latest
+    hands every pipeline_span_removal pass after the first a warm
+    InMemoryRelation, and a persisted frame can serve a matching subplan
+    of another key)."""
+    release_engine_caches(spark)
+    n_rdds = spark.sparkContext._jsc.getPersistentRDDs().size()
+    if n_rdds or not spark._jsparkSession.sharedState().cacheManager().isEmpty():
+        raise RuntimeError(
+            f"engine caches survived a run boundary ({n_rdds} persisted RDDs)"
+        )
+
+
+def _in_group(spark, key: str, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(key, f"bench:{key}")
+    try:
+        return fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def warm_keys(spark, keys: list[str], sf_dir: str, warm_dir: str | None = None) -> None:
+    """One untimed run of every key (codegen, shuffle machinery, file
+    listings, ANN index build) at ``warm_dir`` (default ``sf_dir``),
+    caches released after each. Warming at another dir still builds the
+    persisted state the timed runs at ``sf_dir`` read — the fixed LM and
+    the ANN graph index — so no timed run pays for it."""
+    for key in keys:
+        _in_group(spark, key, lambda: run_key(spark, key, warm_dir or sf_dir))
+        release_caches(spark)
+    if warm_dir not in (None, sf_dir):
+        if "corpus_build_fixed_lm" in keys:
+            _bench_lm_dir(spark, sf_dir)
+        if "ann_graph_serve" in keys:
+            from vat_etl_spark.queries.similarity import build_graph_index
+
+            build_graph_index(spark, sf_dir)
+        release_caches(spark)
+
+
+def time_passes(
+    spark, keys: list[str], sf_dir: str, n_passes: int,
+    pass_cap: dict[str, int] = PASS_CAP,
+) -> tuple[dict[str, list[float]], dict[str, dict]]:
+    """The timed passes: ``n_passes`` rounds over ``keys`` in order, each
+    run under ``setJobGroup(key)`` and followed by :func:`release_caches`.
+    Returns per-key wall samples and each key's last run_key record.
+
+    Prepared-plan protocol: a registry key's DataFrame is BUILT before
+    its timed region and the timer covers execution only (noop sink —
+    full scan/shuffle/agg, AQE re-plans every time). Python-side plan
+    construction is driver overhead (~0.3s for the flagship's ~150 py4j
+    round trips), is O(1) in data volume, and is not a property of the
+    plans being measured — at 100 TB it is noise, at sf0.1 it would be
+    ~30% of the flagship number. The plan is rebuilt (untimed) every
+    pass: a plan that persists an intermediate at construction would
+    otherwise run cache-less from the second pass on, a regime no caller
+    sees. MULTI_JOB_BENCH keys are rebuilt inside the timed region (their
+    driver-coordinated phases are the algorithm) and run at most
+    ``pass_cap`` times."""
+    samples: dict[str, list[float]] = {key: [] for key in keys}
+    records: dict[str, dict] = {}
+    for _ in range(n_passes):
+        for key in keys:
+            if len(samples[key]) >= pass_cap.get(key, n_passes):
+                continue
+            plan = None if key in MULTI_JOB_BENCH else key_plan(spark, key, sf_dir)
+            t0 = time.perf_counter()
+            records[key] = _in_group(
+                spark, key, lambda: run_key(spark, key, sf_dir, plan)
+            )
+            samples[key].append(time.perf_counter() - t0)
+            release_caches(spark)
+    return samples, records
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1)) if m else -1.0
+    spark = get_spark("bench")
+    probe = cpu_probe(spark)
 
     # Warm-up: exercise the same codegen paths (broadcast hash join, decimal
     # hash aggregate, window, noop sink) once at smoke scale so the timings
@@ -235,15 +326,8 @@ def main() -> None:
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
     QUERIES["vat_summary"](spark, warm).write.format("noop").mode("overwrite").save()
     # untimed warm pass: compile every query's codegen stages at bench scale
-    for name in BENCH_QUERIES + MULTI_JOB_BENCH:
-        if name == "corpus_build_full":
-            _run_corpus_build(spark, sf_dir)
-        elif name == "corpus_build_fixed_lm":
-            _run_corpus_build(spark, sf_dir, lm_dir=_bench_lm_dir(spark, sf_dir))
-        elif name == "ann_graph_serve":
-            _run_ann_serve(spark, sf_dir)
-        else:
-            QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    keys = BENCH_QUERIES + MULTI_JOB_BENCH
+    warm_keys(spark, keys, sf_dir)
 
     # N timed passes (default 5), median-of-N per query: round 3 showed
     # best-of-2 drifting +20% across the board on untouched plans, which
@@ -251,37 +335,8 @@ def main() -> None:
     # The median is robust to a slow outlier pass and, unlike min, does not
     # systematically reward noise; min/max per query are reported so a
     # reader can separate spread (environment) from shift (plan change).
-    # Prepared-plan protocol: each query's DataFrame is BUILT once and the
-    # timed passes re-execute it (noop sink — full scan/shuffle/agg every
-    # time, AQE re-plans every time). Python-side plan reconstruction is
-    # driver overhead (~0.3s for the flagship's ~150 py4j round trips), is
-    # O(1) in data volume, and is not a property of the plans being
-    # measured — at 100 TB it is noise, at sf0.1 it would be ~30% of the
-    # flagship number.
     n_passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "5"))
-    prepared = {name: QUERIES[name](spark, sf_dir) for name in BENCH_QUERIES}
-    samples: dict[str, list[float]] = {
-        name: [] for name in BENCH_QUERIES + MULTI_JOB_BENCH
-    }
-    for _ in range(n_passes):
-        for name in BENCH_QUERIES:
-            df = prepared[name]
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            samples[name].append(time.perf_counter() - t0)
-        for name in MULTI_JOB_BENCH:
-            if len(samples[name]) >= PASS_CAP.get(name, n_passes):
-                continue
-            t0 = time.perf_counter()
-            if name == "corpus_build_full":
-                _run_corpus_build(spark, sf_dir)
-            elif name == "corpus_build_fixed_lm":
-                _run_corpus_build(spark, sf_dir, lm_dir=_bench_lm_dir(spark, sf_dir))
-            elif name == "ann_graph_serve":
-                _run_ann_serve(spark, sf_dir)
-            else:
-                QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples[name].append(time.perf_counter() - t0)
+    samples, _ = time_passes(spark, keys, sf_dir, n_passes)
 
     timings = {name: round(statistics.median(s), 3) for name, s in samples.items()}
     spread = {
@@ -314,7 +369,7 @@ def main() -> None:
         "queries": timings,
         "subtotal_fast_tier": subtotal_fast,
         "subtotal_slow_tier": subtotal_slow,
-        "cpu_probe_sec": _CPU_PROBE,
+        "cpu_probe_sec": probe,
         "passes": n_passes,
         "sf": sf,
     }

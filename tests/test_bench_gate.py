@@ -3,14 +3,24 @@ suspects are computed per prior artifact (drift = that artifact's pack
 median) and a key is flagged only when suspect against EVERY artifact
 that recorded it — one ancient fast-host artifact can no longer flag a
 key that every other comparison shows improved (the r15 false positive:
-dedup_minhash_banded vs a probe-less r11 wall)."""
+dedup_minhash_banded vs a probe-less r11 wall). Also pins bench's pass
+loop: no engine cache crosses a run boundary."""
 
 from __future__ import annotations
 
 import glob
 import json
 
+import pytest
+from pyspark.sql import functions as F
+
 import bench
+from vat_etl_spark.functions.caching import cache_latest
+from vat_etl_spark.queries import QUERIES
+from vat_etl_spark.session import release_engine_caches
+
+# the gate reads the scale factor from the env: pin it, never inherit it
+SF_DIR = "/root/testdata/sf0.1"
 
 
 def _write(tmp_path, name, queries):
@@ -22,6 +32,7 @@ def _write(tmp_path, name, queries):
 
 
 def test_gate_flags_only_intersection(tmp_path, monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", SF_DIR)
     # ancient artifact: key x recorded on a much faster host (or an older
     # algorithm generation) -> x looks regressed against IT only
     p1 = _write(
@@ -45,6 +56,7 @@ def test_gate_flags_only_intersection(tmp_path, monkeypatch):
 
 
 def test_gate_flags_key_missing_from_some_artifacts(tmp_path, monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", SF_DIR)
     # a key recorded by only SOME artifacts must still be flaggable: the
     # intersection runs over the artifacts that recorded it, not all
     # artifacts (r15 review finding — a plain all-artifact intersection
@@ -63,6 +75,7 @@ def test_gate_flags_key_missing_from_some_artifacts(tmp_path, monkeypatch):
 
 
 def test_gate_min_spread_shield(tmp_path, monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", SF_DIR)
     # a slow MEDIAN whose fastest pass is under the bar is spread, not a
     # shift -> never flagged (the r3/r4 adjudication, carried over)
     p1 = _write(tmp_path, "BENCH_r01.json", {"x": 1.0, "y": 1.0, "z": 1.0})
@@ -74,6 +87,7 @@ def test_gate_min_spread_shield(tmp_path, monkeypatch):
 
 
 def test_gate_skips_mismatched_sf(tmp_path, monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", SF_DIR)
     p1 = tmp_path / "BENCH_r01.json"
     p1.write_text(
         json.dumps({"metric": "m", "sf": 0.01, "queries": {"x": 0.1}})
@@ -81,3 +95,54 @@ def test_gate_skips_mismatched_sf(tmp_path, monkeypatch):
     monkeypatch.setattr(glob, "glob", lambda pat: [str(p1)])
     out = bench.find_regressions({"x": 1.0}, {"x": [1.0]})
     assert out == {"machine_drift": None, "flagged": {}}
+
+
+def _cache_state(spark) -> tuple[int, bool]:
+    """(persisted RDDs, cache manager empty?)"""
+    return (
+        spark.sparkContext._jsc.getPersistentRDDs().size(),
+        spark._jsparkSession.sharedState().cacheManager().isEmpty(),
+    )
+
+
+def _cached_key(seen: list):
+    """A registry plan that persists an intermediate at construction
+    (cache_latest, like span_removal_plan) and reads it twice; each
+    construction records the cache state it finds, i.e. what crossed the
+    previous run boundary."""
+
+    def plan(spark, sf_dir):
+        seen.append(_cache_state(spark))
+        (base,) = cache_latest(
+            "bench_loop_probe",
+            spark.range(0, 1000).withColumn("k", F.col("id") % 7),
+        )
+        return base.groupBy("k").count().join(
+            base.groupBy("k").agg(F.max("id").alias("top")), "k"
+        )
+
+    return plan
+
+
+def test_pass_loop_releases_caches_between_runs(spark, monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", SF_DIR)
+    seen: list = []
+    monkeypatch.setitem(QUERIES, "bench_loop_probe", _cached_key(seen))
+    release_engine_caches(spark)  # start clean of other tests' caches
+    bench.warm_keys(spark, ["bench_loop_probe"], SF_DIR)
+    samples, _ = bench.time_passes(spark, ["bench_loop_probe"], SF_DIR, 3)
+    assert len(samples["bench_loop_probe"]) == 3
+    # warm run + 3 timed runs, each built on a cache-free session
+    assert seen == [(0, True)] * 4, seen
+    assert _cache_state(spark) == (0, True)
+
+
+def test_pass_loop_fails_when_a_cache_survives(spark, monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", SF_DIR)
+    monkeypatch.setitem(QUERIES, "bench_loop_probe", _cached_key([]))
+    monkeypatch.setattr(bench, "release_engine_caches", lambda s: 0)
+    try:
+        with pytest.raises(RuntimeError, match="survived"):
+            bench.time_passes(spark, ["bench_loop_probe"], SF_DIR, 2)
+    finally:
+        release_engine_caches(spark)

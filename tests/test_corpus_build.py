@@ -288,3 +288,46 @@ def test_fixed_lm_roundtrip_matches_self_estimated(spark, sf_smoke, tmp_path):
         .collect()
     }
     assert fixed == self_kept
+
+
+def test_build_corpus_raises_when_a_background_write_fails(
+    spark, sf_smoke, tmp_path, monkeypatch
+):
+    """A failed background write (the build_metrics/funnel metadata
+    writes run on the build's pool) must fail the build, not be logged
+    under a successful return."""
+    import pytest
+
+    from vat_etl_spark.queries import llm_pipeline
+
+    def broken(*a, **k):
+        raise RuntimeError("metadata write failed")
+
+    monkeypatch.setattr(llm_pipeline, "local_rows_df", broken)
+    with pytest.raises(RuntimeError, match="metadata write failed"):
+        llm_pipeline.build_corpus(
+            spark, sf_smoke, str(tmp_path / "c"), n_shards=4, stages=("gopher",)
+        )
+
+
+def test_join_background_surfaces_unconsumed_failures(caplog):
+    """The build's final join re-raises a background failure nobody
+    consumed when no primary exception is propagating, and only logs it
+    when one is."""
+    import logging
+    from concurrent.futures import ThreadPoolExecutor
+
+    import pytest
+
+    from vat_etl_spark.queries.llm_pipeline import _join_background
+
+    def fail():
+        raise ValueError("background boom")
+
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        futs = [pool.submit(fail)]
+        with pytest.raises(ValueError, match="background boom"):
+            _join_background(futs, surface=True)
+        with caplog.at_level(logging.WARNING):
+            _join_background(futs, surface=False)
+    assert "background job failed during cleanup" in caplog.text

@@ -246,3 +246,36 @@ def test_aqe_splits_skewed_join_partitions(spark):
     finally:
         for k, v in prev.items():
             spark.conf.set(k, v)
+
+
+def test_read_workbook_logs_skipped_sheet(spark, monkeypatch, caplog):
+    """A sheet that fails to read is skipped, never silently: the sheet
+    name and the exception go to the module logger (the reference shows
+    st.error and continues, fianl2.py:219-221). openpyxl is optional, so
+    pandas' Excel entry points are stubbed with in-memory sheets."""
+    import io
+    import logging
+
+    import pandas as pd
+
+    from vat_etl_spark.sources import excel
+
+    good = pd.read_csv(io.StringIO(SHEET_JAN), header=None, dtype=object)
+
+    class FakeBook:
+        sheet_names = ["Jan 2024", "Broken"]
+
+    def fake_read_excel(xls, sheet_name, header, dtype):
+        if sheet_name == "Broken":
+            raise ValueError("corrupt sheet XML")
+        return good
+
+    monkeypatch.setattr(pd, "ExcelFile", lambda path: FakeBook())
+    monkeypatch.setattr(pd, "read_excel", fake_read_excel)
+    with caplog.at_level(logging.ERROR, logger=excel.__name__):
+        out = excel.read_workbook(spark, "book.xlsx")
+    assert out.select("SourceSheet").distinct().collect()[0][0] == "Jan 2024"
+    skipped = [r for r in caplog.records if r.name == excel.__name__]
+    assert len(skipped) == 1
+    assert "Broken" in skipped[0].getMessage()
+    assert "corrupt sheet XML" in caplog.text

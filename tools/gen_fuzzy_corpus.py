@@ -66,8 +66,8 @@ def generate(
     n_files: int = 8,
     gopherable: bool = False,
 ) -> pathlib.Path:
-    """``gopherable=True`` (round 11, for the composed-funnel decade —
-    tools/corpus_decade.py): the default pseudo-word regime fails EVERY
+    """``gopherable=True`` (round 11, for the composed-funnel decade,
+    SCALE.md): the default pseudo-word regime fails EVERY
     Gopher rule (no stopwords, mean word length ~6, lengths 40-250), so
     the full build_corpus funnel zeroes at stage 1 and measures nothing.
     Gopherable mode makes the corpus statistically survivable while

@@ -13,9 +13,9 @@ and record what they changed:
 - buckets over _PHASH_BUCKET_CAP per scale (expected 0 on this corpus —
   the cap's ACTIVE-regime receipt is tools/phash_capstress.py).
 
-Same protocol as tools/multimodal_decade.py (r13): one session, untimed
-50 K warm pass, one timed noop-write per scale, cpu_probe_sec recorded.
-Prints one JSON line; writes artifacts/MULTIMODAL_DECADE_r14.json.
+Protocol: one session, untimed 50 K warm pass, one timed noop-write per
+scale (bench.py's warm runs and pass loop), bench.py's cpu_probe_sec
+recorded. Prints one JSON line; writes artifacts/MULTIMODAL_DECADE_r14.json.
 
 Usage: python tools/multimodal_decade_r14.py [WORK_DIR]
 """
@@ -27,21 +27,10 @@ import math
 import os
 import subprocess
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
-
-
-def _cpu_probe() -> float:
-    """Fixed pure-Python probe (same spirit as bench.py's cpu_probe_sec):
-    ~0.25 s nominal on this host; records drift into the artifact."""
-    t0 = time.time()
-    x = 0
-    for i in range(8_000_000):
-        x += i * i
-    return round(time.time() - t0, 3)
 
 
 def _candidate_stats(spark, sf_dir: str) -> dict:
@@ -106,25 +95,19 @@ def main() -> None:
                 check=True,
             )
 
-    from vat_etl_spark.queries import QUERIES
+    import bench
     from vat_etl_spark.session import get_spark
 
     spark = get_spark("multimodal-decade-r14")
-    QUERIES["multimodal_dedup_phash"](spark, warm_dir).write.format(
-        "noop"
-    ).mode("overwrite").save()
+    key = "multimodal_dedup_phash"
+    bench.warm_keys(spark, [key], warm_dir)
     print("warm pass done", flush=True)
 
-    row: dict = {"cpu_probe_sec": _cpu_probe()}
+    row: dict = {"cpu_probe_sec": bench.cpu_probe(spark)}
     for n, sf in scales:
-        t0 = time.time()
-        QUERIES["multimodal_dedup_phash"](spark, sf).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        row[f"wall_{n}"] = round(time.time() - t0, 1)
-        row[f"verified_pairs_{n}"] = QUERIES["multimodal_dedup_phash"](
-            spark, sf
-        ).count()
+        samples, _ = bench.time_passes(spark, [key], sf, 1)
+        row[f"wall_{n}"] = round(samples[key][0], 1)
+        row[f"verified_pairs_{n}"] = bench.key_plan(spark, key, sf).count()
         for k, v in _candidate_stats(spark, sf).items():
             row[f"{k}_{n}"] = v
         print(

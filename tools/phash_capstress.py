@@ -48,6 +48,7 @@ import pyarrow as pa  # noqa: E402
 import pyarrow.parquet as pq  # noqa: E402
 import pyspark.sql.functions as F  # noqa: E402
 
+import bench  # noqa: E402
 from tools.gen_fuzzy_corpus import generate  # noqa: E402
 
 _N_CLUSTERS = 3
@@ -143,15 +144,7 @@ def main() -> None:
 
     spark = get_spark("phash-capstress")
 
-    def _probe() -> float:
-        t0 = time.time()
-        spark.range(0, 200_000_000, 1, 32).selectExpr(
-            "bit_xor(xxhash64(id)) AS s"
-        ).collect()
-        return round(time.time() - t0, 3)
-
-    _probe()
-    cpu_probe = min(_probe() for _ in range(3))
+    cpu_probe = bench.cpu_probe(spark)
     docs = read_table(spark, corpus, "documents")
     mm = attach_payload(docs)
 

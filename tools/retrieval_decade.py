@@ -2,7 +2,7 @@
 RRF at 500 K -> 5 M docs (verdict-r11 task 6).
 
 Every other query family has 10x receipts; retrieval topped out at
-sf0.1 bench walls. Protocol follows tools/decade_r11.py: the seeded
+sf0.1 bench walls. Protocol follows the SCALE.md decade runs: the seeded
 fuzzy-vocabulary corpus family (realistic Zipf 30 K vocab), one session,
 serial, untimed 50 K warm pass, ONE timed run per (query, scale) with
 both scales timed same-session so the exponent is same-night.

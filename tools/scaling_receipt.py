@@ -26,7 +26,6 @@ import pathlib
 import statistics
 import subprocess
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -54,8 +53,7 @@ def _gen_dataset(data_dir: str) -> None:
     if os.path.exists(marker):
         return
     # gopherable: the default pseudo-word regime fails every Gopher rule,
-    # which would zero the build_corpus funnel at stage 1 (see
-    # tools/corpus_decade.py, which set the same flag)
+    # which would zero the build_corpus funnel at stage 1
     generate(data_dir, N_DOCS, seed=20260818, gopherable=True)
     rng = np.random.default_rng(20260818)
     vecs = rng.standard_normal((N_VEC, 64)).astype(np.float32)
@@ -72,61 +70,15 @@ def _gen_dataset(data_dir: str) -> None:
 def _measure(cpus: int, data_dir: str, out_json: str) -> None:
     os.environ["SPARK_GRAFT_CPUS"] = str(cpus)
     os.environ["VAT_ETL_INDEX_DIR"] = os.path.join(data_dir, "idx")
-    import shutil
-    import tempfile
-
+    import bench
     from vat_etl_spark.session import get_spark
 
     spark = get_spark(f"scaling_receipt_c{cpus}")
-
-    def _probe() -> float:
-        t0 = time.perf_counter()
-        spark.range(0, 400_000_000, 1, 32).selectExpr(
-            "bit_xor(xxhash64(id)) AS s"
-        ).collect()
-        return time.perf_counter() - t0
-
-    _probe()
-    probe = round(statistics.median(_probe() for _ in range(3)), 3)
-
-    from vat_etl_spark.queries import QUERIES
-    from vat_etl_spark.queries.llm_pipeline import build_corpus
-    from vat_etl_spark.queries.similarity import ann_graph_serve
-
-    def run_corpus() -> None:
-        out = tempfile.mkdtemp(prefix="scale_corpus_")
-        try:
-            m = build_corpus(spark, data_dir, f"{out}/corpus")
-            assert m["docs_written"] > 0
-        finally:
-            shutil.rmtree(out, ignore_errors=True)
-
-    def run_serve() -> None:
-        ann_graph_serve(spark, data_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-
-    def run_query(name: str) -> None:
-        QUERIES[name](spark, data_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-
-    runners = {
-        "corpus_build_full": run_corpus,
-        "ann_graph_serve": run_serve,
-        "retrieval_prf_rm3": lambda: run_query("retrieval_prf_rm3"),
-        "pipeline_span_removal": lambda: run_query("pipeline_span_removal"),
-    }
-    samples: dict[str, list[float]] = {k: [] for k in KEYS}
-    for k in KEYS:  # warm pass (index build, codegen, listings) untimed
-        runners[k]()
-    for _ in range(PASSES):
-        for k in KEYS:
-            spark.sparkContext.setJobDescription(f"scaling:{k}:c{cpus}")
-            t0 = time.perf_counter()
-            runners[k]()
-            samples[k].append(time.perf_counter() - t0)
-            spark.sparkContext.setJobDescription(None)
+    probe = bench.cpu_probe(spark)
+    # warm pass (index build, codegen, listings) untimed; every key runs
+    # PASSES times (no corpus-build pass cap)
+    bench.warm_keys(spark, KEYS, data_dir)
+    samples, _ = bench.time_passes(spark, KEYS, data_dir, PASSES, pass_cap={})
     out = {
         "cpus": cpus,
         "probe": probe,

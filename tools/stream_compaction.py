@@ -33,6 +33,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+import bench  # noqa: E402
 from tools.gen_fuzzy_corpus import generate  # noqa: E402
 from vat_etl_spark.session import get_spark  # noqa: E402
 
@@ -52,14 +53,6 @@ def main() -> None:
         generate(delta_dir, 100_000, seed=13, n_files=4, gopherable=True)
     spark = get_spark("stream-compaction")
 
-    def _probe() -> float:
-        t0 = time.perf_counter()
-        spark.range(0, 200_000_000, 1, 32).selectExpr(
-            "bit_xor(xxhash64(id)) AS s"
-        ).collect()
-        return round(time.perf_counter() - t0, 3)
-
-    _probe()
     parts = sorted(
         pathlib.Path(f"{delta_dir}/documents.parquet").glob("part-*.parquet")
     )
@@ -76,7 +69,7 @@ def main() -> None:
         compact = getattr(C, compact_name)
         res = {}
         for variant in ("fragmented", "compacted"):
-            res.setdefault("probes", {})[variant] = _probe()
+            res.setdefault("probes", {})[variant] = bench.cpu_probe(spark)
             out = f"/tmp/stream_tp/cmp_{gate}_{variant}"
             shutil.rmtree(out, ignore_errors=True)
             os.makedirs(out)

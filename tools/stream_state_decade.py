@@ -42,6 +42,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 
+import bench  # noqa: E402
 from tools.gen_fuzzy_corpus import generate  # noqa: E402
 from vat_etl_spark.session import get_spark  # noqa: E402
 
@@ -191,14 +192,6 @@ def main() -> None:
     }
     spark = get_spark("stream-state-decade")
 
-    def probe() -> float:
-        t0 = time.perf_counter()
-        spark.range(0, 200_000_000, 1, 32).selectExpr(
-            "bit_xor(xxhash64(id)) AS s"
-        ).collect()
-        return round(time.perf_counter() - t0, 3)
-
-    probe()
     batch = spark.read.parquet(_corpus(epoch_docs, seed=13)).localCheckpoint()
     scales = {"1x": _corpus(n1, seed=12), "10x": _corpus(10 * n1, seed=12)}
     doc: dict = {"n1": n1, "epoch_docs": epoch_docs, "gates": {}}
@@ -207,7 +200,11 @@ def main() -> None:
         for scale, corpus in scales.items():
             out_dir = f"{_WORK}/out_{gate}_{scale}"
             n_keys = _build_index(spark, gate, corpus, out_dir)
-            leg = {"index_keys": n_keys, "probe": probe(), "walls": []}
+            leg = {
+                "index_keys": n_keys,
+                "probe": bench.cpu_probe(spark),
+                "walls": [],
+            }
             # untimed warm admit (JIT/readahead), then 3 timed epochs —
             # 3×epoch_docs on an n1-key index keeps the index ~fixed-size
             fn(batch, out_dir, 0)

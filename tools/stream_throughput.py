@@ -34,6 +34,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench  # noqa: E402
 from tools.gen_fuzzy_corpus import generate  # noqa: E402
 from vat_etl_spark.session import get_spark  # noqa: E402
 
@@ -137,21 +138,13 @@ def main() -> None:
     src = f"{corpus}/documents.parquet"
     spark = get_spark("stream-throughput")
 
-    # fixed pure-JVM CPU probe (same as bench.py): isolates host state so
-    # cross-round docs/s comparisons can be drift-adjusted
-    def _probe() -> float:
-        t0 = time.perf_counter()
-        spark.range(0, 200_000_000, 1, 32).selectExpr(
-            "bit_xor(xxhash64(id)) AS s"
-        ).collect()
-        return round(time.perf_counter() - t0, 3)
-
-    _probe()
     doc = {
         "n_docs": n_docs,
         "n_epochs": n_epochs,
         "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
-        "cpu_probe_sec": min(_probe() for _ in range(3)),
+        # bench.py's CPU probe: isolates host state so cross-round docs/s
+        # comparisons can be drift-adjusted
+        "cpu_probe_sec": bench.cpu_probe(spark),
         "gates": {},
     }
     for gate in gates:

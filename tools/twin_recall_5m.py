@@ -1,6 +1,6 @@
 """Planted-twin recall of dedup_minhash_banded at 5 M docs — EXACT truth.
 
-The third decade (tools/decade_r11.py, SCALE.md round-11) proved the
+The third decade (SCALE.md round-11) proved the
 hardened banded MinHash *survives* 5 M docs and that its verified-pair
 count scales output-linearly; this measures the claim an all-pairs
 oracle cannot reach at that scale: RECALL against exact planted ground

@@ -18,6 +18,7 @@ production values (13-grams, 50-100k word bounds) are parameters.
 from __future__ import annotations
 
 import heapq
+import logging
 import threading as _threading
 import time as _time
 
@@ -30,6 +31,8 @@ from vat_etl_spark.functions.localrel import local_rows_df
 from vat_etl_spark.queries import QUERIES, query
 from vat_etl_spark.queries.text import STOPWORDS, tokens_expr
 from vat_etl_spark.sources.catalog import read_table as _t
+
+_LOG = logging.getLogger(__name__)
 
 _NTOK_SQL = r"len(regexp_split_to_array(trim(text), '\s+'))"
 
@@ -841,9 +844,7 @@ def build_corpus(
                 )
                 if cond != "PATH_NOT_FOUND":
                     raise
-                import logging
-
-                logging.getLogger(__name__).warning(
+                _LOG.warning(
                     "incremental build_corpus: base %s has no "
                     "neardup_sig_index (built with a --stages subset?) — "
                     "chaining WITHOUT base near-dup signatures; new docs "
@@ -893,6 +894,7 @@ def build_corpus(
     # and their eager checkpoint blocks. ADVICE-r14: the error path must
     # also JOIN in-flight background writes (not abandon them mid-write
     # mutating out_dir after the build raised) and surface their errors.
+    built = False
     try:
         prefetch: dict[str, object] = {}
         if "perplexity" in stages:
@@ -1140,6 +1142,7 @@ def build_corpus(
         stage_walls["meta_writes"] = meta_fut.result()
         # checkpointed stage blocks are freed by the ContextCleaner once the
         # local references drop at return
+        built = True
         return {
             "docs_written": m["docs_written"],
             "splits": splits,
@@ -1152,25 +1155,34 @@ def build_corpus(
             "stage_walls": stage_walls,
         }
     finally:
-        # Join this build's background work before returning/raising:
-        # cancel() drops queued futures; in-flight ones are WAITED on so
-        # build failure leaves out_dir quiescent (no background write
-        # still mutating it), and their own failures are surfaced — as a
-        # logged secondary on the error path, since the primary exception
-        # is already propagating (ADVICE-r14). On the success path every
-        # future was already consumed, so the joins return instantly.
-        for f in futs:
-            if f.cancel():
-                continue
-            try:
-                f.result()
-            except Exception:
-                import logging
+        _join_background(futs, surface=built)
 
-                logging.getLogger(__name__).warning(
+
+def _join_background(futs: list, surface: bool) -> None:
+    """Join a build's background work before it returns or raises:
+    cancel() drops queued futures; in-flight ones are WAITED on so a
+    failed build leaves out_dir quiescent (no background write still
+    mutating it). Their own failures are surfaced: with ``surface`` (no
+    primary exception propagating) the first one is re-raised, so a
+    build never reports success over a failed write (ADVICE r15); on the
+    error path they are logged as secondaries, since the primary
+    exception is already propagating (ADVICE-r14)."""
+    first = None
+    for f in futs:
+        if f.cancel():
+            continue
+        try:
+            f.result()
+        except Exception as e:
+            if surface and first is None:
+                first = e
+            else:
+                _LOG.warning(
                     "build_corpus: background job failed during cleanup",
                     exc_info=True,
                 )
+    if first is not None:
+        raise first
 
 
 # --- no-split greedy packing (capacity-reset recurrence) ----------------------

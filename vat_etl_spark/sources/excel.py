@@ -20,6 +20,7 @@ source-agnostic and fully tested against in-memory frames.
 
 from __future__ import annotations
 
+import logging
 from typing import Iterable
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -30,6 +31,8 @@ from vat_etl_spark.functions.dates import parse_date_compat
 from vat_etl_spark.functions.headers import canonical_rename, detect_header_row
 from vat_etl_spark.functions.months import extract_month_from_name
 from vat_etl_spark.schemas import VAT_REQUIRED_COLUMNS
+
+_LOG = logging.getLogger(__name__)
 
 MONEY_COLUMNS = ["Supply/Purchase Value", "VAT Value", "Invoice Value"]
 
@@ -117,7 +120,8 @@ def read_workbook(
 ) -> DataFrame:
     """Workbook → one normalized union DataFrame (the reference's
     per-sheet loop + ``pd.concat``, fianl2.py:216-227). Per-sheet errors are
-    isolated (skip + continue), matching fianl2.py:219-221."""
+    isolated (logged with the sheet name, then skip + continue), matching
+    the reference's ``st.error`` + continue at fianl2.py:219-221."""
     try:
         import pandas as pd
     except ImportError as e:  # pragma: no cover
@@ -156,6 +160,7 @@ def read_workbook(
                 normalize_vat_sheet(sdf, sheet, compat=compat, as_of_year=as_of_year)
             )
         except Exception:
+            _LOG.error("skipping sheet %r of %s", sheet, path, exc_info=True)
             continue
     if not frames:
         raise ValueError("No valid sheets processed.")
