@@ -57,8 +57,9 @@ def _corpus(n: int, seed: int) -> str:
 
 
 def _lines(df):
-    """The production pseudo-line split (mirrors admit_lines_batch's
-    projection; W from the registered query): (doc_id, line_idx, line)."""
+    """The production pseudo-line split (mirrors llm_pipeline's
+    line_dedup_plan; W from the registered query): (doc_id, line_idx,
+    line)."""
     from vat_etl_spark.queries.llm_pipeline import _LINE_W as w
 
     toked = df.select("doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("t"))

@@ -22,46 +22,30 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def _normalize_csv(spark: SparkSession, path: str, *, compat: bool, as_of_year: int | None) -> DataFrame:
-    """CSV → normalized VAT transactions. The file stem plays the sheet-name
-    role (it carries the reporting month, as sheet names do in the
-    reference's workbooks)."""
-    from vat_etl_spark.functions.headers import canonical_rename
-    from vat_etl_spark.sources.excel import normalize_vat_sheet
-
-    raw = spark.read.option("header", "true").csv(path)  # all-string columns
-    renamed = raw.toDF(*canonical_rename(raw.columns))
-    stem = os.path.splitext(os.path.basename(path))[0]
-    return normalize_vat_sheet(renamed, stem, compat=compat, as_of_year=as_of_year)
-
-
-def _normalize_parquet(spark: SparkSession, path: str, *, compat: bool, as_of_year: int | None) -> DataFrame:
-    from vat_etl_spark.functions.headers import canonical_rename
-    from vat_etl_spark.sources.excel import normalize_vat_sheet
-
-    raw = spark.read.parquet(path)
-    raw = raw.select([F.col(c).cast("string").alias(c) for c in raw.columns])
-    renamed = raw.toDF(*canonical_rename(raw.columns))
-    stem = os.path.splitext(os.path.basename(path.rstrip("/")))[0]
-    return normalize_vat_sheet(renamed, stem, compat=compat, as_of_year=as_of_year)
-
-
 def load_transactions(
     spark: SparkSession, path: str, *, compat: bool = True, as_of_year: int | None = None
 ) -> DataFrame:
     """Dispatch on input format (the reference's S4 gate, widened beyond
     xlsx). xlsx goes through the driver-side workbook bridge; csv/parquet
-    are read distributed."""
+    are read distributed as all-string columns, the sheet normalizer's
+    input, and the file stem plays the sheet-name role (it carries the
+    reporting month, as sheet names do in the reference's workbooks)."""
+    from vat_etl_spark.functions.headers import canonical_rename
+    from vat_etl_spark.sources.excel import normalize_vat_sheet, read_workbook
+
     ext = os.path.splitext(path)[1].lower()
     if ext == ".xlsx":
-        from vat_etl_spark.sources.excel import read_workbook
-
         return read_workbook(spark, path, compat=compat, as_of_year=as_of_year)
     if ext == ".csv":
-        return _normalize_csv(spark, path, compat=compat, as_of_year=as_of_year)
-    if ext in (".parquet", ""):
-        return _normalize_parquet(spark, path, compat=compat, as_of_year=as_of_year)
-    raise ValueError(f"unsupported input format {ext!r} (xlsx, csv, parquet)")
+        raw = spark.read.option("header", "true").csv(path)
+    elif ext in (".parquet", ""):
+        raw = spark.read.parquet(path)
+        raw = raw.select([F.col(c).cast("string").alias(c) for c in raw.columns])
+    else:
+        raise ValueError(f"unsupported input format {ext!r} (xlsx, csv, parquet)")
+    renamed = raw.toDF(*canonical_rename(raw.columns))
+    stem = os.path.splitext(os.path.basename(path.rstrip("/")))[0]
+    return normalize_vat_sheet(renamed, stem, compat=compat, as_of_year=as_of_year)
 
 
 def run_summary(args: argparse.Namespace, spark: SparkSession | None = None) -> DataFrame:

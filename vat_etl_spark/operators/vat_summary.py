@@ -42,19 +42,6 @@ BOX_DESCRIPTIONS: dict[str, str] = {
 }
 
 
-def box_pred_compat(box_col: Column, letter: str) -> Column:
-    """Compat box selector: substring containment over the stringified,
-    upper-cased box value, with NULL → "NAN" (quirks Q1+Q2: a NULL box
-    contains "A"; "BOX C" matches B and C)."""
-    s = F.upper(F.trim(F.coalesce(box_col.cast("string"), F.lit("nan"))))
-    return s.contains(F.lit(letter))
-
-
-def box_pred_sane(box_col: Column, letter: str) -> Column:
-    """Sane box selector: exact standalone-letter match."""
-    return F.regexp_extract(F.upper(F.trim(box_col.cast("string"))), r"\b([A-D])\b", 1) == letter
-
-
 def vat_box_summary(
     df: DataFrame,
     *,

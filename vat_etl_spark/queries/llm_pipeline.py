@@ -25,12 +25,11 @@ import time as _time
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
-from pyspark.errors import AnalysisException
 
 from vat_etl_spark.functions.localrel import local_rows_df
 from vat_etl_spark.queries import QUERIES, query
 from vat_etl_spark.queries.text import STOPWORDS, tokens_expr
-from vat_etl_spark.sources.catalog import read_table as _t
+from vat_etl_spark.sources.catalog import read_index, read_table as _t
 
 _LOG = logging.getLogger(__name__)
 
@@ -752,6 +751,9 @@ CORPUS_STAGES = (
     "neardup",       # SimHash banded keep-first near-dup admission
 )
 
+# build_corpus's persisted near-dup state: the admitted docs' SimHashes
+_NEARDUP_SIG_INDEX = "simhash long"
+
 
 def build_corpus(
     spark: SparkSession,
@@ -822,28 +824,15 @@ def build_corpus(
         # a base built with a --stages subset excluding 'neardup' never
         # wrote a sig index — chain without one (there are no base
         # signatures to gate against) instead of failing the read.
-        # Round-10 ADVICE: probe by TRY-READ, not os.path.isdir — the
-        # isdir probe is local-FS-only and on an object store would
-        # silently skip base near-dup gating (admitting near-duplicates
-        # of the base corpus); a read attempt works on any Hadoop FS.
-        # Round-11 ADVICE: downgrade ONLY the missing-path condition.
-        # A present-but-unreadable index (corrupt files, empty dir /
-        # UNABLE_TO_INFER_SCHEMA, permission analysis errors) must fail
-        # loudly — swallowing it would silently disable base near-dup
-        # gating, the exact failure mode the try-read probe exists to
-        # close.
-        sig_path = os.path.join(base_dir, "neardup_sig_index")
+        # read_index's try-read rule: only a missing path means "no
+        # index"; a present but unreadable or empty one raises, since
+        # swallowing it would silently disable base near-dup gating.
         if "neardup" in stages:
-            try:
-                base_sigs = spark.read.parquet(sig_path)
-            except AnalysisException as e:
-                cond = (
-                    e.getCondition()
-                    if hasattr(e, "getCondition")
-                    else e.getErrorClass()
-                )
-                if cond != "PATH_NOT_FOUND":
-                    raise
+            base_sigs = read_index(
+                spark, os.path.join(base_dir, "neardup_sig_index"),
+                _NEARDUP_SIG_INDEX,
+            )
+            if base_sigs is None:
                 _LOG.warning(
                     "incremental build_corpus: base %s has no "
                     "neardup_sig_index (built with a --stages subset?) — "
@@ -975,7 +964,7 @@ def build_corpus(
             stage_walls["exact_dedup_prefetch"] = bg
             cur = _stage(cur.join(keep, "doc_id"), "exact_dedup")
         if "line_dedup" in stages:
-            cleaned = line_dedup_plan(cur).select(
+            cleaned = reassemble_lines(line_dedup_plan(cur)).select(
                 "doc_id", F.col("cleaned_text").alias("text")
             )
             cur = _stage(
@@ -1566,22 +1555,30 @@ def pipeline_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Survivorship needs NO window: the first occurrence of a line is
     ``min(doc_id·10^6 + line_idx)`` — one composite-int64 MIN per
-    distinct line (map-side partial agg), then one co-partitioned join
+    distinct line, keyed on its 128-bit hash pair (map-side partial
+    agg), then one co-partitioned join
     back to the occurrence stream tags keepers (headroom: docs to 10^7
     tokens, doc_ids to 9·10^12). Reassembly is a doc-grain aggregate
     (sorted collect of a doc's kept lines — state bounded by ONE
     document). Plan at 100 TB: two shuffles (line index, doc regroup),
     both key-partitioned, no broadcast of anything corpus-derived."""
-    return line_dedup_plan(_t(spark, sf_dir, "documents"))
+    return reassemble_lines(line_dedup_plan(_t(spark, sf_dir, "documents")))
 
 
-def line_dedup_plan(d: DataFrame) -> DataFrame:
-    """The C4 line-dedup plan over an arbitrary docs frame (needs
-    ``doc_id``, ``text``) — the shared core of :func:`pipeline_line_dedup`
-    and the ``build_corpus`` funnel stage (keep-first survivorship is
-    global over whatever corpus is passed in, so the funnel runs it on
-    the docs that survived the upstream filters). One row per input doc
-    with ``cleaned_text``."""
+def line_dedup_plan(d: DataFrame, seen: DataFrame | None = None) -> DataFrame:
+    """The C4 line-occurrence plan over an arbitrary docs frame (needs
+    ``doc_id``, ``text``) — the one core of :func:`pipeline_line_dedup`,
+    the ``build_corpus`` funnel stage and the streaming line gate
+    (streaming/corpus.py ``admit_lines_batch``). One row per pseudo-line
+    occurrence: ``doc_id, line_idx, line, lk, lk2, kept``.
+
+    Lines are keyed on a 128-bit pair of independent xxhash64s
+    (``lk, lk2``; collision bound at streaming/corpus.py
+    ``_LINE_IDX_BUCKETS``), so the survivor election and the join back
+    shuffle 16-byte keys instead of line text. Keep-first is global over
+    whatever corpus is passed in (the funnel runs it on the docs that
+    survived the upstream filters); ``seen`` — already-admitted
+    ``(lk, lk2)`` keys — removes every occurrence of a line it holds."""
     w = _LINE_W
     toked = d.select("doc_id", tokens_expr(F.col("text")).alias("t"))
     lines = toked.select(
@@ -1592,15 +1589,31 @@ def line_dedup_plan(d: DataFrame) -> DataFrame:
                 f" i -> concat_ws(' ', slice(t, (i - 1) * {w} + 1, {w})))"
             )
         ).alias("i0", "line"),
-    ).select("doc_id", (F.col("i0") + 1).alias("line_idx"), "line")
-    surv = lines.groupBy("line").agg(
+    ).select(
+        "doc_id",
+        (F.col("i0") + 1).alias("line_idx"),
+        "line",
+        F.xxhash64("line").alias("lk"),
+        F.xxhash64(F.lit(-1), F.col("line")).alias("lk2"),
+    )
+    fresh = lines
+    if seen is not None:
+        fresh = lines.join(seen.select("lk", "lk2"), ["lk", "lk2"], "left_anti")
+    surv = fresh.groupBy("lk", "lk2").agg(
         F.min(F.col("doc_id") * 1_000_000 + F.col("line_idx")).alias("keep_key")
     )
-    occ = lines.join(surv, "line").select(
-        "doc_id", "line_idx", "line",
+    # left join: a line in `seen` has no survivor, so its kept is NULL
+    return lines.join(surv, ["lk", "lk2"], "left").select(
+        "doc_id", "line_idx", "line", "lk", "lk2",
         (F.col("doc_id") * 1_000_000 + F.col("line_idx") == F.col("keep_key"))
         .alias("kept"),
     )
+
+
+def reassemble_lines(occ: DataFrame) -> DataFrame:
+    """Doc-grain reassembly of a :func:`line_dedup_plan` frame: one row
+    per doc with ``n_lines``, ``n_removed`` and ``cleaned_text`` (its kept
+    lines in line order)."""
     kept_struct = F.when(F.col("kept"), F.struct("line_idx", "line"))
     return occ.groupBy("doc_id").agg(
         F.count("*").alias("n_lines"),
@@ -1743,7 +1756,8 @@ def corpus_admit_plan(
     function per micro-batch, so the registered batch twin's driver row
     is direct evidence for the streaming path's admit semantics (the
     stream adds only the index read and the idempotent per-epoch write
-    around it)."""
+    around it). ``existing_keys`` needs a ``content_key`` column; its
+    other columns and duplicate keys are ignored."""
     keyed = batch.withColumn(
         "content_key",
         F.concat_ws(" ", F.slice(tokens_expr(F.col("text")), 1, 2)),
@@ -1752,7 +1766,10 @@ def corpus_admit_plan(
         "doc_id",
     )
     if existing_keys is not None:
-        keyed = keyed.join(existing_keys, "content_key", "left_anti")
+        keyed = keyed.join(
+            existing_keys.select("content_key").distinct(), "content_key",
+            "left_anti",
+        )
     w = W.partitionBy("content_key").orderBy("doc_id")
     return (
         keyed.withColumn("rn", F.row_number().over(w))

@@ -8,9 +8,30 @@ hatches, UTC session timezone so date semantics are deterministic.
 
 from __future__ import annotations
 
+import functools
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+_LOG = logging.getLogger(__name__)
+
+
+@functools.cache
+def _sizing(cpus_env: str | None, heap_env: str | None) -> tuple[int, str]:
+    """(cores, driver heap) for ``local[N]``, logged once per setting: one
+    core per CPU this process may run on (``os.cpu_count`` ignores CPU
+    affinity, so a pinned or containerized process would oversubscribe)
+    and half of physical memory (MemTotal), 1-16 GB, as heap — a fixed
+    16g default is larger than a 15 GB host. ``SPARK_GRAFT_CPUS`` /
+    ``SPARK_GRAFT_DRIVER_MEM`` override either."""
+    cpus = int(cpus_env or len(os.sched_getaffinity(0)))
+    heap = heap_env
+    if heap is None:
+        mem_gb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 30
+        heap = f"{max(1, min(16, mem_gb // 2))}g"
+    _LOG.info("spark session sizing: local[%d], driver heap %s", cpus, heap)
+    return cpus, heap
 
 
 def get_spark(
@@ -24,7 +45,9 @@ def get_spark(
     cluster you would size this to ~2-3x total executor cores or simply
     rely on AQE coalescing (enabled here) to shrink the default.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    cpus, heap = _sizing(
+        os.environ.get("SPARK_GRAFT_CPUS"), os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    )
     if shuffle_partitions is None:
         shuffle_partitions = cpus
     builder = (
@@ -43,7 +66,7 @@ def get_spark(
         # With fallback disabled, an Arrow-incompatible type raises inside
         # local_rows_df's try and takes ITS logged fallback path instead.
         .config("spark.sql.execution.arrow.pyspark.fallback.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
     )

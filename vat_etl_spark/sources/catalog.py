@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from vat_etl_spark.schemas import TESTDATA_TABLES
@@ -87,6 +88,44 @@ def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     for name, df in tables.items():
         df.createOrReplaceTempView(name)
     return tables
+
+
+def read_index(spark: SparkSession, idx_path: str, schema) -> DataFrame | None:
+    """Read a persisted dedup index (the corpus gates' key, line and
+    signature indexes, and ``build_corpus``'s ``neardup_sig_index``) with
+    its declared ``schema``. Returns None when ``idx_path`` does not exist
+    yet — the only failure read as "no index".
+
+    The probe is a TRY-READ, not a local-filesystem existence check: a
+    ``pathlib``/``os.path`` probe reads "absent" for every Hadoop URI
+    (``file://``, ``s3a://``, ``hdfs://``), which silently turns off
+    dedup against history. Only ``PATH_NOT_FOUND`` is downgraded; a
+    present but unreadable index raises, and so does an index directory
+    with no data files (with an explicit schema Spark would read it as an
+    empty index and admit every duplicate of the history it lost).
+
+    The explicit schema replaces per-batch schema inference and merging
+    (merging re-read every footer per batch: +9 s measured on a 20-epoch
+    line index): a file written before a column existed reads it as
+    NULL, and the ``epoch`` partition column is still discovered from the
+    directory names under ``idx_path``. ``ignoreMissingFiles``: a
+    directory the compactor purges under a running scan (its keys already
+    live in a consolidated partition this listing also sees) must not
+    fail it."""
+    try:
+        idx = (
+            spark.read.schema(schema)
+            .option("basePath", idx_path)
+            .option("ignoreMissingFiles", "true")
+            .parquet(idx_path)
+        )
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return None
+    if not idx.inputFiles():
+        raise ValueError(f"index {idx_path} exists but holds no data files")
+    return idx
 
 
 def read_csv(spark: SparkSession, path: str, schema=None, header: bool = True) -> DataFrame:

@@ -1,23 +1,51 @@
-"""Continuous corpus ingest: quality gate + incremental dedup as a
-Structured Streaming ``foreachBatch`` job with a PERSISTENT content-key
-index — the production path for building a training corpus from a feed
-that never stops.
+"""Continuous corpus admission: three Structured Streaming gates over a
+feed that never stops, each deduplicating arriving documents against a
+PERSISTENT index of everything it admitted before.
 
-Per micro-batch: score arriving documents with the shared batch/stream
-quality gate (queries/llm_pipeline.py:quality_flags), dedup them against
-the accumulated key index (left-anti join — historical documents are
-touched ONLY as their compact key index, same delta discipline as
-``pipeline_incremental_dedup``) and within the batch itself (rank-1 per
-key), then write the admitted docs and their keys under per-epoch directories.
-``foreachBatch`` is at-least-once — a failed-then-replayed epoch would
-double-APPEND — so each epoch OVERWRITES its own ``epoch=N`` partition
-directory: replaying epoch N reproduces the same deterministic admit and
-clobbers its own previous partial output, which upgrades the pipeline to
-effectively exactly-once (the standard idempotent-foreachBatch recipe).
+- :func:`admit_batch` — exact gate: shared batch/stream quality gate
+  (queries/llm_pipeline.py:quality_flags), then content-key dedup
+  (``corpus_admit_plan``, the plan of the ``corpus_ingest_admit_twin``
+  oracle query) against ``key_index``.
+- :func:`admit_lines_batch` — C4 line gate: every document sheds the
+  lines the corpus already holds (``line_dedup_plan``, the plan of
+  ``pipeline_line_dedup``) against ``line_index``.
+- :func:`admit_neardup_batch` — SimHash near-dup gate
+  (``neardup_admit_plan``, the plan of ``corpus_neardup_admit_twin``)
+  against ``simhash_index``.
 
-At 100 TB the index is a bucketed table on the 16-byte fingerprint and the
-anti-join co-locates on the bucket key; here the content key is the 2-token
-prefix (this corpus has no exact duplicates — see
+Historical documents are touched ONLY as their compact index (the delta
+discipline of ``pipeline_incremental_dedup``). Every gate runs one
+protocol per micro-batch (:func:`_run_gate`):
+
+1. **History**: read the index with its declared schema
+   (``sources.catalog.read_index``: a missing index means "no history
+   yet", anything else unreadable raises) and drop the rows this epoch
+   wrote itself — on the ``src_epoch`` DATA column, coalesced with the
+   ``epoch`` partition for files written before that column existed.
+   Compaction may have folded the epoch's rows into a consolidated
+   partition, and a replay must still exclude them or it would block
+   itself and clobber its output with an empty admit.
+2. **Admit**: a pure lazy plan shared with a registered batch twin, so
+   the twin's oracle row is direct evidence for the stream's semantics.
+3. **Snapshot**: one eager ``localCheckpoint``; both writes below read
+   it, so the index records exactly what the docs output admitted
+   (without it each write re-executes the admit, and the second would
+   see the index rows the first just wrote).
+4. **Write**: the docs and the new index rows each OVERWRITE their own
+   ``epoch=N`` directory. ``foreachBatch`` is at-least-once — a
+   replayed epoch would double-APPEND — but a replay of epoch N is the
+   same deterministic admit and clobbers its own partial output, which
+   makes the pipeline effectively exactly-once (the idempotent
+   ``foreachBatch`` recipe).
+
+:func:`_drain` wires a gate into a file-source stream (one file per
+trigger, ``availableNow``-drainable, checkpointed under the output
+directory). ``compact_*_index`` fold an index's epochs under a grace
+protocol that is safe while the stream runs (:func:`compact_key_index`).
+
+At 100 TB the indexes are bucketed tables on their join key and the
+per-batch anti-join co-locates on the bucket; here the content key is
+the 2-token prefix (this corpus has no exact duplicates — see
 pipeline_cross_source_dedup)."""
 
 from __future__ import annotations
@@ -27,84 +55,73 @@ import pathlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from vat_etl_spark.queries.llm_pipeline import corpus_admit_plan
+from vat_etl_spark.queries.llm_pipeline import (
+    corpus_admit_plan,
+    line_dedup_plan,
+    reassemble_lines,
+)
+from vat_etl_spark.sources.catalog import read_index
 
 
-def admit_batch(batch: DataFrame, out_dir: str, epoch_id: int) -> None:
-    """Deterministic per-micro-batch admit step (also directly unit-testable
-    without a stream): quality gate → anti-join vs persisted index →
-    in-batch rank-1 per key → idempotent per-epoch write (overwrite of
-    this epoch's own partition, so a replay cannot double-admit). The
-    selection itself is `corpus_admit_plan` — the same function the
-    driver-verified `corpus_ingest_admit_twin` oracle query runs."""
-    spark = batch.sparkSession
-    idx_path = f"{out_dir}/key_index"
-    existing = None
-    if pathlib.Path(idx_path).exists():
-        # exclude THIS epoch's own prior (partial/replayed) index rows from
-        # the dedup reference or a replay would block itself
-        # ignoreMissingFiles: a purged-under-us superseded directory (its
-        # keys are guaranteed present in a consolidated partition this
-        # listing also sees — compact_key_index's grace protocol) must not
-        # fail the scan. The exclusion filters on the src_epoch DATA
-        # column, not the partition directory: compaction may have folded
-        # this epoch's keys into a consolidated partition, and a replay
-        # must still be able to exclude its own keys or it would block
-        # itself and clobber its output with an empty admit.
-        # mergeSchema: in a mixed pre/post-migration layout, schema
-        # inference sampling a legacy (content_key-only) file would
-        # silently drop the src_epoch DATA column and a replayed folded
-        # epoch could fail to exclude its own keys (round-6 ADVICE)
-        idx = (
-            spark.read.option("basePath", idx_path)
-            .option("ignoreMissingFiles", "true")
-            .option("mergeSchema", "true")
-            .parquet(idx_path)
+def _run_gate(
+    batch: DataFrame, out_dir: str, epoch_id: int, index: str, schema: str,
+    plan, docs, keys,
+) -> None:
+    """Protocol steps 1-4 for one micro-batch: ``plan(batch, history)``
+    is the admit, ``docs(snapshot)`` the docs output and
+    ``keys(snapshot, src_epoch)`` the new index rows."""
+    idx_path = f"{out_dir}/{index}"
+    history = read_index(batch.sparkSession, idx_path, schema)
+    if history is not None:
+        history = history.filter(
+            F.coalesce(F.col("src_epoch"), F.col("epoch")) != epoch_id
         )
-        if "src_epoch" not in idx.columns:
-            # index written before the provenance column existed: the
-            # partition directory IS the provenance (nothing was compacted
-            # by the old code path after this code runs, so epoch == src)
-            idx = idx.withColumn("src_epoch", F.col("epoch"))
-        else:
-            idx = idx.withColumn(
-                "src_epoch", F.coalesce(F.col("src_epoch"), F.col("epoch"))
-            )
-        existing = (
-            idx.filter(F.col("src_epoch") != epoch_id)
-            .select("content_key")
-            .distinct()
-        )
-    admitted = corpus_admit_plan(batch, existing)
-    # stable snapshot: both writes below re-execute `admitted`, and the
-    # second must not observe rows the first just wrote
-    admitted = admitted.localCheckpoint(eager=True)
-    admitted.write.mode("overwrite").parquet(f"{out_dir}/docs/epoch={epoch_id}")
-    admitted.select(
-        "content_key", F.lit(epoch_id).alias("src_epoch")
-    ).write.mode("overwrite").parquet(f"{idx_path}/epoch={epoch_id}")
+    snap = plan(batch, history).localCheckpoint(eager=True)
+    docs(snap).write.mode("overwrite").parquet(f"{out_dir}/docs/epoch={epoch_id}")
+    keys(snap, F.lit(epoch_id).alias("src_epoch")).write.mode(
+        "overwrite"
+    ).parquet(f"{idx_path}/epoch={epoch_id}")
 
 
-def corpus_ingest_stream(
-    spark: SparkSession, src_dir: str, out_dir: str, schema=None
-):
-    """Wire :func:`admit_batch` into a file-source stream. Returns the
-    started query; drain with ``availableNow`` triggers in tests."""
+def _drain(spark: SparkSession, src_dir: str, out_dir: str, schema, admit):
+    """Wire ``admit(batch, out_dir, epoch_id)`` into a file-source stream
+    and start it; drain with ``awaitTermination``."""
     if schema is None:
         schema = spark.read.parquet(src_dir).schema
-    stream = (
+    return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(
-            lambda df, epoch_id: admit_batch(df, out_dir, epoch_id)
+        .writeStream.foreachBatch(
+            lambda df, epoch_id: admit(df, out_dir, epoch_id)
         )
         .option("checkpointLocation", f"{out_dir}/_checkpoint")
         .trigger(availableNow=True)
         .start()
     )
+
+
+# key index: one row per admitted content key
+_KEY_INDEX = "content_key string, src_epoch int"
+
+
+def admit_batch(batch: DataFrame, out_dir: str, epoch_id: int) -> None:
+    """Exact gate for one micro-batch (also unit-testable without a
+    stream): quality gate → anti-join vs the key index → in-batch rank-1
+    per content key, written under the gate protocol."""
+    _run_gate(
+        batch, out_dir, epoch_id, "key_index", _KEY_INDEX, corpus_admit_plan,
+        docs=lambda admitted: admitted,
+        keys=lambda admitted, src: admitted.select("content_key", src),
+    )
+
+
+def corpus_ingest_stream(
+    spark: SparkSession, src_dir: str, out_dir: str, schema=None
+):
+    """Drain ``src_dir`` through :func:`admit_batch`; returns the started
+    query."""
+    return _drain(spark, src_dir, out_dir, schema, admit_batch)
 
 
 _SUPERSEDED_MARKER = "_SUPERSEDED"
@@ -129,6 +146,7 @@ _SUPERSEDED_MARKER = "_SUPERSEDED"
 # explosion at 20 epochs (the compactor folds epochs, so steady-state
 # file count is ~bucket count, not epochs × buckets).
 _LINE_IDX_BUCKETS = 16
+_LINE_INDEX = "lk long, lk2 long, bucket long, src_epoch int"
 
 
 def compact_key_index(
@@ -151,7 +169,7 @@ def compact_key_index(
        listed the index since then depends on them, and admit_batch reads
        with ``ignoreMissingFiles`` as the belt-and-braces.
     2. **Snapshot**: list the epoch directories ONCE and fold exactly
-       those explicit paths — an epoch the stream writes mid-compaction is
+       those epochs — an epoch the stream writes mid-compaction is
        neither folded nor touched, just left for the next cycle.
     3. **Publish then mark**: the consolidated partition is renamed INTO
        the index first (rename-first crash safety: a crash at any point
@@ -160,7 +178,7 @@ def compact_key_index(
        then only MARKED superseded, never removed in the same cycle.
 
     Returns the distinct key count of the consolidated partition."""
-    return _compact_index(spark, f"{out_dir}/key_index", "content_key",
+    return _compact_index(spark, f"{out_dir}/key_index", _KEY_INDEX,
                           grace_seconds)
 
 
@@ -173,21 +191,19 @@ def compact_line_index(
     line keys and preserving the hash-bucket partition layout.
     src_epoch provenance survives the fold so a replay of a folded epoch
     still excludes its own lines (see :func:`admit_lines_batch`). A
-    pre-r13 raw-line index is a different layout — rebuild it (the
-    select on lk/lk2 fails loudly on legacy partitions)."""
-    return _compact_index(spark, f"{out_dir}/line_index", ["lk", "lk2"],
+    raw-line-text index (the layout before hashed keys) must be rebuilt:
+    under the declared schema its keys read as NULL and match nothing."""
+    return _compact_index(spark, f"{out_dir}/line_index", _LINE_INDEX,
                           grace_seconds, partition_col="bucket")
 
 
 def _compact_index(
     spark: SparkSession,
     idx_path: str,
-    key_cols: str | list[str],
+    schema: str,
     grace_seconds: float,
     partition_col: str | None = None,
 ) -> int:
-    if isinstance(key_cols, str):
-        key_cols = [key_cols]
     import shutil
     import time
 
@@ -223,27 +239,17 @@ def _compact_index(
     # admit's scan until the next purge (measured: the 2.6 M-key line
     # index read 5.2 M rows per batch after a fold+refold sequence).
     # Purge-only cycles are exactly what the grace protocol wants here.
-    if len(snapshot) == 1 and int(snapshot[0].name.split("=", 1)[1]) < 0:
+    folded = [int(p.name.split("=", 1)[1]) for p in snapshot]
+    if len(folded) == 1 and folded[0] < 0:
         return 0
     # src_epoch provenance survives consolidation so a late replay of a
-    # folded epoch can still exclude its own keys (see admit_batch).
-    # Pre-migration partitions carry no src_epoch column; their directory
-    # name IS the provenance (explicit-path reads lose the partition
-    # column, so it is re-derived per path).
-    frames = []
-    cols = key_cols + ([partition_col] if partition_col else [])
-    for p in snapshot:
-        df = spark.read.parquet(str(p))
-        if "src_epoch" not in df.columns:
-            src = int(p.name.split("=", 1)[1])
-            df = df.select(*cols, F.lit(src).alias("src_epoch"))
-        else:
-            df = df.select(*cols, "src_epoch")
-        frames.append(df)
-    keys = frames[0]
-    for df in frames[1:]:
-        keys = keys.unionByName(df)
-    keys = keys.distinct()
+    # folded epoch can still exclude its own keys (protocol step 1); a
+    # file written before the column existed takes its directory's epoch
+    idx = read_index(spark, idx_path, schema).filter(F.col("epoch").isin(folded))
+    cols = [c for c in idx.columns if c not in ("src_epoch", "epoch")]
+    keys = idx.select(
+        *cols, F.coalesce(F.col("src_epoch"), F.col("epoch")).alias("src_epoch")
+    ).distinct()
     staging = f"{idx_path}_compacting"
     # Size the consolidated partition to the data (round-12 measured
     # finding, artifacts/STREAM_COMPACTION_r12.json): the old
@@ -263,7 +269,9 @@ def _compact_index(
         # sized to the data — max(n_files, buckets) output files
         keys = keys.repartition(
             max(n_files, _LINE_IDX_BUCKETS), F.col(partition_col)
-        ).sortWithinPartitions(partition_col, *key_cols)
+        ).sortWithinPartitions(
+            partition_col, *(c for c in cols if c != partition_col)
+        )
     else:
         keys = keys.repartition(n_files)
     keys.write.mode("overwrite").parquet(staging)
@@ -290,153 +298,59 @@ def admit_lines_batch(batch: DataFrame, out_dir: str, epoch_id: int) -> None:
     that never stops: every arriving document sheds any line the corpus
     has already admitted, keeps its own first copy of lines that repeat
     WITHIN the micro-batch, and the surviving lines join the persistent
-    line index for all future epochs.
-
-    Same exactly-once recipe as :func:`admit_batch`: the admit is a
-    deterministic function of (batch, index-minus-own-epoch), and both
-    outputs overwrite their own ``epoch=N`` partition — a replayed epoch
-    excludes its own prior index rows (or its lines would remove
-    themselves) and clobbers its own partial output. Equivalence to the
+    line index for all future epochs. The snapshot is the batch's
+    ``line_dedup_plan``; the docs output is its ``reassemble_lines``,
+    the same two steps ``pipeline_line_dedup`` runs. Equivalence to the
     batch query: when epochs arrive in ascending doc_id order, the
     streamed keep-first survivor equals pipeline_line_dedup's global
     ``min(doc_id·10^6 + line_idx)`` — pinned in tests/test_streaming.py.
 
-    Index layout (round 13 — the 100 TB gap the r12 verdict named): the
-    persistent index stores 128-bit HASHED line keys (lk, lk2; collision
-    bound at _LINE_IDX_BUCKETS) in hash-bucket partitions, never raw
-    line text — the per-batch anti-join and the within-batch survivor
-    election both shuffle 16-byte keys instead of strings, and the
-    index-side ``distinct`` the r12 spelling paid per batch is gone
-    outright (admitted keys are globally unique by construction: a line
-    is KEPT in exactly one epoch, and replays overwrite their own
-    partition). Fold old epochs with :func:`compact_line_index` (the key
-    index's grace protocol, shared via ``_compact_index``; src_epoch
-    provenance makes replays of folded epochs safe)."""
-    from vat_etl_spark.queries.llm_pipeline import _LINE_W as w
+    Index layout (the 100 TB gap of the raw-text layout): the persistent
+    index stores the 128-bit HASHED line keys (lk, lk2; collision bound
+    at _LINE_IDX_BUCKETS), never raw line text, and needs no index-side
+    ``distinct`` per batch: a line is KEPT in exactly one epoch and
+    replays overwrite their own partition, so admitted keys are globally
+    unique by construction. Fold old epochs with
+    :func:`compact_line_index`."""
+    _run_gate(
+        batch, out_dir, epoch_id, "line_index", _LINE_INDEX, line_dedup_plan,
+        docs=reassemble_lines, keys=_bucketed_line_keys,
+    )
 
-    spark = batch.sparkSession
-    idx_path = f"{out_dir}/line_index"
-    toked = batch.select(
-        "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("t")
-    )
-    lines = toked.select(
-        "doc_id",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(1, (size(t) + {w - 1}) div {w}),"
-                f" i -> concat_ws(' ', slice(t, (i - 1) * {w} + 1, {w})))"
-            )
-        ).alias("i0", "line"),
-    ).select(
-        "doc_id",
-        (F.col("i0") + 1).alias("line_idx"),
-        "line",
-        F.xxhash64("line").alias("lk"),
-        F.xxhash64(F.lit(-1), F.col("line")).alias("lk2"),
-    )
-    if pathlib.Path(idx_path).exists():
-        # no mergeSchema: the hashed layout is uniform by construction
-        # (every partition carries lk/lk2/src_epoch — admit and compactor
-        # both write it), and schema merging re-read every footer per
-        # batch (measured +9 s on a 20-epoch index)
-        idx = (
-            spark.read.option("basePath", idx_path)
-            .option("ignoreMissingFiles", "true")
-            .parquet(idx_path)
-        )
-        # explicit layout check (round 14, ADVICE-r13): a pre-r13 index
-        # stored raw line text; resuming over one would otherwise die
-        # mid-batch with an opaque unresolved-column AnalysisException
-        if "lk" not in idx.columns or "lk2" not in idx.columns:
-            raise ValueError(
-                f"legacy line_index layout at {idx_path} (columns "
-                f"{idx.columns}): pre-r13 indexes stored raw line text; "
-                "rebuild the index (delete line_index/ and replay, or "
-                "re-ingest) — the hashed lk/lk2 layout is required"
-            )
-        # replay exclusion on DATA-column provenance (coalesced with the
-        # partition epoch): compact_line_index may have folded this
-        # epoch's lines into a consolidated negative-epoch partition, and
-        # a replay must still exclude its own lines or it would remove
-        # them from its own documents (same rule as admit_batch)
-        prov = F.coalesce(F.col("src_epoch"), F.col("epoch"))
-        seen = idx.filter(prov != epoch_id).select("lk", "lk2")
-        fresh = lines.join(seen, ["lk", "lk2"], "left_anti")
-    else:
-        fresh = lines
-    surv = fresh.groupBy("lk", "lk2").agg(
-        F.min(F.col("doc_id") * 1_000_000 + F.col("line_idx")).alias("keep_key")
-    )
-    occ = lines.join(surv, ["lk", "lk2"], "left").select(
-        "doc_id", "line_idx", "line", "lk", "lk2",
-        (
-            F.col("doc_id") * 1_000_000 + F.col("line_idx") == F.col("keep_key")
-        ).alias("kept"),
-    )
-    kept_struct = F.when(F.col("kept"), F.struct("line_idx", "line"))
-    cleaned = occ.groupBy("doc_id").agg(
-        F.count("*").alias("n_lines"),
-        F.sum(F.when(F.col("kept"), 0).otherwise(1)).alias("n_removed"),
-        F.array_join(
-            F.transform(
-                F.sort_array(F.collect_list(kept_struct)), lambda s: s["line"]
-            ),
-            " ",
-        ).alias("cleaned_text"),
-    )
-    # stable snapshot: the docs write and the index write both execute the
-    # admit subtree; the index must record exactly the lines the docs kept
-    cleaned = cleaned.localCheckpoint(eager=True)
-    # no distinct: exactly one occurrence per (lk, lk2) is kept, so the
-    # admitted key set is unique by construction
-    kept_lines = (
+
+def _bucketed_line_keys(occ: DataFrame, src_epoch) -> DataFrame:
+    """The line index rows of an occurrence snapshot: its kept keys.
+    Hash buckets at the FILE grain, not directory grain: repartition by
+    bucket writes one bucket-pure file per bucket per epoch (parquet
+    min/max stats on the bucket column make per-bucket maintenance and
+    scans file-prunable). Directory-grain partitionBy("bucket") was
+    measured and rejected twice: per-input-task slivers cost 2.4×
+    throughput (~2 000 files/epoch), and even one-file-per-dir kept a
+    ~25% per-batch partition-discovery tax at 20 epochs. An epoch too
+    large for one task per bucket would salt the repartition key — the
+    bucket count, not the task layout, is the maintenance unit."""
+    return (
         occ.filter(F.col("kept"))
         .select(
             "lk",
             "lk2",
             F.pmod(F.col("lk"), F.lit(_LINE_IDX_BUCKETS)).alias("bucket"),
-            F.lit(epoch_id).alias("src_epoch"),
+            src_epoch,
         )
-        .localCheckpoint(eager=True)
-    )
-    cleaned.write.mode("overwrite").parquet(f"{out_dir}/docs/epoch={epoch_id}")
-    # hash buckets at the FILE grain, not directory grain: repartition by
-    # bucket writes one bucket-pure file per bucket per epoch (parquet
-    # min/max stats on the bucket column make per-bucket maintenance and
-    # scans file-prunable). Directory-grain partitionBy("bucket") was
-    # measured and rejected twice: per-input-task slivers cost 2.4×
-    # throughput (~2 000 files/epoch), and even one-file-per-dir kept a
-    # ~25% per-batch partition-discovery tax at 20 epochs. An epoch too
-    # large for one task per bucket would salt the repartition key — the
-    # bucket count, not the task layout, is the maintenance unit.
-    kept_lines.repartition(
-        _LINE_IDX_BUCKETS, "bucket"
-    ).sortWithinPartitions("bucket", "lk").write.mode("overwrite").parquet(
-        f"{idx_path}/epoch={epoch_id}"
+        .repartition(_LINE_IDX_BUCKETS, "bucket")
+        .sortWithinPartitions("bucket", "lk")
     )
 
 
 def corpus_lines_stream(
     spark: SparkSession, src_dir: str, out_dir: str, schema=None
 ):
-    """Wire :func:`admit_lines_batch` into a file-source stream (one file
-    per trigger, availableNow-drainable — same harness as
-    :func:`corpus_ingest_stream`)."""
-    if schema is None:
-        schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(
-            lambda df, epoch_id: admit_lines_batch(df, out_dir, epoch_id)
-        )
-        .option("checkpointLocation", f"{out_dir}/_checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
+    """Drain ``src_dir`` through :func:`admit_lines_batch`."""
+    return _drain(spark, src_dir, out_dir, schema, admit_lines_batch)
+
+
+# signature index: one row per admitted SimHash
+_SIMHASH_INDEX = "simhash long, src_epoch int"
 
 
 def admit_neardup_batch(batch: DataFrame, out_dir: str, epoch_id: int) -> None:
@@ -445,47 +359,17 @@ def admit_neardup_batch(batch: DataFrame, out_dir: str, epoch_id: int) -> None:
     SimHash lies within Hamming distance 3 of the persisted signature
     index (4×16-bit banded candidates, exact xor+bit_count verify) or of
     an earlier doc in the same batch; survivors' signatures join the
-    index. The selection is ``neardup_admit_plan`` — the same function
-    the registered batch twin ``corpus_neardup_admit_twin`` runs, so its
-    driver row is direct evidence for this path's admit semantics.
-
-    Same exactly-once recipe as the exact gate: the admit is a
-    deterministic function of (batch, index-minus-own-epoch) and both
-    writes overwrite their own ``epoch=N`` partition, so a replayed
-    epoch excludes its own prior signatures (or it would block itself)
-    and clobbers its own partial output. At 100 TB the signature index
-    is 8 bytes per admitted doc — bucket it on a band key so the
-    per-batch candidate join co-locates; fold old epochs with
-    :func:`compact_simhash_index` (the shared grace protocol)."""
+    index. At 100 TB the signature index is 8 bytes per admitted doc —
+    bucket it on a band key so the per-batch candidate join co-locates;
+    fold old epochs with :func:`compact_simhash_index`."""
     from vat_etl_spark.queries.dedup import neardup_admit_plan
 
-    spark = batch.sparkSession
-    idx_path = f"{out_dir}/simhash_index"
-    existing = None
-    if pathlib.Path(idx_path).exists():
-        idx = (
-            spark.read.option("basePath", idx_path)
-            .option("ignoreMissingFiles", "true")
-            .option("mergeSchema", "true")
-            .parquet(idx_path)
-        )
-        # replay exclusion on DATA-column provenance, coalesced with the
-        # partition epoch — identical rule to admit_batch/admit_lines_batch
-        if "src_epoch" in idx.columns:
-            prov = F.coalesce(F.col("src_epoch"), F.col("epoch"))
-        else:
-            prov = F.col("epoch")
-        existing = idx.filter(prov != epoch_id).select("simhash").distinct()
-    admitted = neardup_admit_plan(batch, existing)
-    # stable snapshot: both writes re-execute `admitted`; the index must
-    # record exactly the signatures the docs write admitted
-    admitted = admitted.localCheckpoint(eager=True)
-    admitted.drop("simhash").write.mode("overwrite").parquet(
-        f"{out_dir}/docs/epoch={epoch_id}"
+    _run_gate(
+        batch, out_dir, epoch_id, "simhash_index", _SIMHASH_INDEX,
+        neardup_admit_plan,
+        docs=lambda admitted: admitted.drop("simhash"),
+        keys=lambda admitted, src: admitted.select("simhash", src).distinct(),
     )
-    admitted.select(
-        "simhash", F.lit(epoch_id).alias("src_epoch")
-    ).distinct().write.mode("overwrite").parquet(f"{idx_path}/epoch={epoch_id}")
 
 
 def bootstrap_simhash_index(
@@ -518,28 +402,12 @@ def compact_simhash_index(
     """Signature-index maintenance twin of :func:`compact_key_index` —
     identical grace/snapshot/publish-then-mark protocol (shared via
     ``_compact_index``) folding on the ``simhash`` column."""
-    return _compact_index(spark, f"{out_dir}/simhash_index", "simhash",
+    return _compact_index(spark, f"{out_dir}/simhash_index", _SIMHASH_INDEX,
                           grace_seconds)
 
 
 def corpus_neardup_stream(
     spark: SparkSession, src_dir: str, out_dir: str, schema=None
 ):
-    """Wire :func:`admit_neardup_batch` into a file-source stream (one
-    file per trigger, availableNow-drainable — same harness as
-    :func:`corpus_ingest_stream`)."""
-    if schema is None:
-        schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(
-            lambda df, epoch_id: admit_neardup_batch(df, out_dir, epoch_id)
-        )
-        .option("checkpointLocation", f"{out_dir}/_checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
+    """Drain ``src_dir`` through :func:`admit_neardup_batch`."""
+    return _drain(spark, src_dir, out_dir, schema, admit_neardup_batch)
