@@ -293,9 +293,8 @@ def test_fixed_lm_roundtrip_matches_self_estimated(spark, sf_smoke, tmp_path):
 def test_build_corpus_raises_when_a_background_write_fails(
     spark, sf_smoke, tmp_path, monkeypatch
 ):
-    """A failed background write (the build_metrics/funnel metadata
-    writes run on the build's pool) must fail the build, not be logged
-    under a successful return."""
+    """A failed build_metrics/funnel metadata write must fail the build,
+    not be logged under a successful return."""
     import pytest
 
     from vat_etl_spark.queries import llm_pipeline
@@ -309,6 +308,47 @@ def test_build_corpus_raises_when_a_background_write_fails(
             spark, sf_smoke, str(tmp_path / "c"), n_shards=4, stages=("gopher",)
         )
 
+
+
+def test_build_corpus_pool_jobs_carry_the_callers_job_group(
+    spark, sf_smoke, tmp_path
+):
+    """Every job a build starts — its background pool's prefetches and
+    overlapped writes included — runs in the caller's job group, so a
+    per-group job count covers the whole build. Job ids are sequential:
+    the jobs started between two probe jobs are exactly the build's."""
+    import time
+
+    from vat_etl_spark.queries.llm_pipeline import build_corpus
+
+    sc = spark.sparkContext
+
+    def in_group(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            return fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    def job_ids(group):
+        # the status store is fed asynchronously by the listener bus
+        deadline = time.monotonic() + 30
+        while not (ids := sc.statusTracker().getJobIdsForGroup(group)):
+            if time.monotonic() > deadline:
+                break
+            time.sleep(0.05)
+        return set(ids)
+
+    tag = f"jobgroup-{tmp_path.name}"
+    in_group(f"{tag}-before", lambda: sc.parallelize([1], 1).count())
+    in_group(tag, lambda: build_corpus(
+        spark, sf_smoke, str(tmp_path / "c"), n_shards=2, stages=("gopher",)
+    ))
+    in_group(f"{tag}-after", lambda: sc.parallelize([1], 1).count())
+    (first,), (last,) = job_ids(f"{tag}-before"), job_ids(f"{tag}-after")
+    started = set(range(first + 1, last))
+    assert started and job_ids(tag) == started
 
 def test_join_background_surfaces_unconsumed_failures(caplog):
     """The build's final join re-raises a background failure nobody

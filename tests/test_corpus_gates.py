@@ -99,3 +99,22 @@ def test_build_corpus_base_index_reader_rules(spark, sf_smoke, tmp_path):
     with pytest.raises(ValueError, match="no data files"):
         build_corpus(spark, sf_smoke, str(tmp_path / "refused"), n_shards=2,
                      stages=stages, base_dir=str(base))
+
+
+def test_build_corpus_refuses_its_base_as_out_dir_in_any_spelling(
+    spark, sf_smoke, tmp_path
+):
+    """An incremental build reads its base lazily while writing out_dir,
+    so writing into the base would overwrite its own input. The guard
+    compares qualified locations: the base's plain path given back as a
+    ``file://`` URI is the same directory and is refused before anything
+    is written."""
+    from vat_etl_spark.queries.llm_pipeline import build_corpus
+
+    base = tmp_path / "base"
+    build_corpus(spark, sf_smoke, str(base), n_shards=2, stages=("gopher",))
+    before = sorted(p.name for p in base.iterdir())
+    with pytest.raises(ValueError, match="NEW out_dir"):
+        build_corpus(spark, sf_smoke, base.as_uri(), n_shards=2,
+                     stages=("gopher",), base_dir=str(base))
+    assert sorted(p.name for p in base.iterdir()) == before

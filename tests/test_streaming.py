@@ -564,19 +564,24 @@ def test_corpus_key_index_compaction_preserves_dedup(spark, sf_smoke, tmp_path):
     assert replay.count() == 0
 
 
-def test_corpus_compaction_interleaved_with_live_admits(spark, sf_smoke, tmp_path):
+@pytest.mark.parametrize("form", ["path", "uri"])
+def test_corpus_compaction_interleaved_with_live_admits(
+    spark, sf_smoke, tmp_path, form
+):
     """Live-stream safety: admit_batch calls interleaved with compaction
     cycles (the sequence a running stream + a maintenance job produces)
     must admit exactly the same corpus as uninterrupted ingest — no key
     lost to a fold, no duplicate admitted past a consolidated index, and
-    epochs written mid-cycle survive the next purge."""
+    epochs written mid-cycle survive the next purge. The same holds when
+    the output directory is a ``file://`` URI: compaction lists, purges,
+    publishes and marks through the Hadoop FileSystem."""
     from pyspark.sql import functions as F
 
     from vat_etl_spark.sources.catalog import read_table
     from vat_etl_spark.streaming.corpus import admit_batch, compact_key_index
 
     docs = read_table(spark, sf_smoke, "documents")
-    out = str(tmp_path / "corpus")
+    out = str(tmp_path / "corpus") if form == "path" else (tmp_path / "corpus").as_uri()
 
     b = [docs.filter(F.col("doc_id") % 4 == i) for i in range(4)]
     admit_batch(b[0], out, epoch_id=0)

@@ -13,9 +13,7 @@ $SPARK_GRAFT_CPUS. Prints one JSON line: the probe, the dirs, the pass
 count, the sum of the medians, and per key the wall samples with their
 median/min/max, an untimed row count (docs written for a corpus key),
 the Spark jobs and stages per timed pass in the key's job group, and for
-a corpus key the last build's funnel and stage walls. Jobs a corpus
-build starts on its background pool carry no job group and are not
-counted. A decade exponent is log10 of the ratio of two runs' medians.
+a corpus key the last build's funnel and stage walls. A decade exponent is log10 of the ratio of two runs' medians.
 NOT the driver bench contract — iteration tooling only.
 """
 

@@ -44,28 +44,13 @@ from vat_etl_spark.queries import finance  # noqa: E402,F401
 from vat_etl_spark.queries import llm_pipeline  # noqa: E402,F401
 
 # Externally-verified correctness gates sample the FIRST ~50 queries in
-# registration order. Rotation policy (least-recently-verified / most-
-# recently-CHANGED first): rounds 2-6 put every registration under the
-# driver at least once (232/232 union); from round 7 on the window leads
-# with this round's new registrations and rewrites (so external evidence
-# covers exactly what changed), then the full rows-only tier (keeping the
-# weakest evidence class fresh), then a hash-verified headliner rotation.
-# The flagship `vat_summary` stays first because it is `entry()`. The
-# in-repo oracle gate (tests/test_oracle_parity.py) still checks ALL
-# registrations every pytest run regardless of order.
+# registration order, so this list leads the registry: the flagship
+# `vat_summary` first (it is `entry()`), then the registrations whose
+# external evidence should stay fresh — recently changed plans and the
+# rows-only audits. The in-repo oracle gate (tests/test_oracle_parity.py)
+# checks ALL registrations every pytest run regardless of order.
 _FIRST = [
-    # vat flagship (= entry())
     "vat_summary",
-    # --- round-11 changes: the three rows-only→hash graduations
-    # (dedup_simhash — exported-signature bit_count twin;
-    # corpus_neardup_admit_twin — greedy-gate semantics re-derived
-    # all-pairs over the same export; dedup_minhash_ml_reference — the
-    # FENCED ml.feature path, renamed from dedup_minhash_lsh, now
-    # exact-verified and sharing the banded all-pairs oracle), the
-    # banded path whose candidate generator was factored out, the A/B
-    # recall eval (now two rows), the src_prio try_cast fix
-    # (cross-source dedup + dataset card), and the ANN queries rebuilt
-    # on the v6 index (rank-scattered links/seeds, hub-layer preset) ---
     "dedup_simhash",
     "corpus_neardup_admit_twin",
     "dedup_minhash_ml_reference",
@@ -73,16 +58,8 @@ _FIRST = [
     "dedup_lsh_recall_eval",
     "pipeline_cross_source_dedup",
     "pipeline_dataset_card",
-    # --- full rows-only tier (3 after round-11 — all audits: the ANN
-    # pair + the A/B recall eval above): the weakest external-evidence
-    # class stays inside the driver window every round ---
     "ann_graph_search",
     "ann_nndescent",
-    # --- round-10 changes: the four sketch-quartet rows-only→hash
-    # graduations, the widened agg_approx_distinct contract, the
-    # degenerate-group-guarded agg_statistics, the quantized-argmax
-    # kmeans, the heap BPE encoder, and multimodal_dedup_phash's first
-    # driver row ---
     "agg_hll_mergeable",
     "agg_countmin_heavy_hitters",
     "agg_hll_intersection",
@@ -93,15 +70,8 @@ _FIRST = [
     "text_bpe_apply_trie",
     "text_bpe_apply",
     "multimodal_dedup_phash",
-    # --- round-9 changes: production-K BPE encoder registration, BPE
-    # null-parity + separator-guard fixes, index fingerprint guard, and
-    # the five rows-only→hash graduations ---
     "sample_stratified_orders",
     "agg_percentile_approx",
-    # --- round-8 changes: new planted-audit registration, rows-only→hash
-    # graduations (multimodal byte replays, exact-recall LSH join, full
-    # IVF/PQ pipeline replays, unrolled-BPE replays), and the queries whose
-    # Spark plans changed this round (ANN serve split, funnel refactor) ---
     "corpus_neardup_admit_planted",
     "quality_filter_agreement",
     "quality_filter_contingency",
@@ -114,23 +84,16 @@ _FIRST = [
     "ann_pq_recall_eval",
     "ann_ivfpq_search",
     "text_bpe_merges",
-    "text_bpe_apply",
-    "ann_graph_search",
-    "ann_nndescent",
     "pipeline_span_removal",
     "pipeline_line_dedup",
     "pipeline_quality_classifier",
     "pipeline_leakage_safe_split",
-    "pipeline_cross_source_dedup",
     "pipeline_perplexity_buckets",
     "pipeline_quality_gopher",
-    "pipeline_dataset_card",
-    # --- round-7 changes: new registration + rows-only→hash graduations ---
     "multimodal_dedup_phash_planted",
     "pandas_udf_currency",
     "udaf_geomean",
     "embed_normalize_arrow",
-    # --- round-7 rewrites: fused multi-metric ntile + shared sampler ---
     "events_rfm_segmentation",
     "multimodal_shard_packing",
     "window_abc_classification",
@@ -141,48 +104,13 @@ _FIRST = [
     "ids_assign_stable",
     "agg_gini_concentration",
     "agg_lorenz_deciles",
-    # stratum-hash fix + corpus mergeSchema change
-    "dedup_lsh_recall_eval",
     "corpus_ingest_admit_twin",
-    # --- rows-only tier (3 after round-11 graduations — all audits:
-    # the ANN pair, the A/B recall eval) plus recently-graduated
-    # entries kept fresh ---
-    "agg_approx_distinct",
-    "agg_countmin_heavy_hitters",
-    "agg_hll_intersection",
-    "agg_hll_mergeable",
-    "agg_percentile_approx",
-    "agg_statistics",
-    "ann_ivf_recall_eval",
-    "ann_ivfpq_search",
-    "ann_lsh_bucketed",
-    "ann_pq_recall_eval",
-    "dedup_minhash_ml_reference",
     "dedup_phonetic_blocking",
     "dedup_phonetic_recall_eval",
-    "dedup_simhash",
     "graph_pagerank",
-    "kmeans_lloyd",
-    "multimodal_audio_frames",
-    "multimodal_dedup_phash",
-    "multimodal_features",
-    "multimodal_keyframes",
-    "sample_stratified_orders",
-    "text_bpe_apply",
-    "text_bpe_merges",
-    "ts_rolling_distinct_hll",
-    # round-7 late registrations
     "pipeline_dsir_weights",
     "text_kneser_ney_bigram",
-    "pipeline_span_removal",
-    "pipeline_perplexity_buckets",
-    "pipeline_line_dedup",
-    "ann_nndescent",
-    "ann_graph_search",
-    "pipeline_quality_classifier",
     "text_collocation_pmi",
-    "corpus_neardup_admit_twin",
-    # --- headliner hash rotation across subsystems ---
     "retrieval_prf_rm3",
     "retrieval_hybrid_rrf",
     "retrieval_eval_metrics",

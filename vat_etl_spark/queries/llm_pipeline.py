@@ -21,6 +21,9 @@ import heapq
 import logging
 import threading as _threading
 import time as _time
+from collections.abc import Callable
+from types import SimpleNamespace
+from typing import NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W
@@ -29,7 +32,7 @@ from pyspark.sql import functions as F
 from vat_etl_spark.functions.localrel import local_rows_df
 from vat_etl_spark.queries import QUERIES, query
 from vat_etl_spark.queries.text import STOPWORDS, tokens_expr
-from vat_etl_spark.sources.catalog import read_index, read_table as _t
+from vat_etl_spark.sources.catalog import hadoop_path, read_index, read_table as _t
 
 _LOG = logging.getLogger(__name__)
 
@@ -738,18 +741,111 @@ def sample_fixed_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# the full curation funnel, in pipeline order; every stage is flag-gated
-# (pass a subset to build a lighter corpus — e.g. skip the rewrite stages
-# for a quick refresh build)
-CORPUS_STAGES = (
-    "gopher",        # rule-based quality gate (map-only)
-    "classifier",    # fastText-style hashed linear classifier (map-only)
-    "perplexity",    # CCNet head/middle kept, tail dropped (LM corpus-grain)
-    "exact_dedup",   # cross-source exact dedup, trusted-source survivor
-    "line_dedup",    # C4 keep-first global line dedup (rewrites text)
-    "span_removal",  # Lee-et-al repeated-span excision (rewrites text)
-    "neardup",       # SimHash banded keep-first near-dup admission
+class _Stage(NamedTuple):
+    """One funnel stage: ``plan(build, frame)`` maps the running frame to
+    the next one. A ``raw`` plan instead maps the RAW input to a doc_id
+    keep set; a ``base`` stage runs exactly when the build is incremental."""
+
+    name: str
+    plan: Callable[[SimpleNamespace, DataFrame], DataFrame]
+    raw: bool = False
+    base: bool = False
+
+
+def _keep(cur: DataFrame, keep: DataFrame) -> DataFrame:
+    return cur.join(keep.select("doc_id"), "doc_id")
+
+
+def _rewrite(cur: DataFrame, cleaned: DataFrame) -> DataFrame:
+    """A rewrite stage's tail: the stage's ``cleaned_text`` replaces the
+    text, and docs it emptied leave the funnel."""
+    return (
+        cur.drop("text")
+        .join(cleaned.select("doc_id", F.col("cleaned_text").alias("text")), "doc_id")
+        .where(F.trim(F.col("text")) != "")
+    )
+
+
+def _perplexity_keep(b: SimpleNamespace, d: DataFrame) -> DataFrame:
+    # lm_dir = CCNet's actual shape: the LM and its
+    # bucket thresholds were estimated ONCE from a reference corpus
+    # (kn_write_lm) — this build only SCORES against the persisted
+    # tables: three keyed joins + a broadcast threshold CASE, no
+    # per-build LM re-estimation. Self-LM fallback: the LM's reference
+    # distribution is the FULL input corpus by definition, re-derived
+    # this build via the registered oracle-backed bucket assignment.
+    if b.lm_dir:
+        return kn_ppl_kept_fixed(b.spark, d, kn_load_lm(b.spark, b.lm_dir))
+    return QUERIES["pipeline_perplexity_buckets"](b.spark, b.sf_dir).filter(
+        F.col("kept")
+    )
+
+
+def _base_dedup(b: SimpleNamespace, cur: DataFrame) -> DataFrame:
+    # cross-build exact dedup: drop docs whose FINAL content key is
+    # already in the base corpus (same key expression the base's shards
+    # carry, so the anti-join is key-exact across epochs)
+    base_keys = (
+        b.spark.read.parquet(f"{b.base_dir}/shards").select("content_key").distinct()
+    )
+    keyed = cur.withColumn(
+        "content_key", F.concat_ws(" ", F.slice(tokens_expr(F.col("text")), 1, 2))
+    )
+    return keyed.join(base_keys, "content_key", "left_anti").drop("content_key")
+
+
+def _neardup(b: SimpleNamespace, cur: DataFrame) -> DataFrame:
+    # keep-first within the surviving corpus; an incremental build also
+    # rejects arrivals near the BASE corpus via its persisted signature
+    # index — exactly the streaming gate's protocol. A base built with a
+    # --stages subset excluding 'neardup' never wrote that index: chain
+    # without one. read_index's try-read rule: only a missing path means
+    # "no index"; a present but unreadable or empty one raises, since
+    # swallowing it would silently disable base near-dup gating. The base
+    # signatures stay on the build: the written index is base ∪ new.
+    from vat_etl_spark.queries.dedup import neardup_admit_plan
+
+    if b.base_dir:
+        b.base_sigs = read_index(
+            b.spark, f"{b.base_dir}/neardup_sig_index", _NEARDUP_SIG_INDEX
+        )
+        if b.base_sigs is None:
+            _LOG.warning(
+                "incremental build_corpus: base %s has no neardup_sig_index "
+                "(built with a --stages subset?) — chaining WITHOUT base "
+                "near-dup signatures; new docs are only near-dup-gated "
+                "against each other",
+                b.base_dir,
+            )
+    return neardup_admit_plan(cur, b.base_sigs)
+
+
+# the full curation funnel, in pipeline order
+_FUNNEL = (
+    # rule-based quality gate (map-only)
+    _Stage("gopher", lambda b, cur: _keep(cur, quality_flags(cur).filter(F.col("passes")))),
+    # fastText-style hashed linear classifier (map-only)
+    _Stage("classifier", lambda b, cur: _keep(
+        cur, classifier_label_plan(cur).filter(F.col("label") == "keep"))),
+    # CCNet head/middle kept, tail dropped (LM corpus-grain)
+    _Stage("perplexity", _perplexity_keep, raw=True),
+    # cross-source exact dedup, trusted-source survivor
+    _Stage("exact_dedup", lambda b, d: QUERIES["pipeline_cross_source_dedup"](
+        b.spark, b.sf_dir), raw=True),
+    # C4 keep-first global line dedup
+    _Stage("line_dedup", lambda b, cur: _rewrite(cur, reassemble_lines(line_dedup_plan(cur)))),
+    # Lee-et-al repeated-span excision; a cache site distinct from the
+    # registered query's (see span_removal_plan's cache_key contract)
+    _Stage("span_removal", lambda b, cur: _rewrite(
+        cur, span_removal_plan(cur, cache_key="span_removal_toked:corpus"))),
+    _Stage("base_dedup", _base_dedup, base=True),
+    # SimHash banded keep-first near-dup admission
+    _Stage("neardup", _neardup),
 )
+
+# the stages a caller may select (pass a subset to build a lighter corpus
+# — e.g. skip the rewrite stages for a quick refresh build)
+CORPUS_STAGES = tuple(s.name for s in _FUNNEL if not s.base)
 
 # build_corpus's persisted near-dup state: the admitted docs' SimHashes
 _NEARDUP_SIG_INDEX = "simhash long"
@@ -765,27 +861,33 @@ def build_corpus(
     lm_dir: str | None = None,
 ) -> dict:
     """The composed corpus build (the `corpus` CLI subcommand): the FULL
-    curation funnel — Gopher rules → quality classifier → perplexity
-    buckets → exact cross-source dedup → C4 line dedup → repeated-span
-    removal → SimHash near-dup admission — then the CONTENT-KEY
-    leakage-safe train/val/test tag (``with_content_split``: near-identical
-    docs share the content key, so they can never straddle train/eval;
-    the doc_id-hash tag the early builds used is NOT safe once near-dup
-    stages enter the funnel) and shard assignment, written
+    curation funnel (``_FUNNEL``: Gopher rules → quality classifier →
+    perplexity buckets → exact cross-source dedup → C4 line dedup →
+    repeated-span removal → SimHash near-dup admission), then the
+    CONTENT-KEY leakage-safe train/val/test tag (``with_content_split``:
+    near-identical docs share the content key, so they can never straddle
+    train/eval; the doc_id-hash tag the early builds used is NOT safe once
+    near-dup stages enter the funnel) and shard assignment, written
     ``partitionBy(split, shard)``.
 
-    Each stage is flag-gated via ``stages`` and carries its own
-    ``Observation`` funnel counter (docs + chars surviving the stage).
-    Stage boundaries are persisted and materialized by the counter's
-    count() action — the rewrite stages (line dedup, span removal) and
-    the SimHash gate fan their input out into self-joins, so an eagerly
-    checkpointed boundary both populates the Observation exactly once and
-    stops the upstream funnel re-executing per branch. At 100 TB the
-    localCheckpoint becomes a staged parquet write to reliable storage
-    (exactly how production corpus builds checkpoint between funnel
-    passes — executor-local blocks are a single-box device); every stage's
-    internal plan is key-partitioned or map-only — nothing here
-    broadcasts corpus-derived data.
+    Stage protocol. ``stages`` selects table entries; they run in table
+    order. Every stage boundary, the raw input included, is an eager
+    ``localCheckpoint`` of the stage's plan with an ``Observation`` funnel
+    counter (docs + chars surviving) riding it, and its materialization
+    wall is ``stage_walls[name]``. The rewrite stages and the SimHash gate
+    fan their input out into self-joins, so the checkpointed boundary both
+    populates the Observation exactly once and stops the upstream funnel
+    re-executing per branch. A ``raw`` stage's keep set depends only on
+    the raw input, so it is computed on the background pool from the
+    start of the build (wall ``<name>_prefetch``) and joined in at its
+    boundary; the dataset card is prefetched the same way. Every pool job
+    carries the caller's job group, and a build joins all of its pool
+    work before it returns or raises. At 100 TB the localCheckpoint
+    becomes a staged parquet write to reliable storage (exactly how
+    production corpus builds checkpoint between funnel passes —
+    executor-local blocks are a single-box device); every stage's internal
+    plan is key-partitioned or map-only — nothing here broadcasts
+    corpus-derived data.
 
     Returns the per-stage funnel counts plus the write metrics; persists
     the funnel, the per-language dataset card, and per-(lang, split)
@@ -801,82 +903,69 @@ def build_corpus(
     builds chain. Split tags are a pure function of the content key, so a
     doc's split can never change across epochs — cross-build
     leakage-safety for free."""
+    from concurrent.futures import wait
+
+    from pyspark import inheritable_thread_target
     from pyspark.sql import Observation
 
-    from vat_etl_spark.queries.dedup import neardup_admit_plan
-
-    base_keys = base_sigs = None
-    if base_dir:
-        import os
-
-        if os.path.abspath(base_dir) == os.path.abspath(out_dir):
-            # the base artifacts are read LAZILY while out_dir is being
-            # overwritten — in-place incremental would corrupt its own input
-            raise ValueError(
-                "incremental build must write to a NEW out_dir "
-                "(base_dir == out_dir would overwrite the index it reads)"
-            )
-        base_keys = (
-            spark.read.parquet(f"{base_dir}/shards")
-            .select("content_key")
-            .distinct()
+    # the base artifacts are read LAZILY while out_dir is being
+    # overwritten — in-place incremental would corrupt its own input.
+    # Compared qualified, so `/x` and `file:///x` are one directory.
+    if base_dir and str(hadoop_path(spark, base_dir)[1]) == str(
+        hadoop_path(spark, out_dir)[1]
+    ):
+        raise ValueError(
+            "incremental build must write to a NEW out_dir "
+            "(base_dir == out_dir would overwrite the index it reads)"
         )
-        # a base built with a --stages subset excluding 'neardup' never
-        # wrote a sig index — chain without one (there are no base
-        # signatures to gate against) instead of failing the read.
-        # read_index's try-read rule: only a missing path means "no
-        # index"; a present but unreadable or empty one raises, since
-        # swallowing it would silently disable base near-dup gating.
-        if "neardup" in stages:
-            base_sigs = read_index(
-                spark, os.path.join(base_dir, "neardup_sig_index"),
-                _NEARDUP_SIG_INDEX,
-            )
-            if base_sigs is None:
-                _LOG.warning(
-                    "incremental build_corpus: base %s has no "
-                    "neardup_sig_index (built with a --stages subset?) — "
-                    "chaining WITHOUT base near-dup signatures; new docs "
-                    "are only near-dup-gated against each other",
-                    base_dir,
-                )
-
+    b = SimpleNamespace(
+        spark=spark, sf_dir=sf_dir, lm_dir=lm_dir, base_dir=base_dir, base_sigs=None
+    )
+    run = [s for s in _FUNNEL if (bool(base_dir) if s.base else s.name in stages)]
     d = _t(spark, sf_dir, "documents").select("doc_id", "lang", "source", "text")
     funnel: list[tuple[str, int, int]] = []
+    walls: dict[str, float] = {}
+    pool, futs = _bg_pool(), []
 
-    stage_walls: dict[str, float] = {}
-
-    # Overlap independent jobs (guide §2.6): three funnel inputs derive
-    # from the RAW input (sf_dir/d), not from the running `cur` — the
-    # perplexity keep set (the LM's reference distribution is the full
-    # input corpus by definition; in fixed-LM mode it scores `d` against
-    # the persisted tables), the exact-dedup survivor set, and the
-    # dataset card. Materialize them on a small thread pool while the
-    # sequential gopher/classifier stages run, so their jobs back-fill
-    # executor capacity the tiny funnel stages leave idle. Funnel
-    # membership, counts and outputs are bit-identical — the SAME frames
-    # join in at the SAME stage boundaries; only the wall moves
-    # (measured: self-LM build 16.0 -> 6.5 s at sf0.1, OPTIMIZATION_r14.md).
-    # Each prefetched frame is an eager localCheckpoint, so the join
-    # consumes checkpointed blocks exactly as _stage boundaries do.
-
-    def _bg(build):
+    def timed(key: str, fn):
+        # wall of one step — makes a funnel regression attributable to a
+        # stage instead of one opaque end-to-end number
         t0 = _time.perf_counter()
-        out = build().localCheckpoint(eager=True)
-        return out, round(_time.perf_counter() - t0, 2)
+        out = fn()
+        walls[key] = round(_time.perf_counter() - t0, 2)
+        return out
 
-    # ADVICE-r14: the pool is MODULE-LEVEL and reused across builds —
-    # under py4j pinned-thread mode (Spark 4 default) per-build pools
-    # leave their JVM peer threads behind on teardown, so repeated
-    # builds in a long session accumulate JVM threads. Per-build state
-    # is the futures list, joined in the finally below.
-    pool = _bg_pool()
-    futs: list = []
-
-    def _submit(fn, *a):
-        f = pool.submit(fn, *a)
+    def submit(fn, *a):
+        # under pinned-thread mode (the default) a pool thread does not
+        # inherit the caller's local properties, so the job group is
+        # carried over; with pinning off PySpark returns the session as is
+        wrap = inheritable_thread_target(spark)
+        f = pool.submit(fn if wrap is spark else wrap(fn), *a)
         futs.append(f)
         return f
+
+    def checkpointed(key: str, plan):
+        # LOCALCHECKPOINT, not persist (measured): the eager
+        # checkpoint materializes the boundary AND physically truncates
+        # the lineage, so every downstream job starts from the
+        # checkpointed blocks. The old persist() chain nested each
+        # stage's full plan inside the next, and past ~5 stages
+        # downstream jobs stopped matching the cache and silently
+        # recomputed the WHOLE funnel from parquet — measured at sf0.1:
+        # the post-funnel sig-index/shard writes cost 12-15 s each over
+        # 121 rows; with the lineage cut they are sub-second.
+        return timed(key, lambda: plan().localCheckpoint(eager=True))
+
+    def stage(name: str, df: DataFrame) -> DataFrame:
+        obs = Observation(f"corpus_{name}")
+        out = checkpointed(name, lambda: df.observe(
+            obs,
+            F.count(F.lit(1)).alias("docs"),
+            F.sum(F.length("text").cast("long")).alias("chars"),
+        ))
+        m = {k: int(v or 0) for k, v in obs.get.items()}
+        funnel.append((name, m["docs"], m["chars"]))
+        return out
 
     # review finding (r14): without try/finally an exception between
     # prefetch submission and consumption leaked running pool threads
@@ -885,169 +974,51 @@ def build_corpus(
     # mutating out_dir after the build raised) and surface their errors.
     built = False
     try:
-        prefetch: dict[str, object] = {}
-        if "perplexity" in stages:
-            if lm_dir:
-                _lm = kn_load_lm(spark, lm_dir)
-                prefetch["perplexity"] = _submit(
-                    _bg, lambda: kn_ppl_kept_fixed(spark, d, _lm)
-                )
-            else:
-                prefetch["perplexity"] = _submit(
-                    _bg,
-                    lambda: QUERIES["pipeline_perplexity_buckets"](spark, sf_dir)
-                    .filter(F.col("kept"))
-                    .select("doc_id"),
-                )
-        if "exact_dedup" in stages:
-            prefetch["exact_dedup"] = _submit(
-                _bg,
-                lambda: QUERIES["pipeline_cross_source_dedup"](spark, sf_dir)
-                .select("doc_id"),
-            )
-        prefetch["dataset_card"] = _submit(
-            _bg, lambda: QUERIES["pipeline_dataset_card"](spark, sf_dir)
-        )
-
-        def _stage(df: DataFrame, name: str) -> DataFrame:
-            obs = Observation(f"corpus_{name}")
-            t0 = _time.perf_counter()
-            # LOCALCHECKPOINT, not persist (round-11 profiling): the eager
-            # checkpoint materializes the boundary (firing the Observation
-            # exactly once) AND physically truncates the lineage, so every
-            # downstream job starts from the checkpointed blocks. The old
-            # persist() chain nested each stage's full plan inside the next,
-            # and past ~5 stages downstream jobs stopped matching the cache
-            # and silently recomputed the WHOLE funnel from parquet — measured
-            # at sf0.1: the post-funnel sig-index/shard writes cost 12-15 s
-            # each over 121 rows; with the lineage cut they are sub-second
-            # (the same per-round discipline kmeans/pagerank already use).
-            out = df.observe(
-                obs,
-                F.count(F.lit(1)).alias("docs"),
-                F.sum(F.length("text").cast("long")).alias("chars"),
-            ).localCheckpoint(eager=True)
-            # wall to MATERIALIZE this stage from the previous boundary —
-            # makes a funnel regression attributable to a stage instead of
-            # one opaque end-to-end number (bench's most expensive entry)
-            stage_walls[name] = round(_time.perf_counter() - t0, 2)
-            m = {k: int(v or 0) for k, v in obs.get.items()}
-            funnel.append((name, m["docs"], m["chars"]))
-            return out
-
-        cur = _stage(d, "raw")
-        if "gopher" in stages:
-            keep = quality_flags(cur).filter(F.col("passes")).select("doc_id")
-            cur = _stage(cur.join(keep, "doc_id"), "gopher")
-        if "classifier" in stages:
-            keep = (
-                classifier_label_plan(cur)
-                .filter(F.col("label") == "keep")
-                .select("doc_id")
-            )
-            cur = _stage(cur.join(keep, "doc_id"), "classifier")
-        if "perplexity" in stages:
-            # keep set prefetched above. lm_dir = CCNet's actual shape
-            # (verdict-r11 task 1): the LM and its bucket thresholds were
-            # estimated ONCE from a reference corpus (kn_write_lm) — this
-            # build only SCORES against the persisted tables: three keyed
-            # joins + a broadcast threshold CASE, no per-build LM
-            # re-estimation. Self-LM fallback: the LM and its thresholds
-            # come from the FULL input corpus (the reference distribution),
-            # re-derived this build via the registered oracle-backed bucket
-            # assignment.
-            keep, bg = prefetch["perplexity"].result()
-            stage_walls["perplexity_prefetch"] = bg
-            cur = _stage(cur.join(keep, "doc_id"), "perplexity")
-        if "exact_dedup" in stages:
-            keep, bg = prefetch["exact_dedup"].result()
-            stage_walls["exact_dedup_prefetch"] = bg
-            cur = _stage(cur.join(keep, "doc_id"), "exact_dedup")
-        if "line_dedup" in stages:
-            cleaned = reassemble_lines(line_dedup_plan(cur)).select(
-                "doc_id", F.col("cleaned_text").alias("text")
-            )
-            cur = _stage(
-                cur.drop("text").join(cleaned, "doc_id")
-                .where(F.trim(F.col("text")) != ""),
-                "line_dedup",
-            )
-        if "span_removal" in stages:
-            # distinct cache site from the registered query's (see
-            # span_removal_plan's cache_key contract)
-            cleaned = span_removal_plan(
-                cur, cache_key="span_removal_toked:corpus"
-            ).select(
-                "doc_id", F.col("cleaned_text").alias("text")
-            )
-            cur = _stage(
-                cur.drop("text").join(cleaned, "doc_id")
-                .where(F.trim(F.col("text")) != ""),
-                "span_removal",
-            )
-        if base_keys is not None:
-            # cross-build exact dedup: drop docs whose FINAL content key is
-            # already in the base corpus (same key expression the base's
-            # shards carry, so the anti-join is key-exact across epochs)
-            keyed = cur.withColumn(
-                "content_key",
-                F.concat_ws(" ", F.slice(tokens_expr(F.col("text")), 1, 2)),
-            )
-            cur = _stage(
-                keyed.join(base_keys, "content_key", "left_anti").drop(
-                    "content_key"
-                ),
-                "base_dedup",
-            )
-        if "neardup" in stages:
-            # keep-first within the surviving corpus; an incremental build
-            # also rejects arrivals near the BASE corpus via its persisted
-            # signature index — exactly the streaming gate's protocol
-            cur = _stage(neardup_admit_plan(cur, base_sigs), "neardup")
-            # persist the admitted signatures as the corpus's near-dup index —
-            # the exact `existing_sigs` input of the streaming admission gate
-            # (streaming/corpus.py) and of the next incremental build (base ∪
-            # new), so batch-built corpora and continuous ingest share one
-            # gate state
-            sig_index = cur.select("simhash").distinct()
-            if base_sigs is not None:
-                sig_index = sig_index.union(base_sigs).distinct()
-            # the sig index derives from the (checkpointed) admitted
-            # frame and nothing downstream reads it back in this build —
-            # write it on the pool, overlapped with the shard write
-            # (guide §2.6); joined below so failures still surface here
-            def _sig_write(df=sig_index):
-                t0 = _time.perf_counter()
-                df.write.mode("overwrite").parquet(
-                    f"{out_dir}/neardup_sig_index"
-                )
-                return round(_time.perf_counter() - t0, 2)
-
-            sig_write_fut = _submit(_sig_write)
+        # Overlap independent jobs (guide §2.6): the raw keep sets and the
+        # dataset card back-fill executor capacity the tiny sequential
+        # funnel stages leave idle. The SAME frames join in at the SAME
+        # boundaries, so funnel membership, counts and outputs are
+        # bit-identical; only the wall moves (measured: self-LM build
+        # 16.0 -> 6.5 s at sf0.1, OPTIMIZATION_r14.md).
+        keep = {
+            s.name: submit(checkpointed, f"{s.name}_prefetch",
+                           lambda s=s: s.plan(b, d).select("doc_id"))
+            for s in run if s.raw
+        }
+        card = submit(checkpointed, "dataset_card_prefetch",
+                      lambda: QUERIES["pipeline_dataset_card"](spark, sf_dir))
+        cur = stage("raw", d)
+        for s in run:
+            cur = stage(s.name, _keep(cur, keep[s.name].result()) if s.raw
+                        else s.plan(b, cur))
+        if "simhash" in cur.columns:
+            # persist the admitted signatures as the corpus's near-dup
+            # index — the exact `existing_sigs` input of the streaming
+            # admission gate (streaming/corpus.py) and of the next
+            # incremental build (base ∪ new), so batch-built corpora and
+            # continuous ingest share one gate state. Nothing downstream
+            # reads it back, so it is written on the pool.
+            sigs = cur.select("simhash").distinct()
+            if b.base_sigs is not None:
+                sigs = sigs.union(b.base_sigs).distinct()
+            submit(timed, "sig_index_write", lambda: sigs.write.mode(
+                "overwrite").parquet(f"{out_dir}/neardup_sig_index"))
             cur = cur.drop("simhash")
 
         kept = with_content_split(cur).drop("bucket").withColumn(
             "shard",
             (((F.col("doc_id") % 2147483648) * 2654435761) % n_shards).cast("long"),
         )
-        # observability rides the write itself (dq_observe_metrics pattern):
-        # the final counters come from the pass that writes the shards — zero
-        # extra scans — and are persisted next to the card so a nightly 100 TB
-        # build self-reports without a verification re-read
         # resolve the card prefetch on the MAIN thread (pool tasks must
         # never wait on pool futures), then overlap its write with the
-        # shard write below
-        card, bg = prefetch["dataset_card"].result()
-        stage_walls["dataset_card_prefetch"] = bg
-
-        def _card_write(df=card):
-            t0 = _time.perf_counter()
-            df.coalesce(1).write.mode("overwrite").parquet(
-                f"{out_dir}/dataset_card"
-            )
-            return round(_time.perf_counter() - t0, 2)
-
-        card_write_fut = _submit(_card_write)
+        # shard write
+        card_df = card.result()
+        submit(timed, "dataset_card", lambda: card_df.coalesce(1).write.mode(
+            "overwrite").parquet(f"{out_dir}/dataset_card"))
+        # observability rides the write itself (dq_observe_metrics
+        # pattern): the final counters come from the pass that writes the
+        # shards — zero extra scans — and are persisted next to the card
+        # so a nightly 100 TB build self-reports without a re-read
         obs = Observation("corpus_build")
         observed = kept.observe(
             obs,
@@ -1057,80 +1028,56 @@ def build_corpus(
             F.sum((F.col("split") == "test").cast("long")).alias("test_docs"),
             F.sum(F.length("text").cast("long")).alias("chars_written"),
         )
-        _t0 = _time.perf_counter()
-        observed.write.mode("overwrite").partitionBy("split", "shard").parquet(
-            f"{out_dir}/shards"
-        )
-        stage_walls["shard_write"] = round(_time.perf_counter() - _t0, 2)
-        # observed sums over ZERO rows are null (only count is 0) — a corpus
-        # where nothing passes the gate must report zeros, not crash
+        timed("shard_write", lambda: observed.write.mode("overwrite").partitionBy(
+            "split", "shard").parquet(f"{out_dir}/shards"))
+        # observed sums over ZERO rows are null (only count is 0) — a
+        # corpus where nothing passes the gate must report zeros, not crash
         m = {k: int(v or 0) for k, v in obs.get.items()}
-        # join the overlapped writes: walls record the writes' own cost
-        # (they ran concurrently with the shard write), and .result()
-        # re-raises any background write failure here
-        if "neardup" in stages:
-            stage_walls["sig_index_write"] = sig_write_fut.result()
-        stage_walls["dataset_card"] = card_write_fut.result()
         keys = ("docs_written", "train_docs", "val_docs", "test_docs", "chars_written")
 
         # metadata rows as JVM local relations (functions/localrel.py): the
         # pickled-RDD spelling cost 5.7/5.6 s PER WRITE here — half the
         # composed build's wall — because coalesce(1) iterated 32 empty
         # Python-backed partitions serially (OPTIMIZATION_r14.md, guide §4).
-        # Round 15 (guide §2.6): the metrics/funnel writes and the
-        # n_splits/n_shards count depend only on state already in hand
-        # (m, funnel, the committed shards dir), so they run on the pool
-        # OVERLAPPED with the card_by_split read-back chain instead of as
-        # four sequential driver-blocked jobs; their futures join below
-        # (and in the finally on the error path), so every failure still
-        # surfaces here.
-        def _meta_writes():
-            t0 = _time.perf_counter()
+        # They run on the main thread: overlapped on the pool they measured
+        # no faster in an interleaved A/B at sf0.1 (CHANGES.md).
+        def meta_writes():
             local_rows_df(
                 spark,
                 [tuple(m[k] for k in keys)],
                 "docs_written long, train_docs long, val_docs long, test_docs long, chars_written long",
-            ).coalesce(1).write.mode("overwrite").parquet(
-                f"{out_dir}/build_metrics"
-            )
+            ).coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/build_metrics")
             local_rows_df(
                 spark,
                 [(i, s, docs, chars) for i, (s, docs, chars) in enumerate(funnel)],
                 "stage_no long, stage string, docs long, chars long",
             ).coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/funnel")
-            return round(_time.perf_counter() - t0, 2)
 
-        meta_fut = _submit(_meta_writes)
-        splits = shards = 0
-        _t0 = _time.perf_counter()
-        if m["docs_written"]:
+        timed("meta_writes", meta_writes)
+
+        def card_by_split():
+            if not m["docs_written"]:
+                return 0, 0
             written = spark.read.parquet(f"{out_dir}/shards")
             # one fused aggregate instead of two distinct().count() jobs —
             # split/shard are non-null partition columns, so countDistinct
             # is exactly the distinct-count the two jobs computed
-            count_fut = _submit(
-                lambda: written.agg(
-                    F.countDistinct("split").alias("n_splits"),
-                    F.countDistinct("split", "shard").alias("n_shards"),
-                ).first()
-            )
+            n = submit(lambda: written.agg(
+                F.countDistinct("split"), F.countDistinct("split", "shard")
+            ).first())
             # the extended dataset card: what was actually WRITTEN, per
             # (lang, split) — doc/char/token budget of the release
             written.groupBy("lang", "split").agg(
                 F.count(F.lit(1)).alias("n_docs"),
                 F.countDistinct("content_key").alias("n_keys"),
-                F.sum(F.size(tokens_expr(F.col("text"))).cast("long")).alias(
-                    "n_tokens"
-                ),
-            ).coalesce(1).write.mode("overwrite").parquet(
-                f"{out_dir}/dataset_card_by_split"
-            )
-            srow = count_fut.result()
-            splits, shards = srow["n_splits"], srow["n_shards"]
-        stage_walls["card_by_split"] = round(_time.perf_counter() - _t0, 2)
-        stage_walls["meta_writes"] = meta_fut.result()
-        # checkpointed stage blocks are freed by the ContextCleaner once the
-        # local references drop at return
+                F.sum(F.size(tokens_expr(F.col("text"))).cast("long")).alias("n_tokens"),
+            ).coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/dataset_card_by_split")
+            return tuple(n.result())
+
+        splits, shards = timed("card_by_split", card_by_split)
+        # every pool result is read before success is reported: a failed
+        # background write re-raises from the join below
+        wait(futs)
         built = True
         return {
             "docs_written": m["docs_written"],
@@ -1141,7 +1088,7 @@ def build_corpus(
             "test_docs": m["test_docs"],
             "chars_written": m["chars_written"],
             "funnel": {s: docs for s, docs, _ in funnel},
-            "stage_walls": stage_walls,
+            "stage_walls": walls,
         }
     finally:
         _join_background(futs, surface=built)

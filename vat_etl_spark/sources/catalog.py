@@ -90,6 +90,17 @@ def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return tables
 
 
+def hadoop_path(spark: SparkSession, path: str):
+    """``path`` qualified by the Hadoop ``FileSystem`` that serves it —
+    absolute, with scheme and authority, so ``x``, ``/abs/x`` and
+    ``file:///abs/x`` compare equal — returned with that filesystem
+    (py4j handles): the one way persisted state is located and managed
+    whether it lives on a local disk, ``file://``, s3a or hdfs."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    return fs, fs.makeQualified(p)
+
+
 def read_index(spark: SparkSession, idx_path: str, schema) -> DataFrame | None:
     """Read a persisted dedup index (the corpus gates' key, line and
     signature indexes, and ``build_corpus``'s ``neardup_sig_index``) with

@@ -50,8 +50,6 @@ pipeline_cross_source_dedup)."""
 
 from __future__ import annotations
 
-import pathlib
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -60,7 +58,7 @@ from vat_etl_spark.queries.llm_pipeline import (
     line_dedup_plan,
     reassemble_lines,
 )
-from vat_etl_spark.sources.catalog import read_index
+from vat_etl_spark.sources.catalog import hadoop_path, read_index
 
 
 def _run_gate(
@@ -204,10 +202,19 @@ def _compact_index(
     grace_seconds: float,
     partition_col: str | None = None,
 ) -> int:
-    import shutil
     import time
 
-    root = pathlib.Path(idx_path)
+    # every step goes through the Hadoop FileSystem that serves idx_path,
+    # so an s3a/hdfs/file:// out_dir is maintained like a local one
+    fs, root = hadoop_path(spark, idx_path)
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+
+    def epoch_dirs():
+        return [
+            st.getPath() for st in fs.listStatus(root)
+            if st.isDirectory() and st.getPath().getName().startswith("epoch=")
+        ]
+
     # 1. purge what a previous cycle superseded — but only if the marker is
     # older than grace_seconds. The next-cycle rule alone is not enough when
     # compaction can run twice inside one in-flight admit (its listing may
@@ -216,20 +223,17 @@ def _compact_index(
     # duration so no reader that listed before a publish can still be
     # running at purge time. Tests that quiesce the stream between cycles
     # pass 0.0 explicitly.
-    now = time.time()
-    for p in root.iterdir():
-        marker = p / _SUPERSEDED_MARKER
+    now_ms = time.time() * 1000
+    for p in epoch_dirs():
+        marker = Path(p, _SUPERSEDED_MARKER)
         if (
-            p.is_dir()
-            and p.name.startswith("epoch=")
-            and marker.exists()
-            and now - marker.stat().st_mtime >= grace_seconds
+            fs.exists(marker)
+            and now_ms - fs.getFileStatus(marker).getModificationTime()
+            >= grace_seconds * 1000
         ):
-            shutil.rmtree(p)
+            fs.delete(p, True)
     # 2. pin this cycle to a one-shot snapshot of the remaining epoch dirs
-    snapshot = [
-        p for p in root.iterdir() if p.is_dir() and p.name.startswith("epoch=")
-    ]
+    snapshot = epoch_dirs()
     if not snapshot:
         return 0
     # nothing to fold: when every remaining partition is already a
@@ -239,7 +243,7 @@ def _compact_index(
     # admit's scan until the next purge (measured: the 2.6 M-key line
     # index read 5.2 M rows per batch after a fold+refold sequence).
     # Purge-only cycles are exactly what the grace protocol wants here.
-    folded = [int(p.name.split("=", 1)[1]) for p in snapshot]
+    folded = [int(p.getName().split("=", 1)[1]) for p in snapshot]
     if len(folded) == 1 and folded[0] < 0:
         return 0
     # src_epoch provenance survives consolidation so a late replay of a
@@ -277,18 +281,15 @@ def _compact_index(
     keys.write.mode("overwrite").parquet(staging)
     keys.unpersist()
     n = spark.read.parquet(staging).count()
-    taken = {
-        int(p.name.split("=", 1)[1])
-        for p in root.iterdir()
-        if p.is_dir() and p.name.startswith("epoch=")
-    }
+    taken = {int(p.getName().split("=", 1)[1]) for p in epoch_dirs()}
     slot = -1
     while slot in taken:
         slot -= 1
     # 3. publish the consolidated partition, then mark (not delete) inputs
-    pathlib.Path(staging).rename(f"{idx_path}/epoch={slot}")
+    if not fs.rename(Path(staging), Path(root, f"epoch={slot}")):
+        raise OSError(f"could not publish {staging} into {idx_path}")
     for p in snapshot:
-        (p / _SUPERSEDED_MARKER).touch()
+        fs.create(Path(p, _SUPERSEDED_MARKER), True).close()
     return n
 
 
