@@ -32,7 +32,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import DataFrame  # noqa: E402
 
 from vat_etl_spark.queries import QUERIES  # noqa: E402
-from vat_etl_spark.session import get_spark, release_engine_caches  # noqa: E402
+from vat_etl_spark.session import get_spark, host_sizing, release_engine_caches  # noqa: E402
 
 BENCH_QUERIES = [
     "vat_summary",
@@ -253,10 +253,13 @@ def warm_keys(spark, keys: list[str], sf_dir: str, warm_dir: str | None = None) 
     listings, ANN index build) at ``warm_dir`` (default ``sf_dir``),
     caches released after each. Warming at another dir still builds the
     persisted state the timed runs at ``sf_dir`` read — the fixed LM and
-    the ANN graph index — so no timed run pays for it."""
+    the ANN graph index — so no timed run pays for it. A corpus key gets
+    a second warm run: after one, its first timed pass was still the
+    slowest in 31 of 36 qtime runs."""
     for key in keys:
-        _in_group(spark, key, lambda: run_key(spark, key, warm_dir or sf_dir))
-        release_caches(spark)
+        for _ in range(2 if key in CORPUS_KEYS else 1):
+            _in_group(spark, key, lambda: run_key(spark, key, warm_dir or sf_dir))
+            release_caches(spark)
     if warm_dir not in (None, sf_dir):
         if "corpus_build_fixed_lm" in keys:
             _bench_lm_dir(spark, sf_dir)
@@ -370,6 +373,8 @@ def main() -> None:
         "cpu_probe_sec": probe,
         "passes": n_passes,
         "sf": sf,
+        "cpus": host_sizing()[0],
+        "driver_heap": host_sizing()[1],
     }
     print(json.dumps(contract, separators=(",", ":")))
     diag = {
@@ -385,47 +390,39 @@ def main() -> None:
 def find_regressions(
     timings: dict[str, float], samples: dict[str, list[float]]
 ) -> dict[str, object]:
-    """Regression gate over the per-round bench history, robust to
-    machine drift: the box's speed shifts round-to-round (measured a
-    uniform 1.4-1.7× slowdown across UNCHANGED queries within one day),
-    so raw prior-ratio thresholds cry wolf. Normalize instead: within
-    EACH prior artifact, a query is suspect when its median-vs-prior
-    ratio exceeds 1.2× the MEDIAN ratio across that artifact's queries
-    (it shifted against that round's pack, not with it) AND even this
-    run's fastest pass is over that bar (a shift, not spread — the
-    median-vs-min distinction the r3/r4 noise adjudication established).
-    A query is FLAGGED only when it is suspect against EVERY artifact
-    that recorded it (r15 measurement fix, declared in
-    OPTIMIZATION_r15.md: the previous spelling took each key's min
-    across ALL artifacts — a franken-prior mixing each key's
-    luckiest-host round — while the pack-drift median reflected the mix,
-    so one ancient fast-host artifact could flag a key that every
-    same-host comparison showed improved). machine_drift is the pack
-    ratio vs the most recent artifact. Priors come from
-    artifacts/BENCH_r*.json; a missing artifacts dir (fresh clone)
-    degrades to no gate rather than an error."""
+    """Regression gate against the LATEST bench artifact taken on the same
+    host shape (same ``sf`` and ``cpus`` stamp; artifacts without a
+    ``cpus`` stamp predate it and never qualify): a key optimized in
+    round N is flagged the moment a later run loses the gain, and a run
+    on a 4-core host is never compared with a 32-core one. Robust to
+    machine drift: the box's speed shifts run to run (measured a uniform
+    1.4-1.7× slowdown across UNCHANGED queries within one day), so a
+    query is flagged only when its median-vs-prior ratio exceeds 1.2× the
+    MEDIAN ratio across the pack (it shifted against the pack, not with
+    it) AND even this run's fastest pass is over that bar (a shift, not
+    spread — the median-vs-min distinction the r3/r4 noise adjudication
+    established). machine_drift is that pack ratio. Priors come from
+    artifacts/BENCH_r*.json; no qualifying artifact (fresh clone, new
+    host) degrades to no gate rather than an error."""
     import glob
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
-    cur_sf = float(m.group(1)) if m else -1.0
+    host = (float(m.group(1)) if m else -1.0, host_sizing()[0])
     here = os.path.dirname(os.path.abspath(__file__))
-    priors: list[dict[str, float]] = []  # one queries-map per artifact
+    latest = None  # queries-map of the last qualifying artifact
     for path in sorted(glob.glob(os.path.join(here, "artifacts", "BENCH_r*.json"))):
         try:
             with open(path) as f:
                 d = json.load(f)
             # driver artifacts wrap the contract under "parsed"; local
-            # artifacts saved since r11 ARE the raw contract object. The
-            # old gate read only the wrapped shape, so r11-r14 priors
-            # were silently skipped (r15 — accept both shapes).
+            # artifacts ARE the raw contract object
             prior = d.get("parsed") or (d if "metric" in d else {})
         except (OSError, json.JSONDecodeError):
             continue
-        # priors from a different scale factor are not comparable: queries
-        # scale non-uniformly with data volume, so the median-drift
-        # normalization cannot absorb an sf mismatch
-        if prior.get("sf") != cur_sf:
+        # queries scale non-uniformly with data volume and cores, so the
+        # median-drift normalization cannot absorb an sf or cpus mismatch
+        if (prior.get("sf"), prior.get("cpus")) != host:
             continue
         q = {
             name: sec
@@ -433,44 +430,22 @@ def find_regressions(
             if isinstance(sec, (int, float)) and sec > 0 and name in timings
         }
         if q:
-            priors.append(q)
-    if not priors:
+            latest = q
+    if latest is None:
         return {"machine_drift": None, "flagged": {}}
-    # intersect ONLY over artifacts that recorded the key (r15 review
-    # finding: a plain all-artifact intersection permanently exempted
-    # every key absent from any one artifact — e.g. keys added after a
-    # given round — because it could never be in that artifact's suspect
-    # set). A key is flagged when suspect against EVERY artifact that
-    # recorded it.
-    recorded: dict[str, int] = {}
-    suspect: dict[str, int] = {}
-    details: dict[str, dict[str, float]] = {}
-    drift_latest = None
-    for q in priors:  # artifacts iterate in sorted (round) order
-        ratios = {name: timings[name] / q[name] for name in q}
-        drift = statistics.median(ratios.values())
-        drift_latest = drift
-        for name, ratio in ratios.items():
-            recorded[name] = recorded.get(name, 0) + 1
-            bar = 1.2 * max(1.0, drift) * q[name]
-            if timings[name] > bar and min(samples[name]) > bar:
-                suspect[name] = suspect.get(name, 0) + 1
-                # overwritten per artifact: a FLAGGED key is suspect in
-                # every artifact recording it, so what remains is the
-                # most recent comparison — the one worth triaging against
-                details[name] = {
-                    "median": timings[name],
-                    "prior_median": q[name],
-                    "ratio": round(ratio, 2),
-                    "ratio_vs_drift": round(ratio / max(1.0, drift), 2),
-                }
-    flagged_names = {
-        n for n, rec in recorded.items() if suspect.get(n, 0) == rec
-    }
-    return {
-        "machine_drift": round(drift_latest, 2),
-        "flagged": {n: details[n] for n in sorted(flagged_names)},
-    }
+    ratios = {name: timings[name] / latest[name] for name in latest}
+    drift = statistics.median(ratios.values())
+    flagged = {}
+    for name, ratio in sorted(ratios.items()):
+        bar = 1.2 * max(1.0, drift) * latest[name]
+        if timings[name] > bar and min(samples[name]) > bar:
+            flagged[name] = {
+                "median": timings[name],
+                "prior_median": latest[name],
+                "ratio": round(ratio, 2),
+                "ratio_vs_drift": round(ratio / max(1.0, drift), 2),
+            }
+    return {"machine_drift": round(drift, 2), "flagged": flagged}
 
 
 if __name__ == "__main__":

@@ -1,10 +1,9 @@
-"""Pin the round-15 regression-gate semantics (bench.find_regressions):
-suspects are computed per prior artifact (drift = that artifact's pack
-median) and a key is flagged only when suspect against EVERY artifact
-that recorded it — one ancient fast-host artifact can no longer flag a
-key that every other comparison shows improved (the r15 false positive:
-dedup_minhash_banded vs a probe-less r11 wall). Also pins bench's pass
-loop: no engine cache crosses a run boundary."""
+"""Pin the regression-gate semantics (bench.find_regressions): a key is
+judged against the latest artifact of the same sf and core count only —
+one ancient fast-host artifact can no longer flag a key that the recent
+comparison shows improved (the r15 false positive: dedup_minhash_banded
+vs a probe-less r11 wall). Also pins bench's pass loop: no engine cache
+crosses a run boundary."""
 
 from __future__ import annotations
 
@@ -21,12 +20,14 @@ from vat_etl_spark.session import release_engine_caches
 
 # the gate reads the scale factor from the env: pin it, never inherit it
 SF_DIR = "/root/testdata/sf0.1"
+# and compares only artifacts stamped with this host's core count
+CPUS = bench.host_sizing()[0]
 
 
-def _write(tmp_path, name, queries):
+def _write(tmp_path, name, queries, cpus=CPUS):
     p = tmp_path / name
     p.write_text(
-        json.dumps({"metric": "m", "sf": 0.1, "queries": queries})
+        json.dumps({"metric": "m", "sf": 0.1, "cpus": cpus, "queries": queries})
     )
     return str(p)
 
@@ -90,9 +91,19 @@ def test_gate_skips_mismatched_sf(tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_SF_DIR", SF_DIR)
     p1 = tmp_path / "BENCH_r01.json"
     p1.write_text(
-        json.dumps({"metric": "m", "sf": 0.01, "queries": {"x": 0.1}})
+        json.dumps({"metric": "m", "sf": 0.01, "cpus": CPUS, "queries": {"x": 0.1}})
     )
     monkeypatch.setattr(glob, "glob", lambda pat: [str(p1)])
+    out = bench.find_regressions({"x": 1.0}, {"x": [1.0]})
+    assert out == {"machine_drift": None, "flagged": {}}
+
+
+def test_gate_skips_other_host_cpus(tmp_path, monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", SF_DIR)
+    # x looks 10x regressed against an artifact from a host with another
+    # core count; that artifact is not a comparable prior
+    p1 = _write(tmp_path, "BENCH_r01.json", {"x": 0.1}, cpus=CPUS + 28)
+    monkeypatch.setattr(glob, "glob", lambda pat: [p1])
     out = bench.find_regressions({"x": 1.0}, {"x": [1.0]})
     assert out == {"machine_drift": None, "flagged": {}}
 

@@ -5,6 +5,9 @@ partitionings."""
 
 from __future__ import annotations
 
+import pytest
+
+from vat_etl_spark.operators import neardup
 from vat_etl_spark.queries import QUERIES
 
 
@@ -81,7 +84,7 @@ def test_minhash_banded_deterministic_and_complete_vs_exact(spark, sf_smoke):
     assert recall >= 0.9, (recall, len(truth), len(got))
 
 
-def test_identical_sig_cluster_survives_bucket_cap(spark, monkeypatch):
+def _minhash_cluster(spark, monkeypatch):
     """Round-12 ADVICE regression pin: a cluster of IDENTICAL docs larger
     than the bucket cap must keep every within-cluster pair. Identical
     docs share all band keys, so pre-fix every one of the cluster's
@@ -92,7 +95,7 @@ def test_identical_sig_cluster_survives_bucket_cap(spark, monkeypatch):
     see it) and its pairs are emitted through the membership expansion."""
     import vat_etl_spark.queries.dedup as D
 
-    monkeypatch.setattr(D, "_MHB_BUCKET_CAP", 5)
+    monkeypatch.setattr(neardup, "BUCKET_CAP", 5)
     rows = [(i, ["alpha beta gamma", "beta gamma delta"]) for i in range(20)]
     rows += [
         (100 + i, [f"u{i}a x y", f"x y u{i}b", f"y u{i}b z"])
@@ -106,37 +109,89 @@ def test_identical_sig_cluster_survives_bucket_cap(spark, monkeypatch):
     assert not missing, f"cap dropped {len(missing)} identical-cluster pairs"
 
 
-def test_minhash_banded_bucket_cap_dormant_at_oracle_scale(spark, sf_smoke):
-    """The round-11 hot-bucket skew guard (_MHB_BUCKET_CAP) must NEVER
-    fire at oracle scale: the driver gate proves the banded query equal
-    to the all-pairs exact truth at sf0.001/0.01, and that proof is only
-    about the b×r amplification if no bucket was silently dropped. The
-    cap exists for the 5 M-doc regime (measured 12 K-doc degenerate
-    buckets, SCALE.md round-11); here every bucket must sit far under it."""
-    from pyspark.sql import functions as F
+def _phash_cluster(spark, monkeypatch):
+    """Round-14 twin of the text path's round-12 pin: a cluster of
+    IDENTICAL payloads larger than the band-bucket cap must keep every
+    within-cluster pair. Identical payloads share all 8 band words, so a
+    doc-grain cap would trip every one of the cluster's buckets AT ONCE
+    and silently lose all its pairs; the signature-grain collapse makes
+    the cluster occupy ONE bucket slot (invisible to the cap) and emits
+    its pairs through the membership expansion at hamming 0."""
+    import vat_etl_spark.queries.multimodal as M
+    from vat_etl_spark.operators.multimodal import attach_payload
 
+    monkeypatch.setattr(neardup, "BUCKET_CAP", 3)
+    boiler = "the same boilerplate payload repeated verbatim " * 4
+    rows = [(i, boiler) for i in range(10)]
+    # distinct fillers, byte-structured so signatures differ
+    rows += [(100 + i, f"unique filler {i} " + "x" * (40 + 7 * i)) for i in range(12)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {
+        (r.doc_a, r.doc_b): r.hamming
+        for r in M._phash_near_dup_pairs(attach_payload(docs)).collect()
+    }
+    cluster = {(a, b) for a in range(10) for b in range(a + 1, 10)}
+    missing = cluster - set(got)
+    assert not missing, f"cap dropped {len(missing)} identical-cluster pairs"
+    for p in cluster:
+        assert got[p] == 0, p
+
+
+@pytest.mark.parametrize("case", [_minhash_cluster, _phash_cluster], ids=["minhash", "phash"])
+def test_identical_cluster_survives_bucket_cap(spark, monkeypatch, case):
+    case(spark, monkeypatch)
+
+
+def _minhash_banded(spark, sf_smoke):
+    """The round-11 hot-bucket skew guard must NEVER fire at oracle
+    scale: the driver gate proves the banded query equal to the all-pairs
+    exact truth at sf0.001/0.01, and that proof is only about the b×r
+    amplification if no bucket was silently dropped. The cap exists for
+    the 5 M-doc regime (measured 12 K-doc degenerate buckets, SCALE.md
+    round-11); here every bucket must sit far under it."""
     from vat_etl_spark.queries.dedup import (
-        _MHB_BUCKET_CAP,
-        _band_membership,
         _hashed_sets,
+        _minhash_bands,
         _minhash_sig_frame,
         _shingle_docsets,
-        _sig_reps,
+        _sig_slim,
     )
 
     # The PRODUCTION signature/grouping/banding helpers — not an inline
     # re-implementation — so a seed, key-layout, or R/B change reaches
     # this pin automatically (round-12 ADVICE).
     hashed = _hashed_sets(_shingle_docsets(spark, sf_smoke))
-    reps = _sig_reps(_minhash_sig_frame(hashed))
+    slim = _sig_slim(_minhash_sig_frame(hashed))
+    return _minhash_bands(slim, neardup.elect(slim, ["k1", "k2"])[0]), ["bk"]
+
+
+def _phash_banded(spark, sf_smoke):
+    """The pHash cap must NEVER fire at oracle scale: the driver gate
+    proves the banded query equal to DuckDB's uncapped all-pairs twin at
+    sf0.001/0.01, and that proof is only about the banding if no bucket
+    was silently dropped. The cap exists for the 5 M-doc hot-bucket
+    regime (MULTIMODAL_DECADE_r13: 103 M uncapped candidates); here every
+    signature-grain bucket must sit far under it."""
+    from vat_etl_spark.operators.multimodal import attach_payload, perceptual_hash
+    from vat_etl_spark.queries.multimodal import _phash_band_explode
+    from vat_etl_spark.sources.catalog import read_table
+
+    docs = read_table(spark, sf_smoke, "documents")
+    grp, _ = neardup.elect(perceptual_hash(attach_payload(docs)), ["bands"])
+    # the PRODUCTION join-band explode (fused 64-bit keys at tau=3), so a
+    # band-layout change reaches this pin automatically
+    return _phash_band_explode(grp, tau=3), ["band_no", "band_key"]
+
+
+@pytest.mark.parametrize("bands", [_minhash_banded, _phash_banded], ids=["minhash", "phash"])
+def test_bucket_cap_dormant_at_oracle_scale(spark, sf_smoke, bands):
+    from pyspark.sql import functions as F
+
+    banded, bucket = bands(spark, sf_smoke)
     max_bucket = (
-        _band_membership(reps, id_col="srep")
-        .groupBy("bk")
-        .count()
-        .agg(F.max("count"))
-        .collect()[0][0]
+        banded.groupBy(*bucket).count().agg(F.max("count")).collect()[0][0]
     )
-    assert max_bucket <= _MHB_BUCKET_CAP // 4, max_bucket
+    assert max_bucket <= neardup.BUCKET_CAP // 4, max_bucket
 
 
 def test_simhash_deterministic_and_64bit(spark, sf_smoke):

@@ -374,66 +374,6 @@ def test_registered_multimodal_keyframes_query(spark, sf_smoke, mm):
     assert 0 < n_key < n_all
 
 
-def test_phash_identical_sig_cluster_survives_bucket_cap(spark, monkeypatch):
-    """Round-14 twin of the text path's round-12 pin: a cluster of
-    IDENTICAL payloads larger than the band-bucket cap must keep every
-    within-cluster pair. Identical payloads share all 8 band words, so a
-    doc-grain cap would trip every one of the cluster's buckets AT ONCE
-    and silently lose all its pairs; the signature-grain collapse makes
-    the cluster occupy ONE bucket slot (invisible to the cap) and emits
-    its pairs through the membership expansion at hamming 0."""
-    import vat_etl_spark.queries.multimodal as M
-    from vat_etl_spark.operators.multimodal import attach_payload
-
-    monkeypatch.setattr(M, "_PHASH_BUCKET_CAP", 3)
-    boiler = "the same boilerplate payload repeated verbatim " * 4
-    rows = [(i, boiler) for i in range(10)]
-    # distinct fillers, byte-structured so signatures differ
-    rows += [(100 + i, f"unique filler {i} " + "x" * (40 + 7 * i)) for i in range(12)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        (r.doc_a, r.doc_b): r.hamming
-        for r in M._phash_near_dup_pairs(attach_payload(docs)).collect()
-    }
-    cluster = {(a, b) for a in range(10) for b in range(a + 1, 10)}
-    missing = cluster - set(got)
-    assert not missing, f"cap dropped {len(missing)} identical-cluster pairs"
-    for p in cluster:
-        assert got[p] == 0, p
-
-
-def test_phash_bucket_cap_dormant_at_oracle_scale(spark, sf_smoke):
-    """_PHASH_BUCKET_CAP must NEVER fire at oracle scale: the driver gate
-    proves the banded query equal to DuckDB's uncapped all-pairs twin at
-    sf0.001/0.01, and that proof is only about the banding if no bucket
-    was silently dropped. The cap exists for the 5 M-doc hot-bucket
-    regime (MULTIMODAL_DECADE_r13: 103 M uncapped candidates); here every
-    signature-grain bucket must sit far under it. Uses the PRODUCTION
-    helpers so a signature/band-layout change reaches this pin."""
-    from pyspark.sql import functions as F
-
-    from vat_etl_spark.operators.multimodal import attach_payload
-    from vat_etl_spark.queries.multimodal import (
-        _PHASH_BUCKET_CAP,
-        _phash_band_explode,
-        _phash_sig_groups,
-    )
-    from vat_etl_spark.sources.catalog import read_table
-
-    docs = read_table(spark, sf_smoke, "documents")
-    _, grp = _phash_sig_groups(attach_payload(docs))
-    # the PRODUCTION join-band explode (fused 64-bit keys at tau=3), so a
-    # band-layout change reaches this pin automatically
-    max_bucket = (
-        _phash_band_explode(grp, tau=3)
-        .groupBy("band_no", "band_key")
-        .count()
-        .agg(F.max("count"))
-        .collect()[0][0]
-    )
-    assert max_bucket <= _PHASH_BUCKET_CAP // 4, max_bucket
-
-
 def test_phash_fallback_band_grain_for_tau_above_3(spark):
     """tau in (3, 7] must fall back to the 8x32-bit join grain (the fused
     4x64 grain is only pigeonhole-lossless to hamming 3): detection at

@@ -1,6 +1,6 @@
 """Skew-stress the banded-MinHash bucket cap IN ITS ACTIVE REGIME.
 
-The dormant-cap pytest proves _MHB_BUCKET_CAP never fires at oracle
+The dormant-cap pytest proves BUCKET_CAP never fires at oracle
 scale, and the round-11 5 M decade saw it fire on only ~2 buckets — so
 the claim "the cap costs ~no recall" had no receipt from the regime it
 defends against (verdict-r11 task 5). This harness generates a corpus
@@ -43,19 +43,19 @@ import pyspark.sql.functions as F  # noqa: E402
 
 from tools.gen_fuzzy_corpus import generate  # noqa: E402
 from vat_etl_spark.queries import QUERIES  # noqa: E402
+from vat_etl_spark.operators.neardup import BUCKET_CAP, elect  # noqa: E402
 from vat_etl_spark.queries.dedup import (  # noqa: E402
-    _MHB_BUCKET_CAP,
-    _band_membership,
     _hashed_sets,
+    _minhash_bands,
     _minhash_sig_frame,
     _shingle_docsets,
-    _sig_reps,
+    _sig_slim,
     _verify_common_tokens,
 )
 from vat_etl_spark.session import get_spark  # noqa: E402
 
 _N_CLUSTERS = 3
-_CLUSTER_SIZE = 1500  # > _MHB_BUCKET_CAP: pre-fix these lost ALL pairs
+_CLUSTER_SIZE = 1500  # > BUCKET_CAP: pre-fix these lost ALL pairs
 
 
 def _append_identical_clusters(corpus: str, n_docs: int, seed: int) -> int:
@@ -110,21 +110,21 @@ def main() -> None:
 
     # --- bucket histogram: how active is the cap, and what does it save?
     hashed = _hashed_sets(_shingle_docsets(spark, corpus)).persist()
-    reps = _sig_reps(_minhash_sig_frame(hashed))
+    slim = _sig_slim(_minhash_sig_frame(hashed))
     hist = (
-        _band_membership(reps, id_col="srep")
+        _minhash_bands(slim, elect(slim, ["k1", "k2"])[0])
         .groupBy("bk")
         .agg(F.count("*").alias("c"))
         .persist()
     )
     stats = hist.agg(
         F.count("*").alias("n_buckets"),
-        F.count(F.when(F.col("c") > _MHB_BUCKET_CAP, 1)).alias("n_hot"),
+        F.count(F.when(F.col("c") > BUCKET_CAP, 1)).alias("n_hot"),
         F.max("c").alias("max_bucket"),
         F.sum(F.expr("c * (c - 1) / 2")).alias("pairs_uncapped"),
         F.sum(
             F.when(
-                F.col("c") <= _MHB_BUCKET_CAP, F.expr("c * (c - 1) / 2")
+                F.col("c") <= BUCKET_CAP, F.expr("c * (c - 1) / 2")
             ).otherwise(F.lit(0))
         ).alias("pairs_capped"),
     ).collect()[0]
@@ -184,7 +184,7 @@ def main() -> None:
         "n_docs": n_docs + n_cluster_docs,
         "zipf_alpha": alpha,
         "vocab_size": vocab,
-        "bucket_cap": _MHB_BUCKET_CAP,
+        "bucket_cap": BUCKET_CAP,
         "n_buckets": int(stats.n_buckets),
         "n_buckets_over_cap": int(stats.n_hot),
         "max_bucket_distinct_sigs": int(stats.max_bucket),

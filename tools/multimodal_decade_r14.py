@@ -10,7 +10,7 @@ and record what they changed:
   PRODUCTION band explode (sum C(sz,2) over kept buckets + the gsz>1
   within-group pairs) — r13's 32-bit-grain join measured 1.03 M → 103 M
   (exponent ≈2.0/decade); target ≤ ~1.3;
-- buckets over _PHASH_BUCKET_CAP per scale (expected 0 on this corpus —
+- buckets over BUCKET_CAP per scale (expected 0 on this corpus —
   the cap's ACTIVE-regime receipt is tools/phash_capstress.py).
 
 Protocol: one session, untimed 50 K warm pass, one timed noop-write per
@@ -37,16 +37,14 @@ def _candidate_stats(spark, sf_dir: str) -> dict:
     """Histogram arithmetic over the PRODUCTION join-band explode: kept
     (capped) candidate mass, hypothetical uncapped mass, buckets over
     cap, within-group (identical-signature) pair mass."""
-    from vat_etl_spark.operators.multimodal import attach_payload
-    from vat_etl_spark.queries.multimodal import (
-        _PHASH_BUCKET_CAP,
-        _phash_band_explode,
-        _phash_sig_groups,
-    )
+    from vat_etl_spark.operators.multimodal import attach_payload, perceptual_hash
+    from vat_etl_spark.operators.neardup import BUCKET_CAP, elect
+    from vat_etl_spark.queries.multimodal import _phash_band_explode
     from vat_etl_spark.sources.catalog import read_table
 
     docs = read_table(spark, sf_dir, "documents")
-    sigs, grp = _phash_sig_groups(attach_payload(docs))
+    sigs = perceptual_hash(attach_payload(docs)).select("doc_id", "bands").persist()
+    grp, _ = elect(sigs, ["bands"])
     bk = (
         _phash_band_explode(grp, tau=3)
         .groupBy("band_no", "band_key")
@@ -55,13 +53,13 @@ def _candidate_stats(spark, sf_dir: str) -> dict:
     r = bk.agg(
         F.sum(
             F.when(
-                F.col("count") <= _PHASH_BUCKET_CAP,
+                F.col("count") <= BUCKET_CAP,
                 F.expr("count*(count-1)/2"),
             ).otherwise(0)
         ).alias("kept"),
         F.sum(F.expr("count*(count-1)/2")).alias("uncapped"),
         F.sum(
-            F.when(F.col("count") > _PHASH_BUCKET_CAP, 1).otherwise(0)
+            F.when(F.col("count") > BUCKET_CAP, 1).otherwise(0)
         ).alias("over"),
         F.max("count").alias("max_bucket"),
     ).collect()[0]

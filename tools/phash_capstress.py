@@ -1,7 +1,7 @@
 """Stress the pHash band-bucket cap IN ITS ACTIVE REGIME (verdict-r13
 task 1's recall receipt; the multimodal twin of tools/mhb_capstress.py).
 
-The dormancy pytest proves _PHASH_BUCKET_CAP never fires at oracle
+The dormancy pytest proves BUCKET_CAP never fires at oracle
 scale, and the seed-7 decade corpus never trips it even at 5 M docs
 (MULTIMODAL_DECADE_r14) — so the claim "the cap costs ~no recall" needs
 a corpus where it actually fires. This harness builds one:
@@ -52,7 +52,7 @@ import bench  # noqa: E402
 from tools.gen_fuzzy_corpus import generate  # noqa: E402
 
 _N_CLUSTERS = 3
-_CLUSTER_SIZE = 1500  # > _PHASH_BUCKET_CAP
+_CLUSTER_SIZE = 1500  # > BUCKET_CAP
 _PAD_BASE_ID = 10_000_000
 _CLUSTER_BASE_ID = 20_000_000
 _TAU = 3
@@ -132,12 +132,11 @@ def main() -> None:
         generate(corpus, n_base, seed=7)
         _write_extra(corpus, n_padded, seed=7)
 
-    from vat_etl_spark.operators.multimodal import attach_payload
+    from vat_etl_spark.operators.multimodal import attach_payload, perceptual_hash
+    from vat_etl_spark.operators.neardup import BUCKET_CAP, elect
     from vat_etl_spark.queries.multimodal import (
-        _PHASH_BUCKET_CAP,
         _phash_band_explode,
         _phash_near_dup_pairs,
-        _phash_sig_groups,
     )
     from vat_etl_spark.session import get_spark
     from vat_etl_spark.sources.catalog import read_table
@@ -149,7 +148,8 @@ def main() -> None:
     mm = attach_payload(docs)
 
     # --- bucket histogram: is the cap ACTIVE, and what did it save? ---
-    sigs, grp = _phash_sig_groups(mm)
+    sigs = perceptual_hash(mm).select("doc_id", "bands").persist()
+    grp, _ = elect(sigs, ["bands"])
     hist = (
         _phash_band_explode(grp, tau=_TAU)
         .groupBy("band_no", "band_key")
@@ -157,13 +157,13 @@ def main() -> None:
         .agg(
             F.sum(
                 F.when(
-                    F.col("count") <= _PHASH_BUCKET_CAP,
+                    F.col("count") <= BUCKET_CAP,
                     F.expr("count*(count-1)/2"),
                 ).otherwise(0)
             ).alias("kept"),
             F.sum(F.expr("count*(count-1)/2")).alias("uncapped"),
             F.sum(
-                F.when(F.col("count") > _PHASH_BUCKET_CAP, 1).otherwise(0)
+                F.when(F.col("count") > BUCKET_CAP, 1).otherwise(0)
             ).alias("over"),
             F.max("count").alias("max_bucket"),
         )

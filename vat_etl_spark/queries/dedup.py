@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from vat_etl_spark.functions.localrel import local_rows_df
+from vat_etl_spark.operators.neardup import drop_hot, elect, expand
 from vat_etl_spark.queries import QUERIES, query
 from vat_etl_spark.queries.text import tokens_expr
 from vat_etl_spark.sources.catalog import read_table as _t
@@ -277,26 +278,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _MHB_BANDS = 15
 _MHB_ROWS = 3
-# Skew guard: a band bucket holding more DISTINCT SIGNATURES than this is
-# degenerate (the band carries ~no information for its members — at 5 M
-# Zipfian docs the R=2 scheme produced 12 K-doc buckets = 72 M junk pairs
-# EACH) and is dropped from candidate generation. The cap counts
-# signature-grain representatives, NOT docs (_sig_reps collapses
-# identical-signature clusters to one banded rep first), so the one case
-# where per-band drops are perfectly correlated — a >CAP cluster of
-# exact dups / J≈1 boilerplate sharing all B band keys — can never trip
-# it: such a cluster occupies ONE slot per bucket and its pairs are
-# emitted via the membership expansion regardless of the cap. For the
-# sig-DISTINCT members that remain, band keys are driven by different
-# min-hash coordinates, so a pair that loses k buckets to the cap keeps
-# its other B−k chances and the residual miss probability is bounded by
-# (1−J^R)^(B−k) ≈ 3e-5 at the planted-twin J≈0.82 even at k=2 — an
-# upper bound on correlated drops too, since a pair collapsed by EVERY
-# capped band is sig-identical and immune by construction. pytest pins
-# that the cap never fires at oracle scale (all-pairs contract intact)
-# and the skew-stress harness (tools/mhb_capstress.py) measures recall
-# with the cap ACTIVE on 100+ buckets.
-_MHB_BUCKET_CAP = 1000
 
 _MHB_SQL = r"""
 WITH w AS (
@@ -432,7 +413,7 @@ def dedup_minhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     enough once hot shingles dominate the per-seed argmin: bucket
     membership grows ∝N, pair volume ∝N². Fixed three ways at once:
     {R}=3 bands (J³ collision — 40× fewer candidates at 5 M, measured),
-    a {CAP}-doc bucket cap (see _MHB_BUCKET_CAP), and the signature
+    a bucket cap (operators/neardup.py), and the signature
     computation moved from {NH} interpreted higher-order transforms to
     one explode + whole-stage-codegen min(xxhash64) aggregation whose
     map-side partial collapse shuffles exactly one row per doc.
@@ -492,32 +473,6 @@ def dedup_minhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("jaccard") >= 0.6)
 
 
-def _banded_minhash_candidates(docsets: DataFrame) -> DataFrame:
-    """Candidate (doc_a, doc_b) pairs from the b×r banded MinHash index —
-    the candidate GENERATOR of dedup_minhash_banded, split out so the
-    stratified recall audit (dedup_lsh_recall_eval) can A/B it against
-    the ml.feature generator on identical shingle sets.
-
-    Signature computation is ONE explode + hash-aggregate: min over
-    xxhash64(shingle, seed) per seed, all inside whole-stage codegen —
-    the previous spelling ({NH} separate higher-order array transforms)
-    ran on the interpreted expression path and was the dominant linear
-    cost of the whole query (measured ~7 min of a 5 M-doc run just for
-    signatures+counts at 45 hashes). Partial aggregation collapses the
-    exploded rows map-side, so the shuffle is one {NH}-long row per doc.
-
-    Skew guard: buckets holding more than {CAP} distinct signatures are
-    dropped (a partial-aggregated count + anti-join since round 15 — no
-    task ever buffers a bucket, so a degenerate bucket cannot become a
-    straggler before its rows are dropped). A bucket
-    that large means the band's {R}-hash key
-    has degenerated on hot shingles and carries ~no pair information;
-    its members keep their other B−1 band chances. Without the cap the
-    two ~1 900-doc buckets left at 5 M docs still contribute 3.6 M junk
-    pairs of the 9.4 M total (measured, SCALE.md round-11)."""
-    return _banded_minhash_candidates_ids(_hashed_sets(docsets))
-
-
 def _minhash_sig_frame(hashed: DataFrame) -> DataFrame:
     """(doc_id, h0..h{NH-1}): the per-doc MinHash signature vector as one
     explode + whole-stage-codegen min(xxhash64) hash-aggregate (partial
@@ -552,7 +507,7 @@ def _band_keys_sql() -> str:
     """The {B}-element banded (AND-OR) bucket-key array as a SQL
     expression string — xxhash64 over each band's {R} consecutive sigs.
     The banding layout lives here and nowhere else (_sig_slim bakes it
-    into the slim frame; _band_membership explodes it)."""
+    into the slim frame; _minhash_bands explodes it)."""
     keys = ", ".join(
         f"xxhash64({b}, "
         + ", ".join(f"h{b * _MHB_ROWS + r}" for r in range(_MHB_ROWS))
@@ -583,136 +538,52 @@ def _sig_slim(sigs: DataFrame) -> DataFrame:
     )
 
 
-def _sig_grp(slim: DataFrame) -> DataFrame:
-    """(k1, k2, srep, gsz): one row per DISTINCT signature, electing the
-    min-doc_id member as the group's banding representative. Aggregates
-    only the 24-byte (doc_id, k1, k2) projection (map-side partial
-    collapse; nothing {NH}-wide shuffles — a round-12 window spelling
-    over the fat frame measured +150 s at 5 M docs and was rejected).
-    Groups are singletons except exact-dup / J≈1 boilerplate clusters,
-    which is the point."""
-    return (
-        slim.select("doc_id", "k1", "k2")
-        .groupBy("k1", "k2")
-        .agg(F.min("doc_id").alias("srep"), F.count("*").alias("gsz"))
-    )
-
-
-def _sig_reps(sigs: DataFrame) -> DataFrame:
-    """(srep, bks): the signature-grain banding representatives — one per
-    distinct signature vector, carrying its banded bucket keys. The
-    composition the dormant-cap pytest pin and the skew-stress harness
-    run, built from the SAME _sig_slim/_sig_grp helpers as the
-    production generator so a seed/key-layout change reaches them
-    automatically. Production inlines the same pieces (it reuses the
-    slim frame and the group table for membership expansion)."""
-    slim = _sig_slim(sigs)
-    grp = _sig_grp(slim)
-    return slim.join(
-        grp.select(F.col("srep").alias("doc_id")), "doc_id"
-    ).select(F.col("doc_id").alias("srep"), "bks")
-
-
-def _band_membership(slim: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(id_col, bk): one row per banded bucket key — the explode of the
-    ``bks`` array _sig_slim / _sig_reps carry (layout in _band_keys).
-    Shared by the production generator, the dormant-cap pytest pin, and
-    the skew-stress harness."""
-    return slim.select(id_col, F.explode("bks").alias("bk"))
-
-
-def _banded_minhash_candidates_ids(hashed: DataFrame) -> DataFrame:
-    """_banded_minhash_candidates over an ALREADY-HASHED id frame
-    (doc_id, ts: array<long>) — min-wise hashing over the 64-bit shingle
-    ids is min-wise hashing over the shingle set (the id mapping is a
-    bijection up to the collision bound documented in _hashed_sets), and
-    it lets the expensive interpreted string-shingle transform run
-    exactly once per doc upstream: Catalyst pushes the explode's
-    inferred size(ts)>0 filter below the fan-out repartition into the
-    single-row-group scan, which re-evaluates the full shingle pipeline
-    per doc on ONE core when ts is still the string expression (measured
-    9 s of an 11 s sf0.1 wall). Over a persisted id frame the filter is
-    a size() on a materialized array.
-
-    Round-12 hardening (identical-signature clusters vs the bucket cap):
-    docs whose FULL {NH}-hash signature vectors are identical share all
-    {B} band keys, so a >CAP cluster of exact dups / J≈1 boilerplate
-    would blow every one of its band buckets AT ONCE — the per-band
-    independence behind the cap's (1−J^{R})^(B−k) recall bound fails and
-    the whole cluster would silently lose every pair. Fixed structurally:
-    docs are first collapsed to SIGNATURE-GRAIN representatives
-    (_sig_slim/_sig_grp — narrow-key shuffles only), only representatives are banded,
-    and the cap counts DISTINCT SIGNATURES per bucket. Identical-sig
-    clusters of any size occupy one bucket slot and can never trip the
-    cap; their member pairs are emitted directly (every within-group pair
-    is a candidate — at {NH} hashes an all-sig collision implies
-    J^{NH}-level similarity, so these are near-certain true pairs and the
-    candidate volume is output-volume-bound, each still exactly
-    verified). Representative pairs from banding expand back through the
-    doc→rep membership map; doc→rep is functional, so each doc pair
-    appears exactly once and the distinct() runs at the (small) rep-pair
-    grain, not the expanded doc-pair grain.
-
-    Round-13 constant shave (driver flagged the r12 spelling at 2.09 s
-    median vs 0.63 s prior at sf0.1): per-job profiling showed executor
-    work finished by +1.0 s of a 3.0 s pass — the other ~2 s was
-    DRIVER-SIDE Catalyst/AQE re-planning of a DAG carrying the fat
-    {NH}-column signature frame through every join (84 exchanges, 8
-    sort-merge joins in the final plan). Fixed structurally: the group
-    keys AND the banded bucket keys are computed in one narrow
-    projection directly over the min-hash aggregate (_sig_slim), so the
-    persisted/joined frame is 4 columns; representative election is ONE
-    narrow (doc_id,k1,k2) aggregate plus ONE join-back of the rep-id
-    list onto the already-doc_id-partitioned slim cache (the r12
-    spelling aggregated, joined membership back on (k1,k2), then joined
-    THAT to the fat frame); and the membership map is restricted to
-    gsz>1 groups, which is EMPTY on corpora without exact-signature dups
-    — so the expansion joins are LEFT joins against a frame AQE sizes at
-    ~0 bytes and broadcasts; singleton reps expand to themselves via
-    coalesce. Semantics are identical: same reps, same cap grain, same
-    within-group pairs — pinned by the cap-override pytest, the
-    capstress pair count, and the unchanged oracle hashes at both
-    driver SFs."""
-    # persisted ONCE, 4 columns: consumed by the rep-election aggregate
-    # (narrow projection), the rep join-back (arrives already
-    # hash-partitioned on doc_id from the min-hash aggregate — only the
-    # rep-id list moves), and the dup-membership slice. Nothing
-    # {NH}-columns wide ever enters a join, shuffle, or persist.
-    slim = _sig_slim(_minhash_sig_frame(hashed)).persist()
-    grp = _sig_grp(slim)
+def _minhash_bands(slim: DataFrame, grp: DataFrame) -> DataFrame:
+    """(srep, bk): one row per banded bucket key of each signature-grain
+    representative — ONE join-back of the elected rep-id list onto the
+    slim frame (it arrives already hash-partitioned on doc_id from the
+    min-hash aggregate, so only the rep-id list moves), then the explode
+    of its ``bks`` array (layout in _band_keys_sql)."""
     reps = slim.join(
         grp.select(F.col("srep").alias("doc_id")), "doc_id"
     ).select(F.col("doc_id").alias("srep"), "bks")
-    # NOT persisted (round-13): banded is consumed three times (hot-key
-    # count and both sides of the bucket self-join), but every consumer
-    # recomputes it as a narrow explode over the slim CACHE and the
-    # grp/reps joins dedupe via AQE ReusedExchange — while a persist
-    # layer here measured ~0.4 s of fixed per-pass overhead at sf0.1
-    # (cache registration + TableCacheQueryStage jobs + the deepened
-    # cached-plan DAG serialized into every task). Same for dup below.
-    banded = _band_membership(reps, id_col="srep")
-    # bucket cap as a partial-aggregated count + anti-join (round 15,
-    # guide §2.5; replaces the round-13 count-window): the window spelling
-    # buffered EVERY row of a band bucket in one task's window buffer —
-    # exactly the degenerate-skew bucket the cap exists to neutralise
-    # became a single straggler/OOM task before its rows could be
-    # dropped. groupBy does map-side partial aggregation, so no task ever
-    # holds more than one (bk, partial-count) row per bucket; the hot
-    # list is structurally ≤ rows/CAP entries, so AQE broadcasts the
-    # anti-join when it is small (the normal case: EMPTY at oracle scale)
-    # and falls back to an SMJ anti-join — which AQE skew-join CAN split,
-    # unlike a window — if a pathological corpus makes it big. The hot
-    # bucket's rows are dropped BEFORE the self-join's bk shuffle, so the
-    # degenerate bucket never lands in any downstream task either. Same
-    # keep predicate (count <= CAP ⟺ not count > CAP), pairs identical —
-    # pinned by the cap-override pytest and tools/mhb_capstress.py.
-    hot = (
-        banded.groupBy("bk")
-        .count()
-        .filter(F.col("count") > _MHB_BUCKET_CAP)
-        .select("bk")
-    )
-    kept = banded.join(hot, "bk", "left_anti").persist()
+    return reps.select("srep", F.explode("bks").alias("bk"))
+
+
+def _banded_minhash_candidates_ids(hashed: DataFrame) -> DataFrame:
+    """Candidate (doc_a, doc_b) pairs from the b×r banded MinHash index
+    over an ALREADY-HASHED id frame (doc_id, ts: array<long>) — the
+    candidate GENERATOR of dedup_minhash_banded, split out so the
+    stratified recall audit (dedup_lsh_recall_eval) can A/B it against
+    the ml.feature generator on identical shingle sets. Election, bucket
+    cap and member expansion are the shared near-dup protocol
+    (operators/neardup.py); the signature, the {B}×{R} band layout and
+    the exact Jaccard verify (downstream, at doc grain) are this path's.
+
+    Min-wise hashing over the 64-bit shingle ids is min-wise hashing
+    over the shingle set (the id mapping is a bijection up to the
+    collision bound documented in _hashed_sets), and it lets the
+    expensive interpreted string-shingle transform run exactly once per
+    doc upstream: Catalyst pushes the explode's inferred size(ts)>0
+    filter below the fan-out repartition into the single-row-group scan,
+    which re-evaluates the full shingle pipeline per doc on ONE core when
+    ts is still the string expression (measured 9 s of an 11 s sf0.1
+    wall). Over a persisted id frame the filter is a size() on a
+    materialized array."""
+    # persisted ONCE, 4 columns: consumed by the rep-election aggregate
+    # (narrow projection), the rep join-back and the dup-membership
+    # slice. Nothing {NH}-columns wide ever enters a join, shuffle, or
+    # persist (round 13: the fat frame made driver-side Catalyst/AQE
+    # re-planning ~2 s of a 3 s sf0.1 pass).
+    slim = _sig_slim(_minhash_sig_frame(hashed)).persist()
+    grp, dup = elect(slim, ["k1", "k2"])
+    # banded is NOT persisted (round 13): every consumer recomputes it as
+    # a narrow explode over the slim CACHE and the grp join dedupes via
+    # AQE ReusedExchange, while a persist layer here measured ~0.4 s of
+    # fixed per-pass overhead at sf0.1 (cache registration +
+    # TableCacheQueryStage jobs + the deepened cached-plan DAG serialized
+    # into every task).
+    kept = drop_hot(_minhash_bands(slim, grp), ["bk"])
     rep_cands = (
         kept.alias("a")
         .join(
@@ -723,59 +594,20 @@ def _banded_minhash_candidates_ids(hashed: DataFrame) -> DataFrame:
         .select(F.col("a.srep").alias("ra"), F.col("b.srep").alias("rb"))
         .distinct()
     )
-    # doc→rep membership, RESTRICTED to duplicated-signature groups —
-    # empty on dup-free corpora, output-volume-bound on boilerplate ones
-    dup = (
-        slim.select("doc_id", "k1", "k2")
-        .join(
-            grp.filter(F.col("gsz") > 1).select("k1", "k2", "srep"),
-            ["k1", "k2"],
-        )
-        .select("srep", "doc_id")
-        .persist()
-    )
-    ma = dup.select(F.col("srep").alias("ra"), F.col("doc_id").alias("da"))
-    mb = dup.select(F.col("srep").alias("rb"), F.col("doc_id").alias("db"))
-    # expansion: LEFT joins against the (normally empty) dup slice — AQE
-    # sizes it at ~0 bytes and broadcasts; singleton reps expand to
-    # themselves via coalesce. doc→rep is functional, so each doc pair
-    # appears exactly once.
-    cross = (
-        rep_cands.join(ma, "ra", "left")
-        .withColumn("da", F.coalesce("da", "ra"))
-        .join(mb, "rb", "left")
-        .withColumn("db", F.coalesce("db", "rb"))
-    )
-    within = ma.join(
-        mb,
-        (F.col("ra") == F.col("rb")) & (F.col("da") < F.col("db")),
-    )
-    return cross.select(
-        F.least("da", "db").alias("doc_a"),
-        F.greatest("da", "db").alias("doc_b"),
-    ).unionByName(
-        within.select(
-            F.col("da").alias("doc_a"), F.col("db").alias("doc_b")
-        )
-    )
+    return expand(rep_cands, dup.persist())
 
 
 for _fn in (
     dedup_minhash_banded,
-    _banded_minhash_candidates,
     _banded_minhash_candidates_ids,
     _minhash_sig_frame,
     _band_keys_sql,
     _sig_slim,
-    _sig_grp,
-    _sig_reps,
-    _band_membership,
 ):
     _fn.__doc__ = (
         _fn.__doc__.replace("{B}", str(_MHB_BANDS))
         .replace("{R}", str(_MHB_ROWS))
         .replace("{NH}", str(_MHB_BANDS * _MHB_ROWS))
-        .replace("{CAP}", str(_MHB_BUCKET_CAP))
     )
 
 
@@ -969,59 +801,34 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     (test_dedup_determinism.py, test_streaming.py).
 
     SKEW GUARD (same discipline as the gate): the banded join and the
-    Hamming verify run at DISTINCT-SIGNATURE grain, then qualifying
-    signature pairs expand back to doc pairs through the signature→docs
-    mapping. On near-dup-saturated data identical signatures are the hot
-    case (the testdata's planted token-shuffle twins hash IDENTICAL), so
-    doc-grain banding re-verifies the same signature pair once per doc
-    pair and a popular boilerplate signature makes its 16-bit band bucket
-    quadratic in DOCS; signature-grain banding is quadratic only in
-    distinct signatures per bucket, and the doc-level fan-out is
-    output-bound by construction."""
+    Hamming verify run at DISTINCT-SIGNATURE grain (election and member
+    expansion: operators/neardup.py). On near-dup-saturated data
+    identical signatures are the hot case (the testdata's planted
+    token-shuffle twins hash IDENTICAL), so doc-grain banding would
+    re-verify the same signature pair once per doc pair and a popular
+    boilerplate signature would make its 16-bit band bucket quadratic in
+    DOCS. Uncapped: a cap on 16-bit band keys would break the pigeonhole
+    losslessness at scale."""
     # re-read the export so the pair plan and the oracle share one input
     # (and the signature job runs once, not once per banded branch)
     sig = spark.read.parquet(_export_simhash_sigs(spark, sf_dir)).select(
         "doc_id", "simhash"
     )
-    usig = sig.select("simhash").distinct()
-    bands = usig.select("simhash", _sim_bands(F.col("simhash"))).select(
-        "simhash", "b.band_no", "b.band_key"
-    )
-    other = bands.select(
-        F.col("simhash").alias("sim_b"), "band_no", "band_key"
-    )
-    hamming = F.bit_count(F.col("simhash").bitwiseXOR(F.col("sim_b")))
-    sig_pairs = (
+    grp, _ = elect(sig, ["simhash"])
+    bands = grp.select(F.col("simhash").alias("ra"), _sim_bands(F.col("simhash")))
+    bands = bands.select("ra", "b.band_no", "b.band_key")
+    other = bands.select(F.col("ra").alias("rb"), "band_no", "band_key")
+    hamming = F.bit_count(F.col("ra").bitwiseXOR(F.col("rb")))
+    rep_pairs = (
         bands.join(other, ["band_no", "band_key"])
-        .where((F.col("simhash") < F.col("sim_b")) & (hamming <= _NEARDUP_T))
-        .select("simhash", "sim_b", hamming.cast("int").alias("hamming"))
+        .where((F.col("ra") < F.col("rb")) & (hamming <= _NEARDUP_T))
+        .select("ra", "rb", hamming.cast("int").alias("hamming"))
         .distinct()
     )
-    # inter-signature doc pairs: expand each qualifying signature pair
-    # through the signature→docs mapping (output-bound fan-out)
-    a = sig.select(F.col("doc_id").alias("id_a"), "simhash")
-    b = sig.select(F.col("doc_id").alias("id_b"), F.col("simhash").alias("sim_b"))
-    inter = (
-        sig_pairs.join(a, "simhash")
-        .join(b, "sim_b")
-        .select(
-            F.least("id_a", "id_b").alias("doc_a"),
-            F.greatest("id_a", "id_b").alias("doc_b"),
-            "hamming",
-        )
-    )
-    # intra-signature doc pairs (Hamming 0): co-grouped self-join on the
-    # signature itself — never through a band bucket
-    intra = (
-        a.join(b, F.col("simhash") == F.col("sim_b"))
-        .where(F.col("id_a") < F.col("id_b"))
-        .select(
-            F.col("id_a").alias("doc_a"),
-            F.col("id_b").alias("doc_b"),
-            F.lit(0).alias("hamming"),
-        )
-    )
-    return inter.unionByName(intra)
+    # the signature itself names its group and every doc is a member:
+    # the expansion joins the sig read directly (no join back to grp)
+    members = sig.select(F.col("simhash").alias("srep"), "doc_id")
+    return expand(rep_pairs, members, hamming=F.lit(0))
 
 
 def _sim_bands(sig_col):
@@ -1649,8 +1456,8 @@ def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_truth = truth.count()
     generators = {
-        "banded": _banded_minhash_candidates(
-            sh.withColumnRenamed("shingles", "ts")
+        "banded": _banded_minhash_candidates_ids(
+            _hashed_sets(sh.withColumnRenamed("shingles", "ts"))
         ),
         "ml_reference": _ml_minhash_candidates(spark, sf_dir),
     }

@@ -9,7 +9,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vat_etl_spark.operators.asof import asof_join
-from vat_etl_spark.operators.multimodal import attach_payload, extract_features
+from vat_etl_spark.operators.multimodal import (
+    attach_payload,
+    extract_features,
+    perceptual_hash,
+)
+from vat_etl_spark.operators.neardup import drop_hot, elect, expand
 from vat_etl_spark.queries import query
 from vat_etl_spark.sources.catalog import read_table as _t
 
@@ -401,12 +406,9 @@ def multimodal_dedup_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     curve): the JOIN blocks on 4 fused 64-bit keys (_PHASH_JOIN_FUSED —
     squares the per-band collision probability; candidates 103 M → 26 K
     at 5 M docs, exponent 2.0 → 1.27/decade, still pigeonhole-lossless
-    at tau=3), and join buckets are CAPPED at signature grain
-    (_PHASH_BUCKET_CAP) with identical-signature clusters collapsed to
-    one banding representative first so exact-dup clusters can never
-    trip the cap. Cap dormant at oracle scale (pytest) and on the 5 M
-    decade corpus; active-regime recall measured on a boilerplate-padded
-    corpus in tools/phash_capstress.py.
+    at tau=3), and join buckets are CAPPED at signature grain (the
+    near-dup protocol, operators/neardup.py). Cap dormant at oracle
+    scale (pytest) and on the 5 M decade corpus.
 
     On the synthetic testdata this returns ZERO rows and that is the
     correct answer: the corpus's near-dups are token SHUFFLES, which
@@ -416,20 +418,6 @@ def multimodal_dedup_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     return _phash_near_dup_pairs(attach_payload(docs))
 
-
-# Hot-bucket guard for the pHash band join, at SIGNATURE grain (distinct
-# 256-bit signatures per (band_no, band_key) bucket). Same treatment as the
-# text path (_MHB_BUCKET_CAP, dedup.py): count-window on the band shuffle,
-# identical-signature clusters collapsed to one representative FIRST so an
-# exact-dup cluster occupies one bucket slot and can never trip the cap
-# (its member pairs — all hamming 0 — are emitted directly). Recall bound
-# under the cap: a pair at hamming ≤ tau can lose at most tau of its
-# join bands to flipped bits (pigeonhole), so with k join bands it is lost
-# only if ALL of its ≥ k−tau clean buckets are over cap — measured in the
-# ACTIVE-cap regime on a boilerplate-padded corpus with planted variants in
-# tools/phash_capstress.py. Dormant at oracle scale (pytest-pinned), so
-# the sf0.01/0.1 oracle twins stay exact.
-_PHASH_BUCKET_CAP = 1000
 
 # JOIN granularity (round 14, verdict-r13 task 1): candidates are blocked
 # on FUSED 64-bit keys (adjacent 32-bit signature words packed into one
@@ -448,24 +436,6 @@ _PHASH_BUCKET_CAP = 1000
 # unchanged; only Spark's join key fuses. For 3 < tau ≤ 7 the join falls
 # back to the 8×32 grain (lossless ≤ 7).
 _PHASH_JOIN_FUSED = 4
-
-
-def _phash_sig_groups(mm: DataFrame):
-    """(sigs, grp): the persisted (doc_id, bands) signature frame and its
-    signature-grain group table (bands, srep, gsz) — one row per DISTINCT
-    256-bit signature, electing the min-doc_id member as the banding
-    representative. The group key IS the signature (8×32-bit band words,
-    64 bytes — narrow enough to shuffle directly; no hash-key indirection
-    needed, unlike the text path's 45-column frame). The mapInPandas byte
-    pass runs once into the persist; every downstream consumer (rep
-    election, band join, membership expansion) reads the cache."""
-    from vat_etl_spark.operators.multimodal import perceptual_hash
-
-    sigs = perceptual_hash(mm).select("doc_id", "bands").persist()
-    grp = sigs.groupBy("bands").agg(
-        F.min("doc_id").alias("srep"), F.count("*").alias("gsz")
-    )
-    return sigs, grp
 
 
 def _phash_hamming(sig_a, sig_b):
@@ -506,28 +476,6 @@ def _phash_band_explode(grp: DataFrame, tau: int) -> DataFrame:
     raise ValueError(f"tau={tau} exceeds the 8-band pigeonhole bound (7)")
 
 
-def _phash_banded_reps(grp: DataFrame, tau: int) -> DataFrame:
-    """Join-band membership of the signature-grain representatives,
-    bucket-capped skew-safely (round 15, guide §2.5): a partial-aggregated
-    groupBy count finds >_PHASH_BUCKET_CAP buckets (no task ever buffers a
-    bucket — the round-14 count-window held every row of a degenerate
-    bucket in ONE task's window buffer, turning the exact skew the cap
-    exists to neutralise into a straggler), and a left-anti join against
-    that structurally tiny hot list (≤ rows/CAP entries; EMPTY at oracle
-    scale, AQE-broadcast when small, AQE-skew-splittable SMJ when not)
-    drops the hot buckets BEFORE the self-join's band-key shuffle. Same
-    keep predicate (count <= CAP ⟺ not count > CAP), pairs identical —
-    pinned by the cap-override pytest and tools/phash_capstress.py."""
-    banded = _phash_band_explode(grp, tau)
-    hot = (
-        banded.groupBy("band_no", "band_key")
-        .count()
-        .filter(F.col("count") > _PHASH_BUCKET_CAP)
-        .select("band_no", "band_key")
-    )
-    return banded.join(hot, ["band_no", "band_key"], "left_anti").persist()
-
-
 def _phash_rep_cands(grp: DataFrame, tau: int) -> DataFrame:
     """(ra, rb, hamming): Hamming-verified near-dup pairs at the
     signature-representative grain — bucket-capped band-keyed equi-join,
@@ -536,7 +484,7 @@ def _phash_rep_cands(grp: DataFrame, tau: int) -> DataFrame:
     sig_a/sig_b directly (re-deriving them via joins back to the sig
     frame re-ran the corpus-sized byte pass up to 4× pre-persist;
     post-persist it would still be two extra shuffles)."""
-    kept = _phash_banded_reps(grp, tau)
+    kept = drop_hot(_phash_band_explode(grp, tau), ["band_no", "band_key"])
     a = kept.select(
         F.col("srep").alias("ra"),
         F.col("bands").alias("sig_a"),
@@ -562,53 +510,20 @@ def _phash_rep_cands(grp: DataFrame, tau: int) -> DataFrame:
 
 def _phash_near_dup_pairs(mm: DataFrame, tau: int = 3) -> DataFrame:
     """Shared detection core: signature extraction → signature-grain
-    collapse → bucket-capped band-keyed equi-join → exact Hamming
-    verification → membership expansion. (doc_a, doc_b, hamming),
-    doc_a < doc_b.
-
-    Round-14 structure (verdict-r13 task 1): docs are first collapsed to
-    one representative per DISTINCT signature (identical-sig docs share
-    all 8 band words, so a >CAP exact-dup cluster would otherwise blow
-    every one of its buckets at once and silently lose all its pairs —
-    the same failure the text path fixed in round 12); only
-    representatives are banded; the cap counts distinct signatures per
-    bucket; within-group pairs (hamming 0 ≤ tau by construction) are
-    emitted directly, output-volume-bound; representative pairs expand
-    back through the doc→rep membership map restricted to gsz>1 groups —
-    EMPTY on dup-free corpora, so the expansion joins are LEFT joins
-    against a frame AQE sizes at ~0 bytes and broadcasts; singleton reps
-    expand to themselves via coalesce. Cross-group members share their
-    group's signature, so the rep pair's verified hamming is exact for
-    every expanded doc pair. doc→rep is functional: each doc pair appears
-    exactly once, no post-expansion distinct needed."""
-    sigs, grp = _phash_sig_groups(mm)
-    rep_cands = _phash_rep_cands(grp, tau)
-    dup = (
-        sigs.join(grp.filter(F.col("gsz") > 1).select("bands", "srep"), "bands")
-        .select("srep", "doc_id")
-        .persist()
-    )
-    ma = dup.select(F.col("srep").alias("ra"), F.col("doc_id").alias("da"))
-    mb = dup.select(F.col("srep").alias("rb"), F.col("doc_id").alias("db"))
-    cross = (
-        rep_cands.join(ma, "ra", "left")
-        .withColumn("da", F.coalesce("da", "ra"))
-        .join(mb, "rb", "left")
-        .withColumn("db", F.coalesce("db", "rb"))
-    )
-    within = ma.join(
-        mb, (F.col("ra") == F.col("rb")) & (F.col("da") < F.col("db"))
-    )
-    return cross.select(
-        F.least("da", "db").alias("doc_a"),
-        F.greatest("da", "db").alias("doc_b"),
-        "hamming",
-    ).unionByName(
-        within.select(
-            F.col("da").alias("doc_a"),
-            F.col("db").alias("doc_b"),
-            F.lit(0).cast("long").alias("hamming"),
-        )
+    election → bucket-capped band-keyed equi-join → exact Hamming
+    verification → member expansion (the near-dup protocol,
+    operators/neardup.py). (doc_a, doc_b, hamming), doc_a < doc_b.
+    Members of a group share its signature, so the rep pair's verified
+    hamming is exact for every expanded doc pair, and within-group pairs
+    sit at hamming 0 ≤ tau by construction."""
+    # the group key IS the signature (8×32-bit band words, 64 bytes —
+    # narrow enough to shuffle directly, unlike the text path's 45-column
+    # frame); the mapInPandas byte pass runs once into the persist, and
+    # election, band join and expansion all read the cache
+    sigs = perceptual_hash(mm).select("doc_id", "bands").persist()
+    grp, dup = elect(sigs, ["bands"])
+    return expand(
+        _phash_rep_cands(grp, tau), dup.persist(), hamming=F.lit(0).cast("long")
     )
 
 

@@ -34,6 +34,13 @@ def _sizing(cpus_env: str | None, heap_env: str | None) -> tuple[int, str]:
     return cpus, heap
 
 
+def host_sizing() -> tuple[int, str]:
+    """(cores, driver heap) every session this process builds gets."""
+    return _sizing(
+        os.environ.get("SPARK_GRAFT_CPUS"), os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    )
+
+
 def get_spark(
     app_name: str = "vat_etl_spark",
     shuffle_partitions: int | None = None,
@@ -45,9 +52,7 @@ def get_spark(
     cluster you would size this to ~2-3x total executor cores or simply
     rely on AQE coalescing (enabled here) to shrink the default.
     """
-    cpus, heap = _sizing(
-        os.environ.get("SPARK_GRAFT_CPUS"), os.environ.get("SPARK_GRAFT_DRIVER_MEM")
-    )
+    cpus, heap = host_sizing()
     if shuffle_partitions is None:
         shuffle_partitions = cpus
     builder = (
@@ -65,6 +70,10 @@ def get_spark(
         # exists to kill, without tripping that helper's loud fallback.
         # With fallback disabled, an Arrow-incompatible type raises inside
         # local_rows_df's try and takes ITS logged fallback path instead.
+        # The same holds for the two toPandas() sites, whose schemas are
+        # Arrow-native (sinks.write_xlsx: string/double;
+        # dedup._export_simhash_sigs: long/long): a future non-Arrow
+        # column there raises loudly instead of degrading to pickle.
         .config("spark.sql.execution.arrow.pyspark.fallback.enabled", "false")
         .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
