@@ -44,6 +44,31 @@ def test_summary_csv_to_sqlite(spark, tmp_path, capsys):
     assert "Jan 2024" in out  # period mapping printed
 
 
+def test_vat_sheet_construction_round_trips(spark, tmp_path):
+    """Building a quarter's plans (3 × load_transactions + the box summary)
+    stays within a fixed budget of py4j round trips: the kernels reach the
+    JVM as SQL text in one call each, and the CSV header is read as file
+    metadata. Built from Column objects, the same plans cost ~11,000."""
+    import gc
+
+    from vat_etl_spark.app import load_transactions
+    from vat_etl_spark.operators.vat_summary import vat_box_summary
+    from vat_etl_spark.plans import py4j_round_trips
+
+    paths = []
+    for i, month in enumerate(("Jan", "Feb", "Mar"), 1):
+        p = tmp_path / f"{month} 2024.csv"
+        p.write_text(CSV.replace("/01/2024", f"/{i:02d}/2024"))
+        paths.append(str(p))
+    gc.collect()
+    with py4j_round_trips(spark) as trips:
+        frames = [load_transactions(spark, p) for p in paths]
+        tx = frames[0].unionByName(frames[1]).unionByName(frames[2])
+        summary = vat_box_summary(tx)
+    assert trips.n <= 1000, trips.n
+    assert summary.count() == 12
+
+
 def test_query_runner_and_list(spark, sf_smoke, capsys):
     main(["query", "q1_pricing_summary", "--sf-dir", sf_smoke, "--explain"], spark=spark)
     out = capsys.readouterr().out

@@ -31,7 +31,7 @@ GOLDEN = [
 
 def _run(spark, fn, values):
     df = spark.createDataFrame([(v,) for v in values], "raw string")
-    return [r.out for r in df.select(fn(F.col("raw")).alias("out")).collect()]
+    return [r.out for r in df.selectExpr(f"{fn('raw')} AS out").collect()]
 
 
 @pytest.mark.parametrize("fn", [currency_to_aed, currency_to_aed_exact])
@@ -105,9 +105,9 @@ def test_registered_pandas_udf_currency_matches_native(spark, sf_smoke):
     raw_mixed = F.concat(sym, F.format_string("%.2f", F.col("s_acctbal")))
     want = {
         r.s_suppkey: r.aed
-        for r in supplier.select(
-            "s_suppkey", currency_to_aed_exact(raw_mixed).alias("aed")
-        ).collect()
+        for r in supplier.select("s_suppkey", raw_mixed.alias("raw"))
+        .selectExpr("s_suppkey", f"{currency_to_aed_exact('raw')} AS aed")
+        .collect()
     }
     assert set(got) == set(want) and len(got) > 0
     for k in got:
@@ -125,8 +125,10 @@ def test_registered_pandas_udf_currency_matches_native(spark, sf_smoke):
     rows = supplier.select(
         "s_suppkey",
         udf(raw_usd).alias("udf_aed"),
-        F.round(currency_to_aed(raw_usd), 2).alias("native_aed"),
+        raw_usd.alias("raw"),
         (F.pmod(cents * 367, F.lit(100)) == 50).alias("is_tie"),
+    ).selectExpr(
+        "s_suppkey", "udf_aed", f"round({currency_to_aed('raw')}, 2) AS native_aed", "is_tie"
     ).collect()
     n_tie = sum(1 for r in rows if r.is_tie)
     for r in rows:

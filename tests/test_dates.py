@@ -5,7 +5,6 @@ from __future__ import annotations
 
 from datetime import datetime
 
-from pyspark.sql import functions as F
 
 from vat_etl_spark.functions.dates import parse_date_compat
 
@@ -25,7 +24,8 @@ CASES_COMPAT = [
 def _parse(spark, values, sane=False):
     df = spark.createDataFrame([(v,) for v in values], "raw string")
     return [
-        r.out for r in df.select(parse_date_compat(F.col("raw"), sane=sane).alias("out")).collect()
+        r.out
+        for r in df.selectExpr(f"{parse_date_compat('raw', sane=sane)} AS out").collect()
     ]
 
 

@@ -8,8 +8,8 @@ from __future__ import annotations
 import datetime as dt
 
 import pandas as pd
+import pytest
 from hypothesis import given, settings, strategies as st
-from pyspark.sql import functions as F
 
 from vat_etl_spark.functions.dates import parse_date_compat
 
@@ -26,7 +26,7 @@ def model(text):
 def spark_parse(spark, values):
     df = spark.createDataFrame([(v,) for v in values], "raw string")
     return [
-        r.out for r in df.select(parse_date_compat(F.col("raw")).alias("out")).collect()
+        r.out for r in df.selectExpr(f"{parse_date_compat('raw')} AS out").collect()
     ]
 
 
@@ -56,3 +56,49 @@ def test_garbage_never_raises_and_nulls_match_contract(spark, texts):
     # unparseable → NULL (never an exception, even under ANSI mode)
     got = spark_parse(spark, texts)
     assert len(got) == len(texts)
+
+
+# --- separator gate soundness ------------------------------------------------
+# parse_date_compat tries each format only on strings holding the format's
+# literal separator. The reference below tries every format on every string;
+# the two must agree everywhere.
+
+_TOKENS = (
+    [str(d) for d in range(10)]
+    + ["01", "12", "13", "29", "31", "00", "99", "2024", "1997", "0000", "45000"]
+    + ["/", "-", ".", " ", ",", ", ", "+", "--", "\t", "  "]
+    + ["Jan", "jan", "MAR", "March", "Sept", "September", "May", "Dec", "December"]
+)
+date_like = st.lists(
+    st.one_of(st.sampled_from(_TOKENS), st.integers(0, 99999).map(str)), max_size=7
+).map("".join)
+
+
+def ungated_parse(expr: str, sane: bool) -> str:
+    """The cascade without separator gates, as Spark SQL text."""
+    from vat_etl_spark.functions.dates import _COMPAT_FORMATS, _SANE_FORMATS
+
+    text = f"trim(CAST(({expr}) AS STRING))"
+    num = f"try_cast({text} AS DOUBLE)"
+    fmts = _SANE_FORMATS if sane else _COMPAT_FORMATS
+    tries = ", ".join(f"try_to_timestamp({text}, '{f}')" for f in fmts)
+    return (
+        f"CASE WHEN ({expr}) IS NULL THEN NULL"
+        f" WHEN {num} > 1 AND {num} < 60000"
+        f" THEN to_timestamp(date_add(DATE'1899-12-30', CAST(floor({num}) AS INT)))"
+        f" ELSE get(filter(array(coalesce({tries})), t -> year(t) BETWEEN 1 AND 9999), 0)"
+        " END"
+    )
+
+
+@pytest.mark.parametrize("sane", [False, True])
+@settings(max_examples=30, deadline=None)
+@given(texts=st.lists(date_like, min_size=1, max_size=40))
+def test_separator_gate_matches_ungated_cascade(spark, sane, texts):
+    df = spark.createDataFrame([(v,) for v in texts], "raw string")
+    rows = df.selectExpr(
+        "raw",
+        f"{parse_date_compat('raw', sane=sane)} AS gated",
+        f"{ungated_parse('raw', sane)} AS ref",
+    ).collect()
+    assert [(r.raw, r.gated) for r in rows] == [(r.raw, r.ref) for r in rows]

@@ -410,6 +410,19 @@ def test_docs_fanout_noops_on_parallel_scan(spark, sf_smoke, tmp_path):
     assert fanned1.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
 
 
+@pytest.mark.parametrize("parallelism", [1, 2, 3, 4, 32])
+def test_docs_fanout_rule(parallelism):
+    """A single-split scan is re-split on every multi-core session (2 and 3
+    cores included); a scan with at least half the cores' worth of splits
+    (and at least 2) is left alone; one core never re-splits."""
+    from vat_etl_spark.queries.dedup import _fanout_needed
+
+    assert _fanout_needed(1, parallelism) == (parallelism > 1)
+    enough = max(parallelism // 2, 2)
+    assert not _fanout_needed(enough, parallelism)
+    assert _fanout_needed(enough - 1, parallelism) == (parallelism > 1)
+
+
 def test_soundex_sql_twin_matches_spark_soundex(spark):
     """The portable-SQL soundex the phonetic oracle inlines must equal
     F.soundex EXACTLY — fuzzed over random words plus the classic

@@ -12,8 +12,10 @@ of timing a 500 K one), $SPARK_GRAFT_BENCH_PASSES (default 5),
 $SPARK_GRAFT_CPUS. Prints one JSON line: the probe, the dirs, the pass
 count, the sum of the medians, and per key the wall samples with their
 median/min/max, an untimed row count (docs written for a corpus key),
-the Spark jobs and stages per timed pass in the key's job group, and for
-a corpus key the last build's funnel and stage walls. A decade exponent is log10 of the ratio of two runs' medians.
+the Spark jobs and stages per timed pass in the key's job group, for any
+other key the py4j round trips of building its plan once (the
+construction layer), and for a corpus key the last build's funnel and
+stage walls. A decade exponent is log10 of the ratio of two runs' medians.
 NOT the driver bench contract — iteration tooling only.
 """
 
@@ -27,6 +29,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
+from vat_etl_spark.plans import py4j_round_trips  # noqa: E402
 from vat_etl_spark.session import get_spark  # noqa: E402
 from vat_etl_spark.sources.catalog import load_tables  # noqa: E402
 
@@ -68,7 +71,10 @@ def main() -> None:
             row["funnel"] = records[k]["funnel"]
             row["stage_walls"] = records[k]["stage_walls"]
         else:
-            row["rows"] = bench.key_plan(spark, k, sf_dir).count()
+            with py4j_round_trips(spark) as trips:
+                plan = bench.key_plan(spark, k, sf_dir)
+            row["round_trips"] = trips.n
+            row["rows"] = plan.count()
             bench.release_caches(spark)
         out[k] = row
     print(

@@ -30,17 +30,23 @@ def load_transactions(
     are read distributed as all-string columns, the sheet normalizer's
     input, and the file stem plays the sheet-name role (it carries the
     reporting month, as sheet names do in the reference's workbooks)."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
     from vat_etl_spark.functions.headers import canonical_rename
+    from vat_etl_spark.functions.sqltext import ident
+    from vat_etl_spark.sources.catalog import csv_header
     from vat_etl_spark.sources.excel import normalize_vat_sheet, read_workbook
 
     ext = os.path.splitext(path)[1].lower()
     if ext == ".xlsx":
         return read_workbook(spark, path, compat=compat, as_of_year=as_of_year)
     if ext == ".csv":
-        raw = spark.read.option("header", "true").csv(path)
+        # the header is read as file metadata, so no inference job runs
+        schema = StructType([StructField(c, StringType()) for c in csv_header(spark, path)])
+        raw = spark.read.schema(schema).option("header", "true").csv(path)
     elif ext in (".parquet", ""):
         raw = spark.read.parquet(path)
-        raw = raw.select([F.col(c).cast("string").alias(c) for c in raw.columns])
+        raw = raw.selectExpr(*[f"CAST({ident(c)} AS STRING) AS {ident(c)}" for c in raw.columns])
     else:
         raise ValueError(f"unsupported input format {ext!r} (xlsx, csv, parquet)")
     renamed = raw.toDF(*canonical_rename(raw.columns))

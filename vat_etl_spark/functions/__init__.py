@@ -1,6 +1,8 @@
-"""Scalar function library — native Column expressions only (no Python UDFs
-on the hot path). Each reproduces a reference scalar function (SURVEY.md §2.3)
-as a Catalyst-visible expression tree that stays inside whole-stage codegen.
+"""Scalar function library — native expressions only (no Python UDFs on the
+hot path). Each reproduces a reference scalar function (SURVEY.md §2.3) as a
+Catalyst-visible expression tree that stays inside whole-stage codegen. The
+currency and date kernels are Spark SQL text (:mod:`.sqltext`), applied with
+one ``F.expr``/``selectExpr`` call.
 """
 
 from vat_etl_spark.functions.currency import CURRENCY_RATES, currency_to_aed

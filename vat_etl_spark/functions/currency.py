@@ -27,14 +27,16 @@ The reference applies this per cell via ``Series.apply`` (a row-at-a-time
 Python UDF — the slowest possible path, one interpreter round-trip per cell).
 Here it is a ``CASE WHEN`` chain + regexp + try_cast: fully JVM-side,
 whole-stage-codegen'd, and expressible in ANSI SQL for the DuckDB oracle.
+The Spark spelling is rendered as SQL text and reaches the JVM in one call
+(:mod:`vat_etl_spark.functions.sqltext`); the ``*_sql`` functions are the
+DuckDB twins the oracle checks it against.
 At 100 TB this is the difference between a scan-speed pipeline and a
 Python-bound one.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from vat_etl_spark.functions.sqltext import str_lit
 
 # Insertion order matters: detection is first-match-in-this-order (quirk Q3).
 CURRENCY_RATES: dict[str, float] = {
@@ -55,60 +57,55 @@ CURRENCY_RATES: dict[str, float] = {
 _CLEAN_RE = r"[^0-9\.\-\(\)]"  # ASCII digits only (matches the SQL oracle path)
 
 
-def _rate_expr(text: Column) -> Column:
-    """First-substring-match-in-dict-order rate; default 1.0 (AED)."""
-    rate: Column | None = None
-    for symbol, r in CURRENCY_RATES.items():
-        cond = text.contains(F.lit(symbol))
-        rate = F.when(cond, F.lit(r)) if rate is None else rate.when(cond, F.lit(r))
-    assert rate is not None
-    return F.coalesce(rate, F.lit(1.0))
+def _convert(expr: str, num_type: str, zero: str, rate_lit) -> str:
+    """Shared shape of both Spark spellings: ``round(number * rate, 2)``,
+    NULL input → 0.0. ``expr`` is Spark SQL text (e.g. a backquoted
+    column); the number parses as ``num_type`` (``zero`` when it fails,
+    quirk Q6) and ``rate_lit`` renders a rate literal."""
+    text = f"trim(CAST(({expr}) AS STRING))"
+    # strip to [0-9.-()], then accounting-paren negation
+    cleaned = f"regexp_replace({text}, {str_lit(_CLEAN_RE)}, '')"
+    unparen = (
+        f"CASE WHEN startswith({cleaned}, '(') AND endswith({cleaned}, ')')"
+        f" AND length({cleaned}) >= 2"
+        f" THEN concat('-', substr({cleaned}, 2, length({cleaned}) - 2))"
+        f" ELSE {cleaned} END"
+    )
+    num = f"coalesce(try_cast({unparen} AS {num_type}), {zero})"
+    # first substring match in dict order wins (quirk Q3); default AED
+    rate_cases = " ".join(
+        f"WHEN contains({text}, {str_lit(sym)}) THEN {rate_lit(r)}"
+        for sym, r in CURRENCY_RATES.items()
+    )
+    rate = f"coalesce(CASE {rate_cases} END, {rate_lit(1.0)})"
+    out = f"round({num} * {rate}, 2)"
+    if num_type != "DOUBLE":
+        out = f"CAST({out} AS DOUBLE)"
+    return f"CASE WHEN ({expr}) IS NULL THEN 0.0D ELSE {out} END"
 
 
-def parse_messy_number(col: Column) -> Column:
-    """Numeric part of a messy money string: strip to ``[0-9.\\-()]``,
-    accounting-paren negation, failed parse → 0.0 (quirk Q6)."""
-    text = F.trim(col.cast("string"))
-    cleaned = F.regexp_replace(text, _CLEAN_RE, "")
-    unparen = F.when(
-        cleaned.startswith("(") & cleaned.endswith(")") & (F.length(cleaned) >= 2),
-        F.concat(F.lit("-"), cleaned.substr(F.lit(2), F.length(cleaned) - 2)),
-    ).otherwise(cleaned)
-    return F.coalesce(unparen.try_cast("double"), F.lit(0.0))
+def currency_to_aed(expr: str) -> str:
+    """Full compat conversion as Spark SQL text over the SQL text ``expr``:
+    detect rate, parse number, ``round(·, 2)``. NULL input → 0.0
+    (reference: ``pd.isna → 0.0``). Apply with ``F.expr``/``selectExpr``.
+
+    Doubles are written ``1.0D``: a bare ``3.67`` is a DECIMAL literal in
+    Spark SQL."""
+    return _convert(expr, "DOUBLE", "0.0D", lambda r: f"{r!r}D")
 
 
-def currency_to_aed(col: Column) -> Column:
-    """Full compat conversion: detect rate, parse number, ``round(·, 2)``.
-
-    NULL input → 0.0 (reference: ``pd.isna → 0.0``).
-    """
-    text = F.trim(col.cast("string"))
-    amount = parse_messy_number(col) * _rate_expr(text)
-    return F.when(col.isNull(), F.lit(0.0)).otherwise(F.round(amount, 2))
-
-
-def currency_to_aed_exact(col: Column) -> Column:
+def currency_to_aed_exact(expr: str) -> str:
     """Exact-decimal variant for cross-engine verification: parse the cleaned
     string straight into DECIMAL(18,4) (strings parse exactly — no binary
     float detour), multiply by a DECIMAL rate, round(2), cast double. Same
     observable semantics as :func:`currency_to_aed` whenever the numeric part
     has ≤4 decimal places; bit-identical between Spark and DuckDB."""
-    text = F.trim(col.cast("string"))
-    cleaned = F.regexp_replace(text, _CLEAN_RE, "")
-    unparen = F.when(
-        cleaned.startswith("(") & cleaned.endswith(")") & (F.length(cleaned) >= 2),
-        F.concat(F.lit("-"), cleaned.substr(F.lit(2), F.length(cleaned) - 2)),
-    ).otherwise(cleaned)
-    num = F.coalesce(unparen.try_cast("decimal(18,4)"), F.lit(0).cast("decimal(18,4)"))
-    rate: Column | None = None
-    for symbol, r in CURRENCY_RATES.items():
-        cond = text.contains(F.lit(symbol))
-        rv = F.lit(str(r)).cast("decimal(10,4)")
-        rate = F.when(cond, rv) if rate is None else rate.when(cond, rv)
-    assert rate is not None
-    rate = F.coalesce(rate, F.lit("1.0").cast("decimal(10,4)"))
-    out = F.round(num * rate, 2).cast("double")
-    return F.when(col.isNull(), F.lit(0.0)).otherwise(out)
+    return _convert(
+        expr,
+        "DECIMAL(18,4)",
+        "CAST(0 AS DECIMAL(18,4))",
+        lambda r: f"CAST('{r}' AS DECIMAL(10,4))",
+    )
 
 
 def currency_to_aed_exact_sql(expr: str) -> str:

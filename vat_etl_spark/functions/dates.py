@@ -17,8 +17,9 @@ mode the engine's own surface should use.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+import re
+
+from vat_etl_spark.functions.sqltext import str_lit
 
 # Try-formats, in pandas-dayfirst precedence order. try_to_timestamp returns
 # NULL on mismatch, so coalesce implements the cascade.
@@ -50,41 +51,54 @@ _SANE_FORMATS = [
 ]
 
 
-def excel_serial_to_date(col: Column) -> Column:
-    """Excel serial number → timestamp from epoch 1899-12-30 (int-truncated
-    days, matching the reference's ``int(val)``)."""
-    days = F.floor(col).cast("int")
-    return F.to_timestamp(F.date_add(F.to_date(F.lit("1899-12-30")), days))
+def _separator(fmt: str) -> str:
+    """The longest literal (non-letter) run of a format: ``/``, ``-``,
+    ``.``, a space or ``, ``. A pattern's literals must appear verbatim in
+    any string it parses, so a string without this run cannot parse."""
+    return max(re.findall(r"[^A-Za-z]+", fmt), key=len)
 
 
-def parse_date_compat(col: Column, sane: bool = False) -> Column:
-    """Parse a polymorphic (string-typed) date column.
+def excel_serial_to_date(num: str) -> str:
+    """Excel serial number (SQL text) → timestamp from epoch 1899-12-30
+    (int-truncated days, matching the reference's ``int(val)``)."""
+    return f"to_timestamp(date_add(to_date('1899-12-30'), CAST(floor({num}) AS INT)))"
+
+
+def parse_date_compat(expr: str, sane: bool = False) -> str:
+    """Parse a polymorphic (string-typed) date, as Spark SQL text over the
+    SQL text ``expr``; apply with ``F.expr``/``selectExpr``.
 
     Branch order mirrors the reference: numeric-serial test first, then the
     string-format cascade; anything else NULL.
     """
-    as_num = F.trim(col.cast("string")).try_cast("double")
-    is_serial = as_num.isNotNull() & (as_num > 1) & (as_num < 60000)
-    text = F.trim(col.cast("string"))
+    text = f"trim(CAST(({expr}) AS STRING))"
+    as_num = f"try_cast({text} AS DOUBLE)"
     fmts = _SANE_FORMATS if sane else _COMPAT_FORMATS
-    cascade = F.coalesce(*[F.try_to_timestamp(text, F.lit(f)) for f in fmts])
+    # each format is tried only on strings holding its separator: a superset
+    # test, so the cascade's result is unchanged and most try_to_timestamp
+    # calls (the cascade's whole cost) are skipped
+    cascade = "coalesce(" + ", ".join(
+        f"CASE WHEN contains({text}, {str_lit(_separator(f))})"
+        f" THEN try_to_timestamp({text}, {str_lit(f)}) END"
+        for f in fmts
+    ) + ")"
     # Spark's proleptic calendar admits year 0 (e.g. "0000/1/1" via yyyy/d/M),
     # but Python's datetime cannot represent it, so collect() would raise —
     # violating the "garbage → NULL, never an exception" contract (the
     # reference's pandas model returns NaT). Clamp to datetime-representable
     # years; out-of-range parses become NULL like any other garbage.
-    # The clamp goes through a 1-element array + lambda so the 11-format
-    # cascade is evaluated ONCE per row: a plain `F.when(F.year(cascade)
-    # .between(...), cascade)` re-runs every try_to_timestamp in the branch
+    # The clamp goes through a 1-element array + lambda so the cascade is
+    # evaluated ONCE per row: a plain `CASE WHEN year(cascade) BETWEEN ...
+    # THEN cascade` re-runs every try_to_timestamp in the branch
     # (conditional branches are excluded from codegen subexpression
     # elimination — measured 6× on the full-column parse at sf0.1).
-    parsed_str = F.get(
-        F.filter(F.array(cascade), lambda t: F.year(t).between(1, 9999)),
-        0,
+    parsed_str = f"get(filter(array({cascade}), t -> year(t) >= 1 AND year(t) <= 9999), 0)"
+    return (
+        f"CASE WHEN ({expr}) IS NULL THEN CAST(NULL AS TIMESTAMP)"
+        f" WHEN {as_num} IS NOT NULL AND {as_num} > 1 AND {as_num} < 60000"
+        f" THEN {excel_serial_to_date(as_num)}"
+        f" ELSE {parsed_str} END"
     )
-    return F.when(col.isNull(), F.lit(None).cast("timestamp")).when(
-        is_serial, excel_serial_to_date(as_num)
-    ).otherwise(parsed_str)
 
 
 def parse_date_compat_sql(expr: str, sane: bool = False) -> str:

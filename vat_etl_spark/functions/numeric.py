@@ -119,6 +119,11 @@ def micros(expr: Column) -> Column:
     return F.floor(expr.cast("double") * F.lit(1e6) + F.lit(0.5)).cast("long")
 
 
+def micros_text(expr: str) -> str:
+    """:func:`micros` as Spark SQL text over the SQL text ``expr``."""
+    return f"CAST(floor(CAST(({expr}) AS DOUBLE) * 1000000.0D + 0.5D) AS BIGINT)"
+
+
 def msum(expr: Column, scale: int = 2) -> Column:
     """Fixed-point fast-path sum: exact long-micros accumulation (pure
     whole-stage-codegen long arithmetic — ~25% faster than the decimal
@@ -166,6 +171,14 @@ def hsum_merge(partial: Column, scale: int = 2) -> Column:
     tot = F.sum(partial.cast("decimal(26,0)"))
     return F.coalesce(
         F.round(tot / F.lit(10**6), scale).cast("double"), F.lit(0.0)
+    )
+
+
+def hsum_merge_text(partial: str, scale: int = 2) -> str:
+    """:func:`hsum_merge` as Spark SQL text over the SQL text ``partial``."""
+    return (
+        f"coalesce(CAST(round(sum(CAST(({partial}) AS DECIMAL(26,0))) / 1000000,"
+        f" {scale}) AS DOUBLE), 0.0D)"
     )
 
 

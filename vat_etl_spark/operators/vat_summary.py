@@ -21,18 +21,15 @@ round-to-2dp on output (Q10).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from vat_etl_spark.functions.numeric import hsum_merge, micros
+from vat_etl_spark.functions.numeric import hsum_merge_text, micros_text
+from vat_etl_spark.functions.sqltext import ident, str_lit
+from vat_etl_spark.sources.excel import SANE_BOX_LETTER_RE, box_normalize_compat
 
-def _month_abbrevs() -> Column:
-    # built lazily: Column construction needs a live SparkContext, and this
-    # module must import before any session exists (bench/driver import order)
-    return F.array(
-        *[F.lit(m) for m in ["Jan", "Feb", "Mar", "Apr", "May", "Jun",
-                             "Jul", "Aug", "Sep", "Oct", "Nov", "Dec"]]
-    )
+_MONTH_ABBREVS = ["Jan", "Feb", "Mar", "Apr", "May", "Jun",
+                  "Jul", "Aug", "Sep", "Oct", "Nov", "Dec"]
 
 BOX_DESCRIPTIONS: dict[str, str] = {
     "Box A": "Standard Rated Supplies (5%)",
@@ -64,8 +61,11 @@ def vat_box_summary(
     a hot group key is not free). Use it whenever the label is a function
     of the month number; sheet-derived labels (which can be "Unknown"-like
     free text) keep the explicit column.
+
+    Expressions are Spark SQL text, so building the plan costs a few py4j
+    round trips per DataFrame call, not one per sub-expression.
     """
-    net, vat, box = F.col(net_col), F.col(vat_col), F.col(box_col)
+    box, year, monthnum = ident(box_col), ident(year_col), ident(monthnum_col)
 
     # Pre-project per-row work ONCE: the box membership flags (the string
     # normalize+match would otherwise be re-evaluated inside each of the 6
@@ -73,17 +73,20 @@ def vat_box_summary(
     # and the exact long-micros fixed-point of each measure (2 decimal casts
     # per row instead of 12).
     if compat:
-        boxn = F.upper(F.trim(F.coalesce(box.cast("string"), F.lit("nan"))))
-        flag = lambda L: boxn.contains(F.lit(L))  # noqa: E731
+        boxn = box_normalize_compat(box)
+        flag = lambda L: f"contains({boxn}, '{L}')"  # noqa: E731
     else:
-        letter = F.regexp_extract(F.upper(F.trim(box.cast("string"))), r"\b([A-D])\b", 1)
-        flag = lambda L: letter == F.lit(L)  # noqa: E731
+        letter = (
+            f"regexp_extract(upper(trim(CAST({box} AS STRING))), "
+            f"{str_lit(SANE_BOX_LETTER_RE)}, 1)"
+        )
+        flag = lambda L: f"{letter} = '{L}'"  # noqa: E731
     keys = [year_col, monthnum_col] + ([month_col] if month_col else [])
-    pre = df.select(
-        *keys,
-        *[flag(L).alias(f"_f{L}") for L in "ABC"],
-        micros(net).alias("_net_u"),
-        micros(vat).alias("_vat_u"),
+    pre = df.selectExpr(
+        *[ident(k) for k in keys],
+        *[f"{flag(L)} AS _f{L}" for L in "ABC"],
+        f"{micros_text(ident(net_col))} AS _net_u",
+        f"{micros_text(ident(vat_col))} AS _vat_u",
     )
 
     # hierarchical exact sums (functions/numeric.py): long-micros partials
@@ -91,56 +94,47 @@ def vat_box_summary(
     # partial bounded by partition size so no overflow at any total scale —
     # then a decimal merge over the tiny partial set. Cross-engine
     # bit-stable; all-NULL → 0.0 (Q9).
-    parts = {
-        f"{n}{L}": F.when(F.col(f"_f{L}"), F.col(f"_{n}_u"))
-        for L in "ABC"
-        for n in ("net", "vat")
-    }
-    st1 = pre.groupBy(*keys, F.spark_partition_id().alias("_pid")).agg(
-        *[F.sum(e).alias(f"_{k}") for k, e in parts.items()]
+    parts = [(n, L) for L in "ABC" for n in ("net", "vat")]
+    st1 = pre.groupBy(*keys, F.expr("spark_partition_id() AS _pid")).agg(
+        *[F.expr(f"sum(CASE WHEN _f{L} THEN _{n}_u END) AS _{n}{L}") for n, L in parts]
     )
     agg = st1.groupBy(*keys).agg(
-        *[hsum_merge(F.col(f"_{k}")).alias(k) for k in parts]
-    )
-    agg = agg.withColumn("vatD", F.col("vatA") - F.col("vatC"))
+        *[F.expr(f"{hsum_merge_text(f'_{n}{L}')} AS {n}{L}") for n, L in parts]
+    ).selectExpr("*", "vatA - vatC AS vatD")
     if month_col:
-        label = F.col(month_col)
+        label = ident(month_col)
     else:
-        label = F.when(
-            F.col(monthnum_col).between(1, 12),
-            F.element_at(_month_abbrevs(), F.col(monthnum_col)),
-        ).otherwise(F.lit("Unknown"))
-    period = F.concat_ws(" ", label, F.col(year_col).cast("string"))
+        abbrevs = ", ".join(str_lit(m) for m in _MONTH_ABBREVS)
+        label = (
+            f"CASE WHEN {monthnum} >= 1 AND {monthnum} <= 12"
+            f" THEN element_at(array({abbrevs}), {monthnum}) ELSE 'Unknown' END"
+        )
+    period = f"concat_ws(' ', {label}, CAST({year} AS STRING))"
 
-    def row(box_name: str, net_v: Column, vat_v: Column, payable: Column) -> Column:
-        return F.struct(
-            F.lit(box_name).alias("FTA Box"),
-            F.lit(BOX_DESCRIPTIONS[box_name]).alias("Description"),
-            F.round(net_v, 2).cast("double").alias("Net Value"),
-            F.round(vat_v, 2).cast("double").alias("VAT Value"),
-            F.round(payable, 2).cast("double").alias("Net VAT Payable"),
+    def row(box_name: str, net_v: str, vat_v: str, payable: str) -> str:
+        return (
+            f"struct({str_lit(box_name)} AS `FTA Box`,"
+            f" {str_lit(BOX_DESCRIPTIONS[box_name])} AS Description,"
+            f" CAST(round({net_v}, 2) AS DOUBLE) AS `Net Value`,"
+            f" CAST(round({vat_v}, 2) AS DOUBLE) AS `VAT Value`,"
+            f" CAST(round({payable}, 2) AS DOUBLE) AS `Net VAT Payable`)"
         )
 
-    zero = F.lit(0.0)
-    boxes = F.array(
-        row("Box A", F.col("netA"), F.col("vatA"), zero),
-        row("Box B", F.col("netB"), F.col("vatB"), zero),
-        row("Box C", F.col("netC"), F.col("vatC"), zero),
-        row("Box D", zero, F.col("vatD"), F.col("vatD")),
-    )
+    zero = "0.0D"
+    boxes = ", ".join([
+        row("Box A", "netA", "vatA", zero),
+        row("Box B", "netB", "vatB", zero),
+        row("Box C", "netC", "vatC", zero),
+        row("Box D", zero, "vatD", "vatD"),
+    ])
     # single-partition sort, not orderBy: the summary is 4 rows per period
     # (bounded by reporting periods, never by data volume), and a global
     # orderBy costs a range-partitioning SAMPLING JOB + a 32-task sort
     # stage — measured ~15% of flagship wall at sf0.1 for a ~300-row sort
     out = (
-        agg.select(
-            F.col(year_col),
-            F.col(monthnum_col),
-            period.alias("Period"),
-            F.inline(boxes),
-        )
+        agg.selectExpr(year, monthnum, f"{period} AS Period", f"inline(array({boxes}))")
         .coalesce(1)
-        .sortWithinPartitions(F.col(year_col), F.col(monthnum_col), F.col("FTA Box"))
+        .sortWithinPartitions(F.expr(year), F.expr(monthnum), F.expr("`FTA Box`"))
         .drop(year_col, monthnum_col)
     )
     return out

@@ -8,6 +8,7 @@ from vat_etl_spark.plans.inspect import (
     formatted_plan,
     has_broadcast_join,
     pushed_filters,
+    py4j_round_trips,
     read_schema_columns,
     shuffle_count,
     unpartitioned_window_bound_kinds,
@@ -17,6 +18,7 @@ from vat_etl_spark.plans.inspect import (
 __all__ = [
     "formatted_plan",
     "pushed_filters",
+    "py4j_round_trips",
     "read_schema_columns",
     "has_broadcast_join",
     "shuffle_count",

@@ -1,16 +1,47 @@
-"""Physical-plan inspection over the formatted explain output."""
+"""Physical-plan inspection over the formatted explain output, and the
+py4j round trips a block of plan construction costs."""
 
 from __future__ import annotations
 
 import re
+from contextlib import contextmanager
+from typing import Iterator
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def formatted_plan(df: DataFrame) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
         df._jdf.queryExecution(), "formatted"
     )
+
+
+class RoundTrips:
+    """Running count of py4j commands sent to the JVM."""
+
+    n = 0
+
+
+@contextmanager
+def py4j_round_trips(spark: SparkSession) -> Iterator[RoundTrips]:
+    """Count the py4j round trips made inside the block: every command the
+    Python driver sends to the JVM (calls, reflection lookups and the
+    releases of collected JVM handles), from any thread. Building a plan
+    pays one round trip per Column sub-expression and per DataFrame call
+    argument, so this is the construction layer of a query's wall."""
+    client = spark.sparkContext._gateway._gateway_client
+    sent = client.send_command
+    counter = RoundTrips()
+
+    def counting(*args, **kwargs):
+        counter.n += 1
+        return sent(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        yield counter
+    finally:
+        client.send_command = sent
 
 
 def pushed_filters(df: DataFrame) -> list[str]:

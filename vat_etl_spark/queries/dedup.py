@@ -106,9 +106,16 @@ def _docs_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     the plain read."""
     d = _t(spark, sf_dir, "documents")
     target = spark.sparkContext.defaultParallelism
-    if d.rdd.getNumPartitions() >= max(target // 2, 1):
+    if not _fanout_needed(d.rdd.getNumPartitions(), target):
         return d
     return d.repartition(target, "doc_id")
+
+
+def _fanout_needed(partitions: int, parallelism: int) -> bool:
+    """Whether a scan of ``partitions`` splits is re-split across
+    ``parallelism`` cores: never on one core; otherwise when the scan is a
+    single split or has fewer than half the cores' worth."""
+    return parallelism > 1 and (partitions == 1 or partitions < parallelism // 2)
 
 
 def _hashed_sets(docsets: DataFrame) -> DataFrame:

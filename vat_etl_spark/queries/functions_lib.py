@@ -2,7 +2,7 @@
 verified through the oracle, plus the general string/date/math/json/array
 function library the engine class exposes (SURVEY.md §7 tier 3).
 
-Every expression here is a native Column expression — zero Python UDFs —
+Every expression here is a native expression — zero Python UDFs —
 and has a DuckDB twin with verified-identical semantics (dayofweek offset,
 non-padded strftime codes, RE2-vs-Java word boundaries all probed).
 """
@@ -56,10 +56,8 @@ def date_parse_compat(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(k == 4, F.lit("not-a-date"))
         .otherwise(F.lit(None).cast("string"))
     )
-    return o.select(
-        "o_orderkey",
-        raw.alias("raw_date"),
-        parse_date_compat(raw).alias("parsed"),
+    return o.select("o_orderkey", raw.alias("raw_date")).selectExpr(
+        "o_orderkey", "raw_date", f"{parse_date_compat('raw_date')} AS parsed"
     )
 
 

@@ -134,10 +134,8 @@ def currency_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("s_suppkey") % 8 == 6, F.concat(F.lit("₹"), fmt(F.col("s_acctbal"))))
         .otherwise(fmt(F.col("s_acctbal")))
     )
-    return supplier.select(
-        "s_suppkey",
-        raw.alias("raw"),
-        currency_to_aed_exact(raw).alias("aed"),
+    return supplier.select("s_suppkey", raw.alias("raw")).selectExpr(
+        "s_suppkey", "raw", f"{currency_to_aed_exact('raw')} AS aed"
     )
 
 

@@ -8,7 +8,9 @@ footers carry exact types (FIXTURES.md §B).
 
 from __future__ import annotations
 
+import json
 import os
+import re
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -99,6 +101,88 @@ def hadoop_path(spark: SparkSession, path: str):
     p = spark._jvm.org.apache.hadoop.fs.Path(path)
     fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
     return fs, fs.makeQualified(p)
+
+
+_BOM = b"\xef\xbb\xbf"
+_CHUNK = 1 << 16
+
+
+def _hidden(name: str) -> bool:
+    """Names Spark's file index leaves out of a directory scan."""
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _first_nonblank_line(stream) -> str | None:
+    """First line of a JVM ``InputStream`` that is not all spaces: Spark's
+    header inference skips a line SQL ``trim`` empties (a tab-only line is
+    a header). Lines end at LF, CR or CRLF, and a leading UTF-8 BOM is
+    dropped, as in Hadoop's line reader. Reads 64 KiB per round trip."""
+    buf, eof = b"", False
+    while not eof:
+        chunk = bytes(stream.readNBytes(_CHUNK))
+        buf, eof = buf + chunk, len(chunk) < _CHUNK
+        lines = re.split(rb"\r\n|\r|\n", buf.removeprefix(_BOM))
+        for line in lines if eof else lines[:-1]:
+            if line.strip(b" "):
+                return line.decode("utf-8", "replace")
+    return None
+
+
+def csv_header(spark: SparkSession, path: str) -> list[str]:
+    """The column names ``spark.read.option("header", "true").csv(path)``
+    infers, without the Spark job that inference runs.
+
+    The header is read as file metadata: the first non-blank line of the
+    file inference reads first (for a directory or glob, the largest file:
+    Spark packs splits largest first and takes the first line), read
+    through the Hadoop ``FileSystem`` with the file's compression codec.
+    Spark's own CSV reader then parses that one line from a driver-local
+    ``Dataset[String]``, so quoting, empty names (``_c1``) and
+    case-insensitive duplicates (``Box0, box1``) come out as Spark names
+    them."""
+    jvm = spark._jvm
+    fs, qpath = hadoop_path(spark, path)
+    files = []
+    for st in fs.globStatus(qpath) or []:
+        if not st.isDirectory():
+            name = st.getPath().getName()
+            if not _hidden(name):
+                files.append((st.getLen(), st.getPath(), name))
+            continue
+        root = st.getPath().toString()
+        it = fs.listFiles(st.getPath(), True)
+        while it.hasNext():
+            f = it.next()
+            parts = [p for p in f.getPath().toString()[len(root):].split("/") if p]
+            if not any(_hidden(p) for p in parts):
+                files.append((f.getLen(), f.getPath(), parts[-1]))
+    if not files:  # Spark's own error: no such path, or nothing to infer from
+        return spark.read.option("header", "true").csv(path).columns
+    files.sort(key=lambda f: -f[0])  # stable: ties keep the listing order
+    lines = []
+    for _, fpath, name in files:
+        stream = fs.open(fpath)
+        try:
+            if not name.endswith(".csv"):  # maybe compressed, e.g. part-0.csv.gz
+                codec = jvm.org.apache.hadoop.io.compress.CompressionCodecFactory(
+                    spark._jsc.hadoopConfiguration()
+                ).getCodec(fpath)
+                if codec is not None:
+                    stream = codec.createInputStream(stream)
+            line = _first_nonblank_line(stream)
+        finally:
+            stream.close()
+        if line is not None:
+            lines.append(line)
+            break
+    jspark = spark._jsparkSession
+    ds = jspark.createDataset(lines, jvm.Encoders.STRING())
+    schema = jspark.read().option("header", "true").csv(ds).schema().json()
+    return [f["name"] for f in json.loads(schema)["fields"]]
 
 
 def read_index(spark: SparkSession, idx_path: str, schema) -> DataFrame | None:

@@ -23,24 +23,26 @@ from __future__ import annotations
 import logging
 from typing import Iterable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vat_etl_spark.functions.currency import currency_to_aed
 from vat_etl_spark.functions.dates import parse_date_compat
 from vat_etl_spark.functions.headers import canonical_rename, detect_header_row
 from vat_etl_spark.functions.months import extract_month_from_name
+from vat_etl_spark.functions.sqltext import ident, str_lit
 from vat_etl_spark.schemas import VAT_REQUIRED_COLUMNS
 
 _LOG = logging.getLogger(__name__)
 
 MONEY_COLUMNS = ["Supply/Purchase Value", "VAT Value", "Invoice Value"]
+SANE_BOX_LETTER_RE = r"\b([A-D])\b"  # a standalone box letter (the documented fix)
 
 
-def box_normalize_compat(col: Column) -> Column:
-    """``astype(str).upper().strip()`` compat: NULL → literal "NAN" (quirk Q2,
-    fianl2.py:162)."""
-    return F.upper(F.trim(F.coalesce(col.cast("string"), F.lit("nan"))))
+def box_normalize_compat(expr: str) -> str:
+    """``astype(str).upper().strip()`` compat over the SQL text ``expr``:
+    NULL → literal "NAN" (quirk Q2, fianl2.py:162)."""
+    return f"upper(trim(coalesce(CAST(({expr}) AS STRING), 'nan')))"
 
 
 def normalize_vat_sheet(
@@ -52,7 +54,7 @@ def normalize_vat_sheet(
 ) -> DataFrame:
     """Normalize one raw (all-string, canonical-header) sheet DataFrame into
     the typed VAT transaction contract. Mirrors fianl2.py:130-164 step-for-step
-    but as ONE lazy plan:
+    but as ONE lazy projection:
 
     - pad missing required columns with NULL  (P2)
     - currency-convert 3 money columns, native expressions (F1)
@@ -61,28 +63,46 @@ def normalize_vat_sheet(
       fallback = ``as_of_year`` (explicit parameter replacing the reference's
       nondeterministic ``datetime.now().year`` — quirk F11)
     - Box stringify/upper/trim (F5, quirk Q2) + BoxLetter (F6)
+
+    Each step is one ``withColumn`` of the reference's order, applied to a
+    list of (name, SQL text) pairs with ``withColumn``'s rules (a name
+    replaces every column it matches case-insensitively, in place; a new
+    name is appended), so the output has the same columns in the same
+    order, and the whole list reaches the JVM as one ``selectExpr``.
     """
+    cols = [(c, ident(c)) for c in df.columns]
+
+    def expr_of(name: str) -> str:
+        return next(e for c, e in cols if c.lower() == name.lower())
+
+    def with_column(name: str, expr: str) -> None:
+        hits = [i for i, (c, _) in enumerate(cols) if c.lower() == name.lower()]
+        for i in hits:
+            cols[i] = (name, expr)
+        if not hits:
+            cols.append((name, expr))
+
     for c in VAT_REQUIRED_COLUMNS:
         if c not in df.columns:
-            df = df.withColumn(c, F.lit(None).cast("string"))
-
+            with_column(c, "CAST(NULL AS STRING)")
     for c in MONEY_COLUMNS:
-        df = df.withColumn(c, currency_to_aed(F.col(c)))
+        with_column(c, currency_to_aed(expr_of(c)))
 
     month_abbr, month_num = extract_month_from_name(sheet_name)
     year_val = _mode_year(df, compat=compat)
     if year_val is None:
         year_val = as_of_year if as_of_year is not None else 1970
 
-    box_letter_re = r"([A-Z])" if compat else r"\b([A-D])\b"
-    box = box_normalize_compat(F.col("Box")) if compat else F.upper(F.trim(F.col("Box")))
-    return (
-        df.withColumn("Month", F.lit(month_abbr))
-        .withColumn("MonthNum", F.lit(month_num).cast("int"))
-        .withColumn("Year", F.lit(int(year_val)).cast("int"))
-        .withColumn("SourceSheet", F.lit(sheet_name))
-        .withColumn("Box", box)
-        .withColumn("BoxLetter", F.regexp_extract(F.col("Box"), box_letter_re, 1))
+    box_letter_re = r"([A-Z])" if compat else SANE_BOX_LETTER_RE
+    box = expr_of("Box")
+    with_column("Month", str_lit(month_abbr))
+    with_column("MonthNum", f"CAST({int(month_num)} AS INT)")
+    with_column("Year", f"CAST({int(year_val)} AS INT)")
+    with_column("SourceSheet", str_lit(sheet_name))
+    with_column("Box", box_normalize_compat(box) if compat else f"upper(trim({box}))")
+    with_column("BoxLetter", f"regexp_extract({expr_of('Box')}, {str_lit(box_letter_re)}, 1)")
+    return df.selectExpr(
+        *[e if e == ident(c) else f"{e} AS {ident(c)}" for c, e in cols]
     )
 
 
@@ -91,18 +111,17 @@ def _mode_year(df: DataFrame, compat: bool = True) -> int | None:
 
     Tie-break = first-encountered (reference ``Counter`` + ``max`` behavior);
     approximated at scale by min encounter id. Runs as one small aggregate
-    job; the distinct-year cardinality is tiny so the collect is safe.
+    job; the distinct-year cardinality is tiny so the collect is safe. A
+    sheet without a Date column (padded with NULL) has no year.
     """
     if "Date" not in df.columns:
         return None
+    date = parse_date_compat(ident("Date"), sane=not compat)
     years = (
-        df.select(
-            F.year(parse_date_compat(F.col("Date"), sane=not compat)).alias("y"),
-            F.monotonically_increasing_id().alias("enc"),
-        )
-        .filter(F.col("y").isNotNull())
+        df.selectExpr(f"year({date}) AS y", "monotonically_increasing_id() AS enc")
+        .where("y IS NOT NULL")
         .groupBy("y")
-        .agg(F.count("*").alias("n"), F.min("enc").alias("first_enc"))
+        .agg(F.expr("count(*) AS n"), F.expr("min(enc) AS first_enc"))
         .orderBy(F.desc("n"), F.asc("first_enc"))
         .limit(1)
         .collect()
