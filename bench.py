@@ -226,10 +226,9 @@ def run_key(spark, key: str, sf_dir: str, plan: DataFrame | None = None) -> dict
 def release_caches(spark) -> None:
     """Drop every engine cache and fail if a persisted RDD or a cached
     plan survives: a timed run must not read a cache an earlier run
-    built (VERDICT r15 #1: otherwise span_removal_plan's cache_latest
-    hands every pipeline_span_removal pass after the first a warm
-    InMemoryRelation, and a persisted frame can serve a matching subplan
-    of another key)."""
+    built (otherwise span_removal_plan's persisted tokens hand every
+    pipeline_span_removal pass after the first a warm InMemoryRelation,
+    and a persisted frame can serve a matching subplan of another key)."""
     release_engine_caches(spark)
     n_rdds = spark.sparkContext._jsc.getPersistentRDDs().size()
     if n_rdds or not spark._jsparkSession.sharedState().cacheManager().isEmpty():

@@ -7,7 +7,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from vat_etl_spark.session import get_spark  # noqa: E402
+from vat_etl_spark.session import get_spark, release_engine_caches  # noqa: E402
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECTNESS = "/root/testdata/sf0.01"
@@ -24,11 +24,19 @@ def spark():
         if slot
         else None
     )
-    s = get_spark("pytest", shuffle_partitions=8, extra_conf=extra)
-    yield s
-    from vat_etl_spark.functions.caching import clear_cache
+    return get_spark("pytest", shuffle_partitions=8, extra_conf=extra)
 
-    clear_cache()  # drop pinned DataFrame handles before the session dies
+
+@pytest.fixture(autouse=True)
+def _release_caches_after_test(request):
+    """Each test that uses ``spark`` is one run: the caches its queries
+    persisted are released when it ends, so no test reads a cache that an
+    earlier test built."""
+    uses = "spark" in request.fixturenames
+    spark = request.getfixturevalue("spark") if uses else None
+    yield
+    if spark is not None:
+        release_engine_caches(spark)
 
 
 @pytest.fixture(scope="session")

@@ -48,7 +48,10 @@ def test_vat_sheet_construction_round_trips(spark, tmp_path):
     """Building a quarter's plans (3 × load_transactions + the box summary)
     stays within a fixed budget of py4j round trips: the kernels reach the
     JVM as SQL text in one call each, and the CSV header is read as file
-    metadata. Built from Column objects, the same plans cost ~11,000."""
+    metadata. Built from Column objects, the same plans cost ~11,000.
+    The block issues 552 commands on every repeat; the budget is that
+    plus 20%. Releases of collected JVM handles (148-216 per repeat,
+    depending on what the garbage collector frees) are not counted."""
     import gc
 
     from vat_etl_spark.app import load_transactions
@@ -65,7 +68,7 @@ def test_vat_sheet_construction_round_trips(spark, tmp_path):
         frames = [load_transactions(spark, p) for p in paths]
         tx = frames[0].unionByName(frames[1]).unionByName(frames[2])
         summary = vat_box_summary(tx)
-    assert trips.n <= 1000, trips.n
+    assert trips.n <= 660, trips.n
     assert summary.count() == 12
 
 

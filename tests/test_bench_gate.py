@@ -14,7 +14,6 @@ import pytest
 from pyspark.sql import functions as F
 
 import bench
-from vat_etl_spark.functions.caching import cache_latest
 from vat_etl_spark.queries import QUERIES
 from vat_etl_spark.session import release_engine_caches
 
@@ -117,17 +116,13 @@ def _cache_state(spark) -> tuple[int, bool]:
 
 
 def _cached_key(seen: list):
-    """A registry plan that persists an intermediate at construction
-    (cache_latest, like span_removal_plan) and reads it twice; each
-    construction records the cache state it finds, i.e. what crossed the
-    previous run boundary."""
+    """A registry plan that persists an intermediate at construction (like
+    span_removal_plan) and reads it twice; each construction records the
+    cache state it finds, i.e. what crossed the previous run boundary."""
 
     def plan(spark, sf_dir):
         seen.append(_cache_state(spark))
-        (base,) = cache_latest(
-            "bench_loop_probe",
-            spark.range(0, 1000).withColumn("k", F.col("id") % 7),
-        )
+        base = spark.range(0, 1000).withColumn("k", F.col("id") % 7).persist()
         return base.groupBy("k").count().join(
             base.groupBy("k").agg(F.max("id").alias("top")), "k"
         )

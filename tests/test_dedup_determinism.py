@@ -9,15 +9,24 @@ import pytest
 
 from vat_etl_spark.operators import neardup
 from vat_etl_spark.queries import QUERIES
+from vat_etl_spark.session import release_engine_caches
 
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _built_twice(spark, name, sf_dir):
+    """A query's rows from two builds, with engine caches released between
+    them, so the second build recomputes instead of reading the first
+    build's persisted frames."""
+    a = _rows(QUERIES[name](spark, sf_dir))
+    release_engine_caches(spark)
+    return a, _rows(QUERIES[name](spark, sf_dir))
+
+
 def test_minhash_ml_reference_deterministic(spark, sf_smoke):
-    a = _rows(QUERIES["dedup_minhash_ml_reference"](spark, sf_smoke))
-    b = _rows(QUERIES["dedup_minhash_ml_reference"](spark, sf_smoke))
+    a, b = _built_twice(spark, "dedup_minhash_ml_reference", sf_smoke)
     assert a == b and len(a) > 0
 
 
@@ -45,8 +54,7 @@ def test_minhash_banded_deterministic_and_complete_vs_exact(spark, sf_smoke):
         _verify_common_tokens,
     )
 
-    a = _rows(QUERIES["dedup_minhash_banded"](spark, sf_smoke))
-    b = _rows(QUERIES["dedup_minhash_banded"](spark, sf_smoke))
+    a, b = _built_twice(spark, "dedup_minhash_banded", sf_smoke)
     assert a == b and len(a) > 0
     got = {(r[0], r[1]) for r in a}
     d = _docs_fanout(spark, sf_smoke)
@@ -195,20 +203,19 @@ def test_bucket_cap_dormant_at_oracle_scale(spark, sf_smoke, bands):
 
 
 def test_simhash_deterministic_and_64bit(spark, sf_smoke):
-    a = _rows(QUERIES["dedup_simhash"](spark, sf_smoke))
-    b = _rows(QUERIES["dedup_simhash"](spark, sf_smoke))
+    a, b = _built_twice(spark, "dedup_simhash", sf_smoke)
     assert a == b and len(a) > 0
 
 
 def test_ann_lsh_deterministic(spark, sf_smoke):
-    a = _rows(QUERIES["ann_lsh_bucketed"](spark, sf_smoke))
-    b = _rows(QUERIES["ann_lsh_bucketed"](spark, sf_smoke))
+    a, b = _built_twice(spark, "ann_lsh_bucketed", sf_smoke)
     assert a == b and len(a) > 0
 
 
 def test_multimodal_features_deterministic(spark, sf_smoke):
     df = QUERIES["multimodal_features"](spark, sf_smoke)
     a = sorted((r.doc_id, r.n_bytes, r.entropy_proxy) for r in df.collect())
+    release_engine_caches(spark)
     b = sorted((r.doc_id, r.n_bytes, r.entropy_proxy) for r in df.collect())
     assert a == b and len(a) > 0
 
@@ -216,11 +223,9 @@ def test_multimodal_features_deterministic(spark, sf_smoke):
 def test_kmeans_lloyd_deterministic_and_total(spark, sf_smoke):
     """kmeans_lloyd: deterministic across runs (fixed init, deterministic
     argmax tie-break) and every vector lands in exactly one of K clusters."""
-    from vat_etl_spark.queries import QUERIES
     from vat_etl_spark.sources.catalog import read_table
 
-    a = sorted(map(tuple, QUERIES["kmeans_lloyd"](spark, sf_smoke).collect()))
-    b = sorted(map(tuple, QUERIES["kmeans_lloyd"](spark, sf_smoke).collect()))
+    a, b = _built_twice(spark, "kmeans_lloyd", sf_smoke)
     assert a == b
     n_vecs = read_table(spark, sf_smoke, "embeddings").count()
     assert sum(r[1] for r in a) == n_vecs
@@ -275,6 +280,7 @@ def test_lsh_recall_against_exact_ground_truth(spark, sf_smoke):
 def test_phonetic_blocking_deterministic_and_blocked(spark, sf_smoke):
     df = QUERIES["dedup_phonetic_blocking"](spark, sf_smoke)
     a = sorted(map(tuple, df.collect()))
+    release_engine_caches(spark)
     b = sorted(map(tuple, df.collect()))
     assert a == b
     seen_pairs = set()

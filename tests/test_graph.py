@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from vat_etl_spark.queries import QUERIES
+from vat_etl_spark.session import release_engine_caches
 
 
 def _ranks(spark, sf_smoke):
@@ -18,6 +19,7 @@ def _ranks(spark, sf_smoke):
 
 def test_pagerank_deterministic_and_positive(spark, sf_smoke):
     a = _ranks(spark, sf_smoke)
+    release_engine_caches(spark)  # the second build recomputes
     b = _ranks(spark, sf_smoke)
     # integer-micros ranks: int64 sums are accumulation-order-free, so
     # re-execution equality is EXACT (this is what lets the op carry a
@@ -174,6 +176,7 @@ def test_prf_rm3_expansion_changes_ranking(spark, sf_smoke):
     rm3 = [(r.doc_id, r.score) for r in QUERIES["retrieval_prf_rm3"](spark, sf_smoke).collect()]
     assert len(rm3) == 20
     assert all(s > 0 for _, s in rm3)
+    release_engine_caches(spark)  # the second build recomputes
     again = [(r.doc_id, r.score) for r in QUERIES["retrieval_prf_rm3"](spark, sf_smoke).collect()]
     assert rm3 == again
     bm25 = [r.doc_id for r in QUERIES["text_bm25_ranking"](spark, sf_smoke).collect()][:20]

@@ -509,8 +509,8 @@ def test_no_unbounded_single_partition_windows_anywhere(spark, sf_smoke):
         "ts_rolling_median": {"calendar"},
         "ts_yoy_growth": {"calendar"},
         # day-grain CUSUM walk; its windows are usually hidden behind the
-        # intra-query cache_latest substitution, but when visible they
-        # must carry the calendar bound
+        # intra-query persist substitution, but when visible they must
+        # carry the calendar bound
         "ts_cusum_drift": {"calendar"},
     }
     offenders = {}
@@ -531,33 +531,6 @@ def test_no_unbounded_single_partition_windows_anywhere(spark, sf_smoke):
     # the whitelist is not stale: at least some global windows were seen
     # and classified this run
     assert seen_whitelisted >= 5, seen_whitelisted
-
-
-def test_cache_latest_repeat_invocation_stays_cached(spark, sf_smoke):
-    """Repeat invocations share an analyzed plan, so cache_latest must
-    unpersist the previous handles BEFORE persisting the new ones —
-    persist-then-unpersist no-ops the persist ('already cached') and then
-    drops the SHARED entry, silently uncaching the frame (caught as an
-    order-dependent test_rollup_cascade_scans_fact_once failure in r7)."""
-    from pyspark.sql import functions as F
-
-    from vat_etl_spark.functions.caching import cache_latest, clear_cache
-
-    base = (
-        spark.range(0, 100)
-        .select((F.col("id") % 7).alias("k"))
-        .groupBy("k")
-        .count()
-    )
-    try:
-        (a,) = cache_latest("pytest:cache_latest", base)
-        a.count()  # materialize
-        (b,) = cache_latest("pytest:cache_latest", base)
-        b.write.format("noop").mode("overwrite").save()
-        executed = b._jdf.queryExecution().executedPlan().toString()
-        assert "InMemoryTableScan" in executed
-    finally:
-        clear_cache("pytest:cache_latest")
 
 
 def test_collocation_pmi_plan_shape(spark, sf_smoke):

@@ -7,10 +7,12 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from vat_etl_spark.queries import QUERIES
+from vat_etl_spark.session import release_engine_caches
 
 
 def test_stratified_sample_deterministic(spark, sf_smoke):
     a = QUERIES["sample_stratified_orders"](spark, sf_smoke).collect()
+    release_engine_caches(spark)  # the second build recomputes
     b = QUERIES["sample_stratified_orders"](spark, sf_smoke).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
     # the P stratum is kept at 100% — its sampled count must equal the base

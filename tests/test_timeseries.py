@@ -10,6 +10,7 @@ import datetime
 from pyspark.sql import functions as F
 
 from vat_etl_spark.queries import QUERIES
+from vat_etl_spark.session import release_engine_caches
 
 
 def test_gapfill_spine_is_complete_and_bounded(spark, sf_smoke):
@@ -61,6 +62,7 @@ def test_transition_matrix_rows_are_stochastic(spark, sf_smoke):
 def test_hash_split_is_deterministic_and_exhaustive(spark, sf_smoke):
     df = QUERIES["sample_hash_split"](spark, sf_smoke)
     a = {r["split"]: r["n_orders"] for r in df.collect()}
+    release_engine_caches(spark)  # re-execution recomputes
     b = {r["split"]: r["n_orders"] for r in df.collect()}
     assert a == b  # same split on re-execution
     total = spark.read.parquet(f"{sf_smoke}/orders.parquet").count()

@@ -16,13 +16,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from vat_etl_spark.plans import formatted_plan  # noqa: E402
 from vat_etl_spark.queries import QUERIES  # noqa: E402
 from vat_etl_spark.session import get_spark  # noqa: E402
-
-
-def plan_str(df, mode: str = "formatted") -> str:
-    jvm = df.sparkSession._jvm
-    return jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), mode)
 
 
 def main() -> None:
@@ -34,7 +30,7 @@ def main() -> None:
         df = QUERIES[name](spark, sf_dir)
         path = os.path.join(outdir, f"{name}_{tag}.txt")
         with open(path, "w") as f:
-            f.write(plan_str(df))
+            f.write(formatted_plan(df))
         print("wrote", path)
 
 

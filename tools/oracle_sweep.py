@@ -26,7 +26,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from vat_etl_spark.oracle import run_all  # noqa: E402
-from vat_etl_spark.session import get_spark  # noqa: E402
+from vat_etl_spark.session import get_spark, release_engine_caches  # noqa: E402
 
 # Single-partition-window allowlist (round 14, verdict-r13 task 4): every
 # registered query whose OPTIMIZED plan may contain a Window with an empty
@@ -48,7 +48,7 @@ _UNPARTITIONED_WINDOW_ALLOWLIST = {
 }
 
 # Cache-state-dependent entries: ts_cusum_drift's day-grain windows are
-# usually hidden behind the cache_latest substitution (tests/test_plans.py
+# usually hidden behind the persist substitution (tests/test_plans.py
 # documents both states and checks the calendar bound whenever visible);
 # the sweep accepts any count up to the cap and never flags absence.
 _UNPARTITIONED_WINDOW_OPTIONAL = {
@@ -77,6 +77,9 @@ def window_inventory(spark, sf_dir: str) -> tuple[dict, list[str]]:
     found: dict[str, int] = {}
     for name, fn in entrymod.queries().items():
         c = _unpartitioned_windows(fn(spark, sf_dir))
+        # an earlier query's persisted frame would substitute a matching
+        # subplan of a later one and hide its windows
+        release_engine_caches(spark)
         if c:
             found[name] = c
     def _ok(name: str, c: int) -> bool:
@@ -112,11 +115,8 @@ def main() -> None:
     # and SF-independent, but query CONSTRUCTION executes any
     # driver-coordinated folds (ANN builds, BPE/k-means/LM training
     # loops, eager localCheckpoints) — at sf0.1 that second pass measured
-    # >45 min; at sf0.001 it is ~3 min. Engine caches from the sweep are
-    # released first so the pass starts cold and bounded.
-    from vat_etl_spark.session import release_engine_caches
-
-    release_engine_caches(spark)
+    # >45 min; at sf0.001 it is ~3 min. run_all released the sweep's
+    # engine caches query by query, so the pass starts cold and bounded.
     inv_sf = os.environ.get("VAT_ETL_WININV_SF", "/root/testdata/sf0.001")
     if not os.path.isdir(inv_sf):
         inv_sf = sf_dir

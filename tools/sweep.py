@@ -21,7 +21,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from vat_etl_spark.queries import QUERIES  # noqa: E402
-from vat_etl_spark.session import get_spark  # noqa: E402
+from vat_etl_spark.session import get_spark, release_engine_caches  # noqa: E402
 
 
 def main() -> None:
@@ -42,6 +42,7 @@ def main() -> None:
     QUERIES[first](
         spark, smoke if os.path.isdir(smoke) else sf_dir
     ).write.format("noop").mode("overwrite").save()
+    release_engine_caches(spark)
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
     t_all = time.perf_counter()
@@ -52,6 +53,7 @@ def main() -> None:
             timings[name] = round(time.perf_counter() - t0, 3)
         except Exception as e:  # record, keep sweeping
             errors[name] = f"{type(e).__name__}: {e}"[:300]
+        release_engine_caches(spark)  # no query reads another's cache
         print(
             f"{name}: {timings.get(name, 'ERROR')}",
             file=sys.stderr,

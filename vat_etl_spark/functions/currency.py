@@ -127,22 +127,3 @@ def currency_to_aed_exact_sql(expr: str) -> str:
         f"CASE WHEN ({expr}) IS NULL THEN 0.0 "
         f"ELSE cast(round({num} * ({rate}), 2) AS DOUBLE) END"
     )
-
-
-def currency_to_aed_sql(expr: str) -> str:
-    """ANSI-SQL (DuckDB-runnable) rendering of :func:`currency_to_aed` over a
-    SQL expression ``expr`` — lets the driver's DuckDB oracle verify the Spark
-    expression value-for-value."""
-    text = f"trim(cast(({expr}) AS VARCHAR))"
-    cleaned = f"regexp_replace({text}, '[^0-9.()-]', '', 'g')"
-    unparen = (
-        f"CASE WHEN {cleaned} LIKE '(%' AND {cleaned} LIKE '%)' AND length({cleaned}) >= 2 "
-        f"THEN '-' || substr({cleaned}, 2, length({cleaned}) - 2) "
-        f"ELSE {cleaned} END"
-    )
-    num = f"coalesce(try_cast({unparen} AS DOUBLE), 0.0)"
-    rate_cases = " ".join(
-        f"WHEN instr({text}, '{sym}') > 0 THEN {rate}" for sym, rate in CURRENCY_RATES.items()
-    )
-    rate = f"CASE {rate_cases} ELSE 1.0 END"
-    return f"CASE WHEN ({expr}) IS NULL THEN 0.0 ELSE round({num} * ({rate}), 2) END"

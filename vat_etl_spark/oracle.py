@@ -16,6 +16,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from vat_etl_spark.schemas import TESTDATA_TABLES
+from vat_etl_spark.session import release_engine_caches
 
 
 def duckdb_connect(sf_dir: str):
@@ -83,7 +84,8 @@ def run_all(
     spark: SparkSession, sf_dir: str, only: list[str] | None = None
 ) -> dict[str, tuple[bool, str]]:
     """Run every queries()/oracle_sql() pair and compare. Queries without an
-    oracle get a rows-only check (>= 0 rows, i.e. executes successfully)."""
+    oracle get a rows-only check (>= 0 rows, i.e. executes successfully).
+    Each query is one run: its engine caches are released after it."""
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
@@ -99,4 +101,5 @@ def run_all(
         else:
             n = df.count()
             results[name] = (True, f"{name}: rows-only check ({n} rows)")
+        release_engine_caches(spark)
     return results

@@ -7,6 +7,7 @@ import re
 from contextlib import contextmanager
 from typing import Iterator
 
+from py4j import protocol as proto
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -17,25 +18,37 @@ def formatted_plan(df: DataFrame) -> str:
 
 
 class RoundTrips:
-    """Running count of py4j commands sent to the JVM."""
+    """Running counts of py4j commands sent to the JVM: ``n`` the commands
+    the block issues, ``releases`` the handle releases (py4j memory-delete
+    commands) sent when Python drops collected JVM proxies."""
 
     n = 0
+    releases = 0
+
+
+# the py4j command that releases a collected JVM handle
+_RELEASE = proto.MEMORY_COMMAND_NAME + proto.MEMORY_DEL_SUBCOMMAND_NAME
 
 
 @contextmanager
 def py4j_round_trips(spark: SparkSession) -> Iterator[RoundTrips]:
-    """Count the py4j round trips made inside the block: every command the
-    Python driver sends to the JVM (calls, reflection lookups and the
-    releases of collected JVM handles), from any thread. Building a plan
-    pays one round trip per Column sub-expression and per DataFrame call
-    argument, so this is the construction layer of a query's wall."""
+    """Count the py4j round trips made inside the block, from any thread:
+    the commands it issues (calls and reflection lookups) in ``n``, and
+    the releases of collected JVM handles in ``releases``. Releases
+    depend on which earlier objects the garbage collector frees inside
+    the block, so they are kept out of ``n``. Building a plan pays one
+    round trip per Column sub-expression and per DataFrame call argument,
+    so ``n`` is the construction layer of a query's wall."""
     client = spark.sparkContext._gateway._gateway_client
     sent = client.send_command
     counter = RoundTrips()
 
-    def counting(*args, **kwargs):
-        counter.n += 1
-        return sent(*args, **kwargs)
+    def counting(command, *args, **kwargs):
+        if command.startswith(_RELEASE):
+            counter.releases += 1
+        else:
+            counter.n += 1
+        return sent(command, *args, **kwargs)
 
     client.send_command = counting
     try:

@@ -467,8 +467,8 @@ def dedup_minhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     # point and a cluster deployment would use a reliable checkpoint dir.
     # Registered queries return a LAZY plan, so these persists cannot be
     # unpersisted inside the function (the caller's action materializes
-    # them) — they are MEMORY_AND_DISK and intentionally left to LRU
-    # eviction across long sessions (round-13 ADVICE).
+    # them): the caller drops them at the run boundary with
+    # session.release_engine_caches.
     hashed = _hashed_sets(docsets).persist()
     cands = _banded_minhash_candidates_ids(hashed)
     pairs = _verify_common_ids(cands, hashed)

@@ -423,14 +423,12 @@ def events_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # user-grain metric table, persisted: the shared boundary-sample job,
     # the fused count job and the final plan each consume it — without the
     # persist the fact scan+agg would re-run per job.
-    from vat_etl_spark.functions.caching import cache_latest
-
     per_user = p.groupBy("user_id").agg(
         F.max("d").alias("last_d"),
         F.count("*").alias("frequency"),
         F.sum("cents").alias("monetary_cents"),
     )
-    (per_user,) = cache_latest("events_rfm_segmentation", per_user)
+    per_user = per_user.persist()
     scored, extras = two_pass_ntile_multi(
         per_user,
         [
@@ -568,14 +566,12 @@ def events_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     division. Scale shape: one fact agg to the (day,hour) grain, a
     dow×hour (≤168-row) baseline re-agg, broadcast back."""
     e = _t(spark, sf_dir, "events")
-    from vat_etl_spark.functions.caching import cache_latest
-
     hourly = e.groupBy(
         F.to_date("ts").alias("day"),
         F.hour("ts").alias("hr"),
         F.dayofweek(F.to_date("ts")).alias("dow"),
     ).agg(F.count("*").alias("n"))
-    (hourly,) = cache_latest("events_seasonal_anomaly", hourly)
+    hourly = hourly.persist()
     baseline = hourly.groupBy(
         F.col("dow").alias("b_dow"), F.col("hr").alias("b_hr")
     ).agg(F.sum("n").alias("tot"), F.count("*").alias("n_slots"))

@@ -170,14 +170,12 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The edge list feeds FIVE consumers (deg, both orientation sides, tot,
     # and transitively e1/e2/e3): Catalyst does not dedupe common subtrees,
     # so without persist the lineitem self-join would run five times.
-    from vat_etl_spark.functions.caching import cache_latest
-
     e = (
         a.join(b, (F.col("ok") == F.col("ok2")) & (F.col("u") < F.col("v")))
         .select("u", "v")
         .distinct()
     )
-    (e,) = cache_latest("graph_triangle_count:edges", e)
+    e = e.persist()
     deg = (
         e.select(F.col("u").alias("node"))
         .unionAll(e.select(F.col("v").alias("node")))
@@ -197,7 +195,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("dst"),
         F.when(fwd, F.col("dv")).otherwise(F.col("du")).alias("ddst"),
     )
-    (o,) = cache_latest("graph_triangle_count:oriented", o)  # e1/e2/e3
+    o = o.persist()  # e1/e2/e3
     e1 = o.select(F.col("src").alias("s1"), F.col("dst").alias("a1"), F.col("ddst").alias("da"))
     e2 = o.select(F.col("src").alias("s2"), F.col("dst").alias("b2"), F.col("ddst").alias("db"))
     e3 = o.select(F.col("src").alias("s3"), F.col("dst").alias("d3"))
@@ -282,13 +280,11 @@ def graph_bfs_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Persist: the recursion's step query re-reads this view every
     # iteration (plus the anchor's seed scan) — without it each BFS hop
     # would re-run the fact join that derives the edge list.
-    from vat_etl_spark.functions.caching import cache_latest
-
     edges = (
         pairs.select(F.col("c2").alias("src"), F.col("s2").alias("dst"))
         .unionAll(pairs.select(F.col("s2").alias("src"), F.col("c2").alias("dst")))
     )
-    (edges,) = cache_latest("graph_bfs:edges", edges)
+    edges = edges.persist()
     edges.createOrReplaceTempView("bfs_edges_v")
     return spark.sql(
         """

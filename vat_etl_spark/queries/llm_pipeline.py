@@ -834,10 +834,8 @@ _FUNNEL = (
         b.spark, b.sf_dir), raw=True),
     # C4 keep-first global line dedup
     _Stage("line_dedup", lambda b, cur: _rewrite(cur, reassemble_lines(line_dedup_plan(cur)))),
-    # Lee-et-al repeated-span excision; a cache site distinct from the
-    # registered query's (see span_removal_plan's cache_key contract)
-    _Stage("span_removal", lambda b, cur: _rewrite(
-        cur, span_removal_plan(cur, cache_key="span_removal_toked:corpus"))),
+    # Lee-et-al repeated-span excision
+    _Stage("span_removal", lambda b, cur: _rewrite(cur, span_removal_plan(cur))),
     _Stage("base_dedup", _base_dedup, base=True),
     # SimHash banded keep-first near-dup admission
     _Stage("neardup", _neardup),
@@ -1361,33 +1359,21 @@ def pipeline_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     return span_removal_plan(_docs_fanout(spark, sf_dir))
 
 
-def span_removal_plan(
-    d: DataFrame, cache_key: str = "span_removal_toked"
-) -> DataFrame:
+def span_removal_plan(d: DataFrame) -> DataFrame:
     """The span-removal plan over an arbitrary docs frame (needs
     ``doc_id``, ``text``) — the shared core of
     :func:`pipeline_span_removal` and the ``build_corpus`` funnel stage,
     where it runs over the docs that SURVIVED the upstream filters (span
     duplication is a property of the current corpus, not the raw feed).
-    Returns one row per input doc with ``cleaned_text``.
-
-    ``cache_key``: cache_latest site key for the tokenized frame. The
-    two call sites MUST use distinct keys (r15 review finding): with a
-    shared key, a build_corpus run between bench passes of the prepared
-    pipeline_span_removal plan rotated the key and silently unpersisted
-    the prepared plan's cache — later passes re-ran the corpus scan +
-    tokenizer for all three consumers, exactly the cost this cache
-    removes."""
-    from vat_etl_spark.functions.caching import cache_latest
-
+    Returns one row per input doc with ``cleaned_text``."""
     w = _SPAN_W
     toked = d.select("doc_id", tokens_expr(F.col("text")).alias("t"))
     # round 15 (guide §2.4/§5, same intra-call pattern as _graph_serve):
     # the tokenized frame feeds THREE consumers — the dup-span aggregate,
     # the hits join probe, and the final join-back — and each one
     # re-scanned the corpus parquet and re-ran the regexp tokenizer.
-    # cache_latest bounds it to one live copy; every call re-materializes.
-    (toked,) = cache_latest(cache_key, toked)
+    # Persisted for this call; the caller releases it at the run boundary.
+    toked = toked.persist()
     # round 15 (guide §2.3): the two span-keyed shuffles (dup aggregate,
     # hits join) carried the w-token span STRING (~6w bytes/row at token
     # grain); xxhash64 narrows the key to 8 bytes. Same collision budget

@@ -180,9 +180,7 @@ def multimodal_shard_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
             "payload_bytes"
         ),
     )
-    from vat_etl_spark.functions.caching import cache_latest
-
-    (sized,) = cache_latest("multimodal_shard_packing", sized)
+    sized = sized.persist()
     ranked = two_pass_rank(
         sized, [("payload_bytes", "desc"), ("doc_id", "asc")], rank_col="rk"
     )

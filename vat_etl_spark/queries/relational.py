@@ -1991,9 +1991,7 @@ def agg_percent_of_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    from vat_etl_spark.functions.caching import cache_latest
-
-    (b,) = cache_latest("agg_percent_of_parent", b)  # leaf partials feed parent, total, AND the final join
+    b = b.persist()  # leaf partials feed parent, total, AND the final join
     m = b.groupBy(F.col("category").alias("m_cat")).agg(F.sum("rev").alias("crev"))
     t = b.agg(F.sum("rev").alias("trev"))
     return (
@@ -2049,15 +2047,13 @@ def agg_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape: one fact agg to customer grain, one two-pass range-partitioned
     rank over that grain (functions/ranks.py — rank arithmetic is
     layout-free, no single-partition WindowExec), one tiny reduce."""
-    from vat_etl_spark.functions.caching import cache_latest
-
     o = _t(spark, sf_dir, "orders")
     cust = o.groupBy("o_custkey").agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).alias("spend")
     )
     # the two-pass helper's boundary-sample and bucket-count jobs re-execute
     # their input — persist the customer-grain agg so the fact scan runs once
-    (cust,) = cache_latest("agg_gini_concentration", cust)
+    cust = cust.persist()
     ranked = two_pass_rank(
         cust, [("spend", "asc"), ("o_custkey", "asc")], rank_col="rk"
     ).select("spend", "rk")
@@ -2179,13 +2175,11 @@ def agg_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative/total sums are triangular broadcast self-joins — the whole
     plan has NO single-partition WindowExec (asserted in
     tests/test_plans.py)."""
-    from vat_etl_spark.functions.caching import cache_latest
-
     o = _t(spark, sf_dir, "orders")
     cust = o.groupBy("o_custkey").agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).alias("spend")
     )
-    (cust,) = cache_latest("agg_lorenz_deciles", cust)
+    cust = cust.persist()
     d = two_pass_ntile(
         cust, [("spend", "asc"), ("o_custkey", "asc")], 10, tile_col="decile"
     ).select("spend", "decile")

@@ -1535,21 +1535,22 @@ def _graph_serve(
     rank table (v6) so they land on actual ids on any id space."""
     from pyspark.sql import Observation
 
-    from vat_etl_spark.functions.caching import cache_latest
-
     # Per-call table cache (r14, guide §2.4/§5): every hop's
     # AQE-materialized stages re-scanned the graph and embedding parquet;
-    # the three reused tables persist for THIS call (cache_latest bounds
-    # it to one live copy; each call re-materializes — no state survives
-    # a pass). Round 15: the index FRESHNESS fingerprint now rides the
-    # embedding cache's materialization scan as an Observation instead of
-    # build_graph_index running a dedicated corpus count+fingerprint agg
-    # per serve call — at 100 TB that dedicated pass is a full corpus
-    # scan per call; here it was ~0.2 s/pass. Same (count, bit_xor of
-    # xxhash64(vec_id, embedding)) fingerprint over the same raw scan,
-    # same comparison against meta (see _corpus_sig), so the same-count
-    # content-drift guarantee is unchanged — the fingerprint is computed
-    # on the very rows this call will serve from.
+    # the three reused tables persist for THIS call, and the caller's
+    # release_engine_caches drops them at the run boundary. The embedding
+    # frame carries a freshly named Observation, so its plan (and cache
+    # entry) is new on every call and its materialization always fires
+    # the fingerprint below. Round 15: the index FRESHNESS fingerprint
+    # now rides the embedding cache's materialization scan as an
+    # Observation instead of build_graph_index running a dedicated corpus
+    # count+fingerprint agg per serve call — at 100 TB that dedicated
+    # pass is a full corpus scan per call; here it was ~0.2 s/pass.
+    # Same (count, bit_xor of xxhash64(vec_id, embedding)) fingerprint
+    # over the same raw scan, same comparison against meta (see
+    # _corpus_sig), so the same-count content-drift guarantee is
+    # unchanged — the fingerprint is computed on the very rows this call
+    # will serve from.
     raw = _t(spark, sf_dir, "embeddings")
     obs = Observation()
     dst = raw.observe(
@@ -1564,7 +1565,7 @@ def _graph_serve(
     qs = raw.where(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("qid"), _dbl(F.col("embedding")).alias("qv")
     )
-    dst, qs = cache_latest("_graph_serve_emb", dst, qs)
+    dst, qs = dst.persist(), qs.persist()
     dst.count()  # materialize the cache; fires the fingerprint observation
     sig = (int(obs.get["n"] or 0), int(obs.get["fp"] or 0))
     path = f"{_index_root(sf_dir)}/nnd_graph"
@@ -1577,7 +1578,7 @@ def _graph_serve(
     n_vec = sig[0]
     graph = spark.read.parquet(f"{path}/edges_serve")
     nodes = spark.read.parquet(f"{path}/nodes")
-    (g,) = cache_latest("_graph_serve_graph", graph.select("v", "n"))
+    g = graph.select("v", "n").persist()
 
     def score(cand: DataFrame) -> DataFrame:
         # NO static broadcast hint on cand (round-15 negative result,
@@ -2009,13 +2010,6 @@ def load_graph_index(
     path = build_graph_index(spark, sf_dir)
     which = "edges_init" if init else ("edges_serve" if serve else "edges")
     return spark.read.parquet(f"{path}/{which}"), _meta_n_vec(spark, path)
-
-
-def load_graph_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The persisted (rk, vec_id) rank bijection of the graph index —
-    the serve side's seed scatter joins through it (v6)."""
-    path = build_graph_index(spark, sf_dir)
-    return spark.read.parquet(f"{path}/nodes")
 
 
 def build_ivfpq_index(

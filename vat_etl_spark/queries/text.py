@@ -652,11 +652,9 @@ def text_chisq_contingency(spark: SparkSession, sf_dir: str) -> DataFrame:
     over exact integer counts, whereas the scalar χ² statistic would sum
     float cells in engine-specific order — the caller can sum the tiny
     result exactly if a single statistic is wanted."""
-    from vat_etl_spark.functions.caching import cache_latest
-
     d = _t(spark, sf_dir, "documents")
     cell = d.groupBy("lang", "source").agg(F.count("*").alias("observed"))
-    (cell,) = cache_latest("text_chisq_contingency", cell)
+    cell = cell.persist()
     rowt = cell.groupBy("lang").agg(F.sum("observed").alias("r"))
     colt = cell.groupBy("source").agg(F.sum("observed").alias("c"))
     tot = cell.agg(F.sum("observed").alias("t"))
@@ -1075,8 +1073,6 @@ def retrieval_prf_rm3(spark: SparkSession, sf_dir: str) -> DataFrame:
     round 2 adds only the expansion-term postings scan and the 10
     feedback docs' term counting (two BM25 rounds are inherent to PRF, a
     third full postings build is not)."""
-    from vat_etl_spark.functions.caching import cache_latest
-
     lam = _PRF_LAMBDA
     d = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     toks = tokens_expr(F.col("text"))
@@ -1087,7 +1083,7 @@ def retrieval_prf_rm3(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "w")
         .agg(F.count("*").alias("tf"))
     )
-    dl, tf3 = cache_latest("retrieval_prf_rm3", dl, tf3)
+    dl, tf3 = dl.persist(), tf3.persist()
     stats = dl.agg(
         (F.sum("dl").cast("double") / F.count("*")).alias("avgdl"),
         F.count("*").alias("n_docs"),

@@ -139,14 +139,12 @@ def ts_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows (bounded by the calendar). Decimal partial sums stay exact through
     every level, so re-aggregating partials is lossless — the decimal
     analogue of a mergeable sketch."""
-    from vat_etl_spark.functions.caching import cache_latest
-
     o = _t(spark, sf_dir, "orders")
     daily = o.groupBy(F.to_date("o_orderdate").alias("p")).agg(
         F.sum(F.col("o_totalprice").cast("decimal(30,6)")).alias("td"),
         F.count("*").alias("n"),
     )
-    (daily,) = cache_latest("ts_rollup_cascade", daily)
+    daily = daily.persist()
     monthly = daily.groupBy(F.trunc("p", "month").alias("p")).agg(
         F.sum("td").alias("td"), F.sum("n").alias("n")
     )
@@ -371,11 +369,9 @@ def events_max_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(-1).alias("delta"),
         )
     )
-    from vat_etl_spark.functions.caching import cache_latest
-
     # bounds is the full sessionization (two per-user window passes) — the
     # two-pass sweep's sample and bucket-sum jobs would re-run it; persist
-    (bounds,) = cache_latest("events_max_concurrency", bounds)
+    bounds = bounds.persist()
     swept = two_pass_prefix_sum(
         bounds, [("t", "asc"), ("delta", "asc")], "delta", out_col="concurrency"
     )
@@ -574,15 +570,13 @@ def ts_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     not orders — the aggregate-first discipline of this module), so the
     single-partition ordered window is bounded by the date span at any
     data volume."""
-    from vat_etl_spark.functions.caching import cache_latest
-
     o = _t(spark, sf_dir, "orders")
     daily = o.groupBy(F.to_date("o_orderdate").alias("day")).agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).alias(
             "rev_cents"
         )
     )
-    (daily,) = cache_latest("ts_cusum_drift:daily", daily)  # totals agg AND windowed walk
+    daily = daily.persist()  # totals agg AND windowed walk
     n, t = daily.agg(F.count("*"), F.sum("rev_cents")).first()
     w = W.orderBy("day")
     c = daily.withColumn("cum", F.sum("rev_cents").over(w)).withColumn(
@@ -590,7 +584,7 @@ def ts_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dev = F.col("cum") * F.lit(n) - F.col("k") * F.lit(t)
     c = c.select("day", "rev_cents", dev.alias("dev_num_cents"))
-    (c,) = cache_latest("ts_cusum_drift:dev", c)
+    c = c.persist()
     peak = c.agg(F.max(F.abs("dev_num_cents"))).first()[0]
     return c.select(
         "day",

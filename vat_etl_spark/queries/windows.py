@@ -249,13 +249,11 @@ def window_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     (plan-asserted); the grand total is a broadcast 1-row aggregate."""
     from vat_etl_spark.functions.ranks import two_pass_prefix_sum
 
-    from vat_etl_spark.functions.caching import cache_latest
-
     o = _t(spark, sf_dir, "orders")
     per_cust = o.groupBy("o_custkey").agg(
         F.sum(F.col("o_totalprice").cast(_DEC)).alias("rev")
     )
-    (per_cust,) = cache_latest("window_abc_classification", per_cust)
+    per_cust = per_cust.persist()
     cum = two_pass_prefix_sum(
         per_cust, [("rev", "desc"), ("o_custkey", "asc")], "rev", out_col="cum"
     )

@@ -87,17 +87,23 @@ def get_spark(
 
 
 def release_engine_caches(spark: SparkSession) -> int:
-    """Unpersist every DataFrame cache the engine has accumulated
-    (ADVICE-r13: registered queries return LAZY plans, so their internal
-    ``persist()`` layers — banded-dedup slim/kept/dup frames, pHash
-    signature frames, ANN serve inputs — cannot be unpersisted inside the
-    query function and accumulate across invocations in a long-lived
-    session until LRU pressure). Call after a caller's terminal action
-    when memory matters more than re-invocation speed: the SQL
-    CacheManager drops every cached plan (``spark.catalog.clearCache``),
-    then any straggler persisted RDDs are unpersisted directly. Safe at
-    any point — caches rebuild lazily on next use; returns the number of
-    persistent RDDs released."""
+    """Unpersist every DataFrame cache the engine has accumulated.
+
+    The engine's one cache rule: a query ``persist()``s what it reuses
+    within one invocation (banded-dedup slim/kept/dup frames, pHash
+    signature frames, ANN serve inputs, per-grain aggregates), and
+    whoever runs queries back to back calls this at each run boundary.
+    Registered queries return LAZY plans, so a query cannot unpersist its
+    own layers, and no cache may cross a run: two invocations of one
+    query build the same plan, so the second would read the first's
+    ``InMemoryRelation`` instead of recomputing. bench, qtime, perfbench,
+    ``oracle.run_all``, ``tools/sweep.py`` and the pytest fixtures call
+    it after every run.
+
+    The SQL CacheManager drops every cached plan
+    (``spark.catalog.clearCache``), then any straggler persisted RDDs are
+    unpersisted directly. Safe at any point — caches rebuild lazily on
+    next use; returns the number of persistent RDDs released."""
     sc = spark.sparkContext
     spark.catalog.clearCache()
     jrdds = sc._jsc.getPersistentRDDs()  # py4j JavaMap
