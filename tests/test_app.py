@@ -72,6 +72,24 @@ def test_vat_sheet_construction_round_trips(spark, tmp_path):
     assert summary.count() == 12
 
 
+def test_tab_only_first_line_loads_like_the_file_without_it(spark, tmp_path):
+    """Spark's CSV data reader skips a line Java's ``trim`` empties (a lone
+    tab) before it drops the header line, so the header is the next line
+    and the sheet loads as if the tab line were not there."""
+    from vat_etl_spark.app import load_transactions
+
+    frames = []
+    for sub, head in (("plain", ""), ("tab", "\t\n")):
+        (tmp_path / sub).mkdir()
+        p = tmp_path / sub / "Jan 2024.csv"
+        p.write_text(head + CSV)
+        frames.append(load_transactions(spark, str(p)))
+    plain, tab = frames
+    assert tab.columns == plain.columns
+    assert tab.count() == plain.count() == 4
+    assert tab.exceptAll(plain).count() == 0 and plain.exceptAll(tab).count() == 0
+
+
 def test_query_runner_and_list(spark, sf_smoke, capsys):
     main(["query", "q1_pricing_summary", "--sf-dir", sf_smoke, "--explain"], spark=spark)
     out = capsys.readouterr().out

@@ -1,7 +1,9 @@
 """Smoke-level oracle parity: every registered query must hash-match its
-DuckDB oracle at sf0.001 (the full sf0.01 run is the verify recipe /
-driver gate; this keeps `pytest` fast while still executing every plan
-end-to-end against the oracle)."""
+DuckDB oracle at sf0.001 and obey the registry-wide plan rules
+(``plans.plan_violations``) — the one pass that builds every registration
+(the full sf0.01 run is the verify recipe / driver gate; this keeps
+`pytest` fast while still executing every plan end-to-end against the
+oracle)."""
 
 from __future__ import annotations
 

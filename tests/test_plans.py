@@ -298,40 +298,6 @@ def test_tpch_hints_only_constant_dims(spark, sf_smoke):
         assert _broadcast_hint_count(df) <= n + 1, name
 
 
-def test_no_trivially_true_join_predicates(spark, sf_smoke, capfd):
-    """Suite-wide guard for the degenerate derived-DataFrame self-join:
-    ``parent["k"] == derived["k"]`` resolves both references to the SAME
-    attribute, Spark logs ``WARN Column: Constructing trivially true equals
-    predicate`` and (depending on whether DeduplicateRelations can repair
-    the exprIds) may silently drop the condition. Build EVERY registered
-    query's plan (no execution) and fail if any emits the warning or keeps
-    an ``attr#N = attr#N`` condition in its analyzed plan."""
-    import re
-    import sys
-
-    self_eq = re.compile(r"(\w+)#(\d+)L? = \1#\2L?\b")
-    capfd.readouterr()  # drop anything buffered from prior tests
-    offenders: list[str] = []
-    for name, fn in QUERIES.items():
-        df = fn(spark, sf_smoke)
-        qe = df._jdf.queryExecution()
-        analyzed = qe.analyzed().toString()
-        if self_eq.search(analyzed):
-            offenders.append(f"{name}: self-equal predicate in analyzed plan")
-        # same pass, second guard: an ACCIDENTAL cartesian product (a join
-        # whose condition vanished) plans as CartesianProduct — every
-        # intentional crossJoin in the repo is against a broadcast 1-row
-        # aggregate and never planned this way (baseline: zero hits)
-        if "CartesianProduct" in qe.executedPlan().toString():
-            offenders.append(f"{name}: CartesianProduct in physical plan")
-    sys.stderr.flush()
-    err = capfd.readouterr().err
-    if "trivially true equals predicate" in err:
-        lines = [l for l in err.splitlines() if "trivially true" in l]
-        offenders.append(f"WARN during plan build: {lines}")
-    assert not offenders, offenders
-
-
 def test_repetition_and_gopher_are_map_only(spark, sf_smoke):
     # both claim "pure scan, zero shuffles at 100 TB" — pin it
     assert shuffle_count(QUERIES["text_repetition_ngram"](spark, sf_smoke)) == 0
@@ -457,80 +423,6 @@ def test_retrieval_family_topk_plans(spark, sf_smoke):
     ):
         plan = formatted_plan(QUERIES[name](spark, sf_smoke))
         assert "TakeOrderedAndProject" in plan, name
-
-
-def test_rank_family_has_no_single_partition_windows(spark, sf_smoke):
-    """The two-pass range-partitioned rank family (functions/ranks.py) must
-    never compile to an unpartitioned WindowExec — the single-partition
-    global window was the one flagged 100 TB scale-killer; this pins the
-    fix for all five routed queries."""
-    from vat_etl_spark.plans import unpartitioned_window_count
-
-    for name in (
-        "ids_assign_stable",
-        "agg_gini_concentration",
-        "agg_lorenz_deciles",
-        "events_rfm_segmentation",
-        "events_max_concurrency",
-    ):
-        df = QUERIES[name](spark, sf_smoke)
-        assert unpartitioned_window_count(df) == 0, name
-
-
-def test_no_unbounded_single_partition_windows_anywhere(spark, sf_smoke):
-    """Repo-wide structural guarantee: NO registered query may compile to a
-    single-partition WindowExec over an unbounded grain. The whitelist
-    maps every justified global window to a CHECKED boundedness predicate
-    (vat_etl_spark/plans/inspect.py:unpartitioned_window_bound_kinds) —
-    a future edit that unbounds one fails here, a comment can't rot:
-
-    - "limit": the window input subtree contains a LIMIT-family node
-      (TakeOrderedAndProject / Global/Local/CollectLimit) — rank-of-top-k
-      (zipf/skew ranks over top-30/5; RRF over two top-50 branches; eval
-      metrics over LIMIT-50/LIMIT-10 run files).
-    - "calendar": an aggregate below the window groups on a
-      date/timestamp key — the window walks the calendar, not the data.
-
-    agg_equidepth_histogram left the whitelist in r7: it routes through
-    two_pass_ntile now. Anything else with an empty-partition WindowExec
-    is a regression — route it through functions/ranks.py
-    (two_pass_rank/ntile/prefix_sum) or bound its input with a top-k."""
-    from vat_etl_spark.plans import (
-        unpartitioned_window_bound_kinds,
-        unpartitioned_window_count,
-    )
-
-    JUSTIFIED_BOUNDED = {
-        "retrieval_eval_metrics": {"limit"},
-        "text_zipf_rank_freq": {"limit"},
-        "dq_key_skew_profile": {"limit"},
-        "retrieval_hybrid_rrf": {"limit"},
-        "ts_gapfill_interpolate": {"calendar"},
-        "ts_rolling_median": {"calendar"},
-        "ts_yoy_growth": {"calendar"},
-        # day-grain CUSUM walk; its windows are usually hidden behind the
-        # intra-query persist substitution, but when visible they must
-        # carry the calendar bound
-        "ts_cusum_drift": {"calendar"},
-    }
-    offenders = {}
-    seen_whitelisted = 0
-    for name, fn in QUERIES.items():
-        df = fn(spark, sf_smoke)
-        if name in JUSTIFIED_BOUNDED:
-            # every VISIBLE global window must carry the DECLARED bound
-            # (cache substitution can hide windows — vacuous pass is fine,
-            # the bound is re-checked whenever the plan shows them)
-            kinds = unpartitioned_window_bound_kinds(df)
-            if not set(kinds) <= JUSTIFIED_BOUNDED[name]:
-                offenders[name] = kinds
-            seen_whitelisted += len(kinds)
-        elif unpartitioned_window_count(df):
-            offenders[name] = ["not whitelisted"]
-    assert not offenders, offenders
-    # the whitelist is not stale: at least some global windows were seen
-    # and classified this run
-    assert seen_whitelisted >= 5, seen_whitelisted
 
 
 def test_collocation_pmi_plan_shape(spark, sf_smoke):

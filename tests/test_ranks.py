@@ -13,7 +13,7 @@ from vat_etl_spark.functions.ranks import (
     two_pass_prefix_sum,
     two_pass_rank,
 )
-from vat_etl_spark.plans import unpartitioned_window_count
+from vat_etl_spark.plans import unpartitioned_window_bound_kinds
 
 
 def _df(spark):
@@ -65,7 +65,7 @@ def test_prefix_sum_matches_global_window(spark):
 def test_two_pass_plans_have_partitioned_windows_only(spark):
     df = _df(spark)
     ranked = two_pass_rank(df.select("v", "uid"), [("v", "asc"), ("uid", "asc")])
-    assert unpartitioned_window_count(ranked) == 0
+    assert unpartitioned_window_bound_kinds(ranked) == []
 
 
 def test_empty_input(spark):
@@ -99,7 +99,7 @@ def test_ntile_multi_matches_per_metric_global_windows(spark):
     )
     assert extras["n"] == 5000 and extras["mx"] == 4999
     assert exp.exceptAll(got.select("uid", "a", "b", "c")).count() == 0
-    assert unpartitioned_window_count(got) == 0
+    assert unpartitioned_window_bound_kinds(got) == []
 
 
 def test_ntile_multi_runs_two_driver_jobs(spark):

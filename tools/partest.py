@@ -39,12 +39,12 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # coarse serial-seconds hints from measured runs — ordering only, the
 # dynamic queue self-balances; unknown files sort FIRST (assumed long)
 DURATION_HINTS = {
-    "test_oracle_parity.py": 214,
+    "test_oracle_parity.py": 222,
     "test_streaming.py": 200,
     "test_llm_pipeline.py": 100,
     "test_corpus_build.py": 165,
     "test_local_cluster.py": 92,
-    "test_plans.py": 180,
+    "test_plans.py": 16,
     "test_graph.py": 77,
     "test_multimodal.py": 30,
     "test_partition_invariance.py": 57,

@@ -31,6 +31,13 @@ from vat_etl_spark.sources.excel import SANE_BOX_LETTER_RE, box_normalize_compat
 _MONTH_ABBREVS = ["Jan", "Feb", "Mar", "Apr", "May", "Jun",
                   "Jul", "Aug", "Sep", "Oct", "Nov", "Dec"]
 
+# the input columns, as schemas.VAT_TRANSACTIONS_SCHEMA names them
+NET_COL = "Supply/Purchase Value"
+VAT_COL = "VAT Value"
+BOX_COL = "Box"
+MONTHNUM_COL = "MonthNum"
+YEAR_COL = "Year"
+
 BOX_DESCRIPTIONS: dict[str, str] = {
     "Box A": "Standard Rated Supplies (5%)",
     "Box B": "Zero Rated Supplies (0%)",
@@ -40,22 +47,14 @@ BOX_DESCRIPTIONS: dict[str, str] = {
 
 
 def vat_box_summary(
-    df: DataFrame,
-    *,
-    net_col: str = "Supply/Purchase Value",
-    vat_col: str = "VAT Value",
-    box_col: str = "Box",
-    month_col: str | None = "Month",
-    monthnum_col: str = "MonthNum",
-    year_col: str = "Year",
-    compat: bool = True,
+    df: DataFrame, *, month_col: str | None = "Month", compat: bool = True
 ) -> DataFrame:
     """Compute the 4-rows-per-period VAT summary from a normalized
     transaction DataFrame. Output schema = the golden ``vat_summary`` table
     (FIXTURES.md §A2): Period, FTA Box, Description, Net Value, VAT Value,
     Net VAT Payable.
 
-    ``month_col=None`` derives the month label from ``monthnum_col`` AFTER
+    ``month_col=None`` derives the month label from ``MONTHNUM_COL`` AFTER
     aggregation instead of carrying a per-row string through the group
     keys — measured ~2× on the whole aggregate at sf0.1 (string hashing in
     a hot group key is not free). Use it whenever the label is a function
@@ -65,7 +64,7 @@ def vat_box_summary(
     Expressions are Spark SQL text, so building the plan costs a few py4j
     round trips per DataFrame call, not one per sub-expression.
     """
-    box, year, monthnum = ident(box_col), ident(year_col), ident(monthnum_col)
+    box, year, monthnum = ident(BOX_COL), ident(YEAR_COL), ident(MONTHNUM_COL)
 
     # Pre-project per-row work ONCE: the box membership flags (the string
     # normalize+match would otherwise be re-evaluated inside each of the 6
@@ -81,12 +80,12 @@ def vat_box_summary(
             f"{str_lit(SANE_BOX_LETTER_RE)}, 1)"
         )
         flag = lambda L: f"{letter} = '{L}'"  # noqa: E731
-    keys = [year_col, monthnum_col] + ([month_col] if month_col else [])
+    keys = [YEAR_COL, MONTHNUM_COL] + ([month_col] if month_col else [])
     pre = df.selectExpr(
         *[ident(k) for k in keys],
         *[f"{flag(L)} AS _f{L}" for L in "ABC"],
-        f"{micros_text(ident(net_col))} AS _net_u",
-        f"{micros_text(ident(vat_col))} AS _vat_u",
+        f"{micros_text(ident(NET_COL))} AS _net_u",
+        f"{micros_text(ident(VAT_COL))} AS _vat_u",
     )
 
     # hierarchical exact sums (functions/numeric.py): long-micros partials
@@ -135,7 +134,7 @@ def vat_box_summary(
         agg.selectExpr(year, monthnum, f"{period} AS Period", f"inline(array({boxes}))")
         .coalesce(1)
         .sortWithinPartitions(F.expr(year), F.expr(monthnum), F.expr("`FTA Box`"))
-        .drop(year_col, monthnum_col)
+        .drop(YEAR_COL, MONTHNUM_COL)
     )
     return out
 

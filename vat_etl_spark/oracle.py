@@ -15,6 +15,11 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from vat_etl_spark.plans import (
+    BOUNDED_GLOBAL_WINDOWS,
+    plan_violations,
+    trivially_true_predicates,
+)
 from vat_etl_spark.schemas import TESTDATA_TABLES
 from vat_etl_spark.session import release_engine_caches
 
@@ -85,21 +90,32 @@ def run_all(
 ) -> dict[str, tuple[bool, str]]:
     """Run every queries()/oracle_sql() pair and compare. Queries without an
     oracle get a rows-only check (>= 0 rows, i.e. executes successfully).
-    Each query is one run: its engine caches are released after it."""
+    Each built DataFrame must also obey ``plans.plan_violations`` (checked
+    before it executes), and building it must log no trivially-true
+    equals predicate: a query passes only when parity holds and its plan
+    breaks no rule. Each query is one run: its engine caches are
+    released after it."""
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     con = duckdb_connect(sf_dir)
-    results: dict[str, tuple[bool, str]] = {}
+    results: dict[str, tuple[bool, str]] = {
+        name: (False, f"{name}: in BOUNDED_GLOBAL_WINDOWS but not registered")
+        for name in BOUNDED_GLOBAL_WINDOWS.keys() - qs.keys()
+    }
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        df = fn(spark, sf_dir)
+        with trivially_true_predicates(spark) as warned:
+            df = fn(spark, sf_dir)
+        faults = [f"WARN while building: {w}" for w in warned] + plan_violations(name, df)
         if name in oracles:
-            results[name] = compare(df, con, oracles[name], name)
+            ok, msg = compare(df, con, oracles[name], name)
         else:
-            n = df.count()
-            results[name] = (True, f"{name}: rows-only check ({n} rows)")
+            ok, msg = True, f"{name}: rows-only check ({df.count()} rows)"
+        if faults:
+            ok, msg = False, f"{msg}; plan violations: " + "; ".join(faults)
+        results[name] = (ok, msg)
         release_engine_caches(spark)
     return results

@@ -1,5 +1,7 @@
-"""Physical-plan inspection over the formatted explain output, and the
-py4j round trips a block of plan construction costs."""
+"""Physical-plan inspection over the formatted explain output and the JVM
+plan tree, the structural rules every registered query's plan obeys
+(``plan_violations``, enforced by ``oracle.run_all``), and the py4j round
+trips a block of plan construction costs."""
 
 from __future__ import annotations
 
@@ -91,8 +93,10 @@ def shuffle_count(df: DataFrame) -> int:
 
 def _iter_plan_nodes(node):
     """Depth-first walk of a JVM SparkPlan tree, descending into
-    AdaptiveSparkPlanExec/QueryStage wrappers (their physical children
-    hide behind accessor methods, not ``children()``)."""
+    AdaptiveSparkPlanExec/QueryStage wrappers and into the plan that built
+    a cached relation (their physical children hide behind accessor
+    methods, not ``children()``), so a query's own ``persist()`` hides
+    none of its nodes."""
     yield node
     cls = node.getClass().getSimpleName()
     if cls == "AdaptiveSparkPlanExec":
@@ -100,6 +104,9 @@ def _iter_plan_nodes(node):
         return
     if cls.endswith("QueryStageExec"):
         yield from _iter_plan_nodes(node.plan())
+        return
+    if cls == "InMemoryTableScanExec":
+        yield from _iter_plan_nodes(node.relation().cachedPlan())
         return
     children = node.children()
     for i in range(children.size()):
@@ -139,10 +146,10 @@ def _grouping_has_temporal_key(node) -> bool:
 
 
 def unpartitioned_window_bound_kinds(df: DataFrame) -> list[str]:
-    """For every empty-partition WindowExec in the physical plan, classify
-    how its INPUT subtree is bounded — the structural form of the
-    whitelist's boundedness arguments (a comment can silently rot; this
-    predicate fails the build instead):
+    """For every empty-partition WindowExec in the physical plan (cached
+    relations included), classify how its INPUT subtree is bounded — the
+    structural form of ``BOUNDED_GLOBAL_WINDOWS``' boundedness arguments
+    (a comment can silently rot; this predicate fails the build instead):
 
     - ``"limit"``   — a LIMIT-family node (TakeOrderedAndProject /
       Global/Local/CollectLimit) sits below the window: rank-of-top-k.
@@ -167,31 +174,90 @@ def _classify_window_input(node) -> str:
             return "limit"
         if ccls in _AGG_NODE_CLASSES and _grouping_has_temporal_key(child):
             return "calendar"
-        if ccls == "InMemoryTableScanExec":
-            # a cache substitution hides the subtree that justifies the
-            # bound (e.g. the calendar-grain aggregate) — classify the
-            # plan that BUILT the cached relation
-            try:
-                sub = _classify_window_input(child.relation().cachedPlan())
-            except Exception:
-                continue
-            if sub != "unbounded":
-                return sub
     return "unbounded"
 
 
-def unpartitioned_window_count(df: DataFrame) -> int:
-    """Number of WindowExec-family nodes with an EMPTY partition spec —
-    the single-partition global windows that serialize at scale.
-    Inspected on the JVM plan tree (``partitionSpec().isEmpty()``), not
-    the formatted string: long Arguments lines truncate and
-    WindowGroupLimit shares the Window prefix, so string parsing
-    miscounts."""
-    root = df._jdf.queryExecution().executedPlan()  # type: ignore[attr-defined]
-    count = 0
-    for node in _iter_plan_nodes(root):
-        cls = node.getClass().getSimpleName()
-        if cls in ("WindowExec", "WindowInPandasExec"):
-            if node.partitionSpec().isEmpty():
-                count += 1
-    return count
+# Every registered query whose executed plan holds single-partition
+# (empty partitionSpec) windows, with the bound of each one's input
+# (``unpartitioned_window_bound_kinds``). ``plan_violations`` requires an
+# exact match, so a new global window and a stale entry both fail:
+# route a new one through functions/ranks.py (two_pass_rank / ntile /
+# prefix_sum) or bound its input with a top-k before declaring it here.
+BOUNDED_GLOBAL_WINDOWS: dict[str, tuple[str, ...]] = {
+    "text_zipf_rank_freq": ("limit",),  # rank over the top-30
+    "dq_key_skew_profile": ("limit",),  # rank over the top-5
+    "retrieval_hybrid_rrf": ("limit",) * 2,  # one per top-50 branch
+    "retrieval_eval_metrics": ("limit",) * 3,  # LIMIT-10/50 run files
+    "ts_gapfill_interpolate": ("calendar",),  # calendar-day spine
+    "ts_yoy_growth": ("calendar",),  # month grain
+    "ts_rolling_median": ("calendar",),  # day grain, 7-row frames
+    "ts_cusum_drift": ("calendar",),  # day-grain CUSUM walk
+}
+
+# ``parent["k"] == derived["k"]`` resolves both sides to the SAME
+# attribute; where Spark cannot repair it by column name, the plan keeps
+# it as an always-true ``k#N = k#N``
+_SELF_EQUAL = re.compile(r"(\w+)#(\d+)L? = \1#\2L?\b")
+_WARN_APPENDER = "trivially-true-probe"
+
+
+@contextmanager
+def trivially_true_predicates(spark: SparkSession) -> Iterator[list[str]]:
+    """Collect the ``Constructing trivially true equals predicate``
+    warnings the JVM logs while the block builds a plan: the degenerate
+    self-join ``parent["k"] == derived["k"]``, caught also where Spark
+    repairs the condition by column name and the analyzed plan looks
+    sound. Read through a log4j appender: the JVM writes to the stderr it
+    was started with, so pytest's ``capfd`` misses it in any test that
+    runs after the session's JVM started."""
+    jvm = spark._jvm  # type: ignore[attr-defined]
+    core = jvm.org.apache.logging.log4j.core
+    ctx = jvm.org.apache.logging.log4j.LogManager.getContext(False)
+    root = ctx.getConfiguration().getRootLogger()
+    writer = jvm.java.io.StringWriter()
+    layout = core.layout.PatternLayout.newBuilder().withPattern("%m%n").build()
+    appender = core.appender.WriterAppender.createAppender(
+        layout, None, writer, _WARN_APPENDER, False, True
+    )
+    appender.start()
+    found: list[str] = []
+    try:
+        root.addAppender(appender, jvm.org.apache.logging.log4j.Level.WARN, None)
+        ctx.updateLoggers()
+        yield found
+    finally:
+        root.removeAppender(_WARN_APPENDER)
+        ctx.updateLoggers()
+        appender.stop()
+        found += [
+            line
+            for line in writer.toString().splitlines()
+            if "trivially true equals predicate" in line
+        ]
+
+
+def plan_violations(name: str, df: DataFrame) -> list[str]:
+    """The structural rules every registered query's plan obeys, checked
+    on the built DataFrame without executing it; one message per broken
+    rule:
+
+    - no self-equal ``attr#N = attr#N`` predicate in the analyzed plan
+      (a degenerate derived-DataFrame self-join);
+    - no ``CartesianProduct`` in the executed plan (a join whose
+      condition vanished; the intentional crossJoins are against
+      broadcast 1-row aggregates and never plan this way);
+    - the bound kinds of its single-partition windows are exactly its
+      ``BOUNDED_GLOBAL_WINDOWS`` entry (none when it has no entry)."""
+    qe = df._jdf.queryExecution()  # type: ignore[attr-defined]
+    out = []
+    if _SELF_EQUAL.search(qe.analyzed().toString()):
+        out.append("self-equal attr#N = attr#N predicate in the analyzed plan")
+    if "CartesianProduct" in qe.executedPlan().toString():
+        out.append("CartesianProduct in the executed plan")
+    kinds = tuple(sorted(unpartitioned_window_bound_kinds(df)))
+    declared = BOUNDED_GLOBAL_WINDOWS.get(name, ())
+    if kinds != declared:
+        out.append(
+            f"single-partition windows {kinds}, BOUNDED_GLOBAL_WINDOWS declares {declared}"
+        )
+    return out

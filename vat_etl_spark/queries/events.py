@@ -405,8 +405,8 @@ def events_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     scores 1 = best). Scale shape: one filtered fact agg to user grain;
     the three quintile assignments are FUSED two-pass range-partitioned
     ranks (functions/ranks.py two_pass_ntile_multi — layout-free, same
-    results as global ntile, no single-partition WindowExec; asserted in
-    tests/test_plans.py). Exactly TWO driver-coordinated jobs for all
+    results as global ntile, no single-partition WindowExec; asserted by
+    plans.plan_violations). Exactly TWO driver-coordinated jobs for all
     three metrics — one shared boundary sample + one fused bucket-count
     aggregate that also carries the recency anchor max(last_d) — down
     from nine (3x sample + 3x count + anchor + ...) when each ntile ran

@@ -1592,8 +1592,8 @@ def ids_assign_stable(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundaries → per-bucket counts → broadcast cumulative offsets → offset +
     per-bucket local row_number. Rank arithmetic is layout-free, so the
     result is bit-identical to ``row_number() OVER (ORDER BY s_suppkey)``
-    with NO single-partition WindowExec anywhere in the plan (asserted in
-    tests/test_plans.py). ``monotonically_increasing_id`` is the
+    with NO single-partition WindowExec anywhere in the plan (asserted by
+    plans.plan_violations). ``monotonically_increasing_id`` is the
     zero-shuffle alternative when ids only need uniqueness, not density or
     stability across runs — its values encode (partition, row) and change
     with the layout, so it never feeds an oracle-checked contract."""
@@ -2173,8 +2173,8 @@ def agg_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: fact → customer grain → 10 rows; the global ntile is two-pass
     range-partitioned rank arithmetic (functions/ranks.py), and the 10-row
     cumulative/total sums are triangular broadcast self-joins — the whole
-    plan has NO single-partition WindowExec (asserted in
-    tests/test_plans.py)."""
+    plan has NO single-partition WindowExec (asserted by
+    plans.plan_violations)."""
     o = _t(spark, sf_dir, "orders")
     cust = o.groupBy("o_custkey").agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).alias("spend")

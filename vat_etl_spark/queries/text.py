@@ -328,9 +328,10 @@ def pipeline_training_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivors = keyed.groupBy("fp").agg(F.min("doc_id").alias("keep_id"))
     # Alias both sides: ``survivors`` is derived from ``keyed``, so
     # ``keyed["fp"] == survivors["fp"]`` would resolve both references to
-    # the SAME attribute and Spark silently drops it as a trivially-true
-    # predicate. Explicit aliases make the fp equality a real join key
-    # (guarded suite-wide by tests/test_plans.py::test_no_trivially_true_join_predicates).
+    # the SAME attribute: a trivially-true predicate that Spark repairs by
+    # column name only where it can, with a WARN. Explicit aliases make the
+    # fp equality a real join key (guarded registry-wide in oracle.run_all
+    # by plans.plan_violations and the build-time WARN check).
     return (
         keyed.alias("k")
         .join(

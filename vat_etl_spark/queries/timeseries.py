@@ -346,7 +346,7 @@ def events_max_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     the global sweep, which runs as ``two_pass_prefix_sum``
     (functions/ranks.py): range buckets by (t, delta) → per-bucket delta
     sums → broadcast opening balances → local running sum. No
-    single-partition WindowExec (asserted in tests/test_plans.py)."""
+    single-partition WindowExec (asserted by plans.plan_violations)."""
     e = _t(spark, sf_dir, "events")
     wu = W.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(wu)

@@ -105,6 +105,8 @@ def hadoop_path(spark: SparkSession, path: str):
 
 _BOM = b"\xef\xbb\xbf"
 _CHUNK = 1 << 16
+# the bytes Java's String.trim strips: every byte <= 0x20
+_JAVA_TRIM = bytes(range(0x21))
 
 
 def _hidden(name: str) -> bool:
@@ -117,17 +119,18 @@ def _hidden(name: str) -> bool:
 
 
 def _first_nonblank_line(stream) -> str | None:
-    """First line of a JVM ``InputStream`` that is not all spaces: Spark's
-    header inference skips a line SQL ``trim`` empties (a tab-only line is
-    a header). Lines end at LF, CR or CRLF, and a leading UTF-8 BOM is
-    dropped, as in Hadoop's line reader. Reads 64 KiB per round trip."""
+    """First line of a JVM ``InputStream`` that Java's ``trim`` does not
+    empty (every byte <= 0x20 is blank): the lines Spark's CSV data
+    reader skips before it drops the header line. Lines end at LF, CR or
+    CRLF, and a leading UTF-8 BOM is dropped, as in Hadoop's line reader.
+    Reads 64 KiB per round trip."""
     buf, eof = b"", False
     while not eof:
         chunk = bytes(stream.readNBytes(_CHUNK))
         buf, eof = buf + chunk, len(chunk) < _CHUNK
         lines = re.split(rb"\r\n|\r|\n", buf.removeprefix(_BOM))
         for line in lines if eof else lines[:-1]:
-            if line.strip(b" "):
+            if line.strip(_JAVA_TRIM):
                 return line.decode("utf-8", "replace")
     return None
 
@@ -135,6 +138,12 @@ def _first_nonblank_line(stream) -> str | None:
 def csv_header(spark: SparkSession, path: str) -> list[str]:
     """The column names ``spark.read.option("header", "true").csv(path)``
     infers, without the Spark job that inference runs.
+
+    One case differs on purpose: a leading line that is blank only to
+    Java's ``trim`` (e.g. a lone tab). Spark's inference takes it as the
+    header (it skips only lines SQL ``trim`` empties), but its data reader
+    skips it and drops the next line as the header; the names here are
+    that next line's, so they name the rows the reader returns.
 
     The header is read as file metadata: the first non-blank line of the
     file inference reads first (for a directory or glob, the largest file:
