@@ -233,13 +233,13 @@ def test_kmeans_lloyd_deterministic_and_total(spark, sf_smoke):
 
 
 def test_prefix_filter_shrinks_candidates_losslessly(spark, sf_smoke):
-    """The prefix-filtered join must (a) index strictly fewer posting rows
-    than the naive inverted index and (b) return exactly the naive result
-    (the oracle also re-proves (b) at sf0.01 every round)."""
+    """The prefix filter must index strictly fewer posting rows than the
+    naive inverted index; that its result equals the naive join is
+    test_ngram_jaccard_equals_naive_full_postings_join (and the oracle
+    re-proves it at sf0.01 every round)."""
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
-    from vat_etl_spark.queries import QUERIES
     from vat_etl_spark.queries.text import tokens_expr
     from vat_etl_spark.sources.catalog import read_table
 
@@ -256,17 +256,6 @@ def test_prefix_filter_shrinks_candidates_losslessly(spark, sf_smoke):
         F.col("rk") <= F.col("n") - F.ceil(F.lit(0.6) * F.col("n")) + 1
     ).count()
     assert n_prefix < 0.55 * n_naive  # ~40% of postings indexed at tau=0.6
-
-    keys = ["doc_a", "doc_b", "common"]
-    naive = sorted(
-        tuple(r[k] for k in keys)
-        for r in QUERIES["dedup_ngram_jaccard"](spark, sf_smoke).collect()
-    )
-    pref = sorted(
-        tuple(r[k] for k in keys)
-        for r in QUERIES["dedup_jaccard_prefix"](spark, sf_smoke).collect()
-    )
-    assert naive == pref
 
 
 def test_lsh_recall_against_exact_ground_truth(spark, sf_smoke):
@@ -299,22 +288,19 @@ def test_phonetic_blocking_recall_against_exact_ground_truth(spark, sf_smoke):
     assert row.recall >= 0.95, (row.n_hits, row.n_truth_pairs)
 
 
-def test_df_cap_candidate_index_is_lossless(spark, sf_smoke):
-    """dedup_ngram_jaccard's df-capped candidate index must equal the naive
-    (uncapped) inverted-index join. Run with a cap small enough to actually
-    bite at this corpus size (df_cap=5 drops every common token's postings
-    from the capped side of the index), so equality exercises the prefix
-    rescue, not a no-op cap."""
+def test_ngram_jaccard_equals_naive_full_postings_join(spark, sf_smoke):
+    """dedup_ngram_jaccard indexes only each doc's rarest-first prefix
+    (PPJoin), so its result must equal the naive inverted-index join over
+    every token's full postings list."""
     from pyspark.sql import functions as F
 
-    from vat_etl_spark.queries.dedup import _ngram_jaccard_capped
     from vat_etl_spark.queries.text import tokens_expr
     from vat_etl_spark.sources.catalog import read_table
 
     keys = ["doc_a", "doc_b", "common", "n_a", "n_b"]
-    capped = sorted(
+    got = sorted(
         tuple(r[k] for k in keys)
-        for r in _ngram_jaccard_capped(spark, sf_smoke, df_cap=5).collect()
+        for r in QUERIES["dedup_ngram_jaccard"](spark, sf_smoke).collect()
     )
     # naive reference: full postings self-join, no cap (the r02 plan)
     d = read_table(spark, sf_smoke, "documents")
@@ -346,7 +332,7 @@ def test_df_cap_candidate_index_is_lossless(spark, sf_smoke):
         .select(*keys)
         .collect()
     )
-    assert capped == naive and len(capped) > 0
+    assert got == naive and len(got) > 0
 
 
 def test_ivf_recall_against_exact_ground_truth(spark, sf_smoke):

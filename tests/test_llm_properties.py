@@ -1,45 +1,43 @@
-"""Hypothesis property tests for the round-5 expression kernels: the BPE
-merge fold and the perceptual-hash signature must agree with their pure-
-Python references on adversarial inputs the corpus never produces
-(overlap runs like a,a,a; merged symbols re-matching; empty/1-byte
-payloads). Batched — one Spark job per property run."""
+"""Hypothesis property tests for the round-5 kernels: the BPE encoder and
+the perceptual-hash signature must agree with their pure-Python
+references on adversarial inputs the corpus never produces (overlap runs
+like a,a,a; merged symbols re-matching; empty/1-byte payloads). The BPE
+property is pure Python; the pHash one runs one Spark job per example."""
 
 from __future__ import annotations
 
 from hypothesis import given, settings, strategies as st
-from pyspark.sql import functions as F
 
 from vat_etl_spark.operators.multimodal import PHASH_BITS
-from vat_etl_spark.queries.llm_pipeline import _merge_pair_expr
+from vat_etl_spark.queries.llm_pipeline import _bpe_encode_len
 
 
 from tests.conftest import py_bpe_merge as _py_merge
+from tests.conftest import train_ref_bpe
 
 
-syms = st.sampled_from(["a", "b", "aa", "ab", "c"])
+letters = st.sampled_from("abc")
 
 
-@settings(max_examples=25, deadline=None)
+@settings(max_examples=100, deadline=None)
 @given(
-    st.lists(st.lists(syms, min_size=0, max_size=12), min_size=1, max_size=16),
-    syms,
-    syms,
+    st.lists(st.text(alphabet="abc", max_size=12), min_size=1, max_size=16),
+    letters,
+    letters,
 )
-def test_merge_fold_matches_python_reference(spark, arrays, a, b):
-    # includes the nasty cases: runs of the pair symbol (a,a,a with pair
-    # (a,a) must fuse leftmost-first -> [aa, a]), and a merged symbol that
-    # equals the left element (pair (aa, b) after an (a,a) fuse)
-    df = spark.createDataFrame(
-        [(i, arr) for i, arr in enumerate(arrays)], "i int, syms array<string>"
-    )
-    got = {
-        r.i: list(r.m)
-        for r in df.select(
-            "i", _merge_pair_expr(F.col("syms"), a, b).alias("m")
-        ).collect()
-    }
-    for i, arr in enumerate(arrays):
-        assert got[i] == _py_merge(arr, a, b), (arr, a, b)
+def test_merge_fold_matches_python_reference(words, a, b):
+    # one merge: runs of the pair symbol (a,a,a with pair (a,a) must fuse
+    # leftmost-first -> [aa, a])
+    for w in words:
+        want = len(_py_merge(list(w), a, b))
+        assert _bpe_encode_len(w, {(a, b): 1}) == want, (w, a, b)
+    # a learned table, where merged symbols re-match (pair (aa, b) after an
+    # (a,a) fuse): the rank-priority encoder must land on the sequential
+    # encoder's symbols
+    merges, syms, _ = train_ref_bpe(words, n_merges=8)
+    ranks = {(x, y): r for r, x, y, _ in merges}
+    for w, want in syms.items():
+        assert _bpe_encode_len(w, ranks) == len(want), (w, merges)
 
 
 @settings(max_examples=15, deadline=None)

@@ -93,6 +93,29 @@ def test_workbook_datasource_distributed_sheets(spark, tmp_path):
     assert rows["2"]["Supply/Purchase Value"] == "USD 100"
 
 
+def test_workbook_datasource_first_duplicate_header_wins(spark, tmp_path):
+    """Two headers that canonicalize to one name ("Net" and "Supply/Purchase
+    Value") read from the FIRST column, as excel.read_workbook keeps the
+    first (``~columns.duplicated()``) — in the batch read and in the row
+    reader the stream source shares."""
+    from vat_etl_spark.sources.workbook_datasource import (
+        WorkbookDataSource,
+        _read_sheet_rows,
+    )
+
+    wb = tmp_path / "wb_dup"
+    wb.mkdir()
+    (wb / "Jan 2024.csv").write_text(
+        "Supply Type,Net,Date,Tax,Gross,Box,Supply/Purchase Value\n"
+        "Sales,100,01/01/2024,5,105,A,999\n"
+    )
+    spark.dataSource.register(WorkbookDataSource)
+    rows = spark.read.format("vat_workbook").load(str(wb)).collect()
+    assert [r["Supply/Purchase Value"] for r in rows] == ["100"]
+    (streamed,) = _read_sheet_rows(str(wb), "Jan 2024.csv")
+    assert tuple(rows[0]) == streamed
+
+
 def test_workbook_datasource_feeds_vat_pipeline(spark, tmp_path):
     """End-to-end: custom source → normalize → flagship summary."""
     from pyspark.sql import functions as F

@@ -85,7 +85,7 @@ SECTIONS = [
     "dedup_minhash_ml_reference",
     "dedup_minhash_banded",
     "dedup_simhash",
-    # round-8 late: BPE apply as a zero-shuffle native-replace projection;
+    # BPE apply as a zero-shuffle rank-priority-encoder projection;
     # the filter-agreement analysis (three registered subplans, one 3-way
     # join, one aggregate row)
     "text_bpe_apply",

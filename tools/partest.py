@@ -41,22 +41,22 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DURATION_HINTS = {
     "test_oracle_parity.py": 222,
     "test_streaming.py": 200,
-    "test_llm_pipeline.py": 100,
+    "test_llm_pipeline.py": 56,
     "test_corpus_build.py": 165,
     "test_local_cluster.py": 92,
     "test_plans.py": 16,
     "test_graph.py": 77,
     "test_multimodal.py": 30,
     "test_partition_invariance.py": 57,
-    "test_dedup_determinism.py": 90,
+    "test_dedup_determinism.py": 82,
     "test_timeseries.py": 22,
     "test_ranks.py": 40,
     "test_vat_pipeline.py": 30,
     "test_sampling.py": 25,
-    "test_llm_properties.py": 33,
+    "test_llm_properties.py": 17,
     "test_app.py": 170,
     "test_sinks.py": 28,
-    "test_sources.py": 39,
+    "test_sources.py": 16,
     "test_currency_properties.py": 50,
     "test_dates_properties.py": 36,
     "test_months_properties.py": 32,

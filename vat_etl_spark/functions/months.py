@@ -14,7 +14,6 @@ from __future__ import annotations
 
 import re
 import unicodedata
-from datetime import datetime
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -23,6 +22,11 @@ MONTHS_MAP: dict[str, int] = {
     "jan": 1, "feb": 2, "mar": 3, "apr": 4, "may": 5, "jun": 6,
     "jul": 7, "aug": 8, "sep": 9, "sept": 9, "oct": 10, "nov": 11, "dec": 12,
 }
+
+# month number - 1 -> the label every month column carries (fixed, not
+# strftime("%b"), so the labels never follow the process locale)
+MONTH_ABBREVS = ["Jan", "Feb", "Mar", "Apr", "May", "Jun",
+                 "Jul", "Aug", "Sep", "Oct", "Nov", "Dec"]
 
 _NUM_RE = re.compile(r"\b(0?[1-9]|1[0-2])\b")
 
@@ -37,7 +41,7 @@ def extract_month_from_name(sheet_name: str) -> tuple[str, int]:
     match = _NUM_RE.search(s)
     if match:
         m_num = int(match.group(1))
-        return datetime(2000, m_num, 1).strftime("%b"), m_num
+        return MONTH_ABBREVS[m_num - 1], m_num
     return "Unknown", 0
 
 
@@ -56,12 +60,11 @@ def month_expr(col: Column) -> tuple[Column, Column]:
         )
     assert num is not None and name is not None
     fallback_num = F.regexp_extract(s, r"\b(0?[1-9]|1[0-2])\b", 1).try_cast("int")
-    abbrevs = [datetime(2000, m, 1).strftime("%b") for m in range(1, 13)]
     # guard: Spark 4.1's element_at(arr, NULL) yields the LAST element, not
     # NULL — wrap in an explicit null check
     fallback_name = F.when(
         fallback_num.isNotNull(),
-        F.element_at(F.array(*[F.lit(a) for a in abbrevs]), fallback_num),
+        F.element_at(F.array(*[F.lit(a) for a in MONTH_ABBREVS]), fallback_num),
     )
     out_num = F.coalesce(num, fallback_num, F.lit(0))
     out_name = F.coalesce(name, fallback_name, F.lit("Unknown"))

@@ -24,12 +24,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vat_etl_spark.functions.months import MONTH_ABBREVS
 from vat_etl_spark.functions.numeric import hsum_merge_text, micros_text
 from vat_etl_spark.functions.sqltext import ident, str_lit
 from vat_etl_spark.sources.excel import SANE_BOX_LETTER_RE, box_normalize_compat
-
-_MONTH_ABBREVS = ["Jan", "Feb", "Mar", "Apr", "May", "Jun",
-                  "Jul", "Aug", "Sep", "Oct", "Nov", "Dec"]
 
 # the input columns, as schemas.VAT_TRANSACTIONS_SCHEMA names them
 NET_COL = "Supply/Purchase Value"
@@ -103,7 +101,7 @@ def vat_box_summary(
     if month_col:
         label = ident(month_col)
     else:
-        abbrevs = ", ".join(str_lit(m) for m in _MONTH_ABBREVS)
+        abbrevs = ", ".join(str_lit(m) for m in MONTH_ABBREVS)
         label = (
             f"CASE WHEN {monthnum} >= 1 AND {monthnum} <= 12"
             f" THEN element_at(array({abbrevs}), {monthnum}) ELSE 'Unknown' END"

@@ -67,7 +67,6 @@ _FIRST = [
     "agg_approx_distinct",
     "agg_statistics",
     "kmeans_lloyd",
-    "text_bpe_apply_trie",
     "text_bpe_apply",
     "multimodal_dedup_phash",
     "sample_stratified_orders",

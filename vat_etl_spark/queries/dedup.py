@@ -175,31 +175,32 @@ def _verify_common_ids(cands: DataFrame, hashed: DataFrame) -> DataFrame:
     )
 
 
-def _ngram_jaccard_capped(
-    spark: SparkSession, sf_dir: str, df_cap: int, tau: float = 0.6
-) -> DataFrame:
-    """Token-set Jaccard ≥ τ with a SKEW-BOUNDED candidate index.
+@query("dedup_ngram_jaccard", oracle=_JACCARD_SQL)
+def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-dup detection by token-set Jaccard ≥ 0.6 as a prefix-filtered
+    set-similarity join (PPJoin-lite). The ORACLE IS THE NAIVE ALGORITHM
+    (full inverted-index self-join), so the driver gate re-proves
+    losslessness every round, but candidates are generated from only each
+    document's prefix tokens.
 
-    The naive inverted-index self-join is quadratic in the hottest token's
-    document frequency — at 100 TB a stop-word's postings list alone makes
-    the shuffle explode. This plan caps it losslessly:
-
-    - index = (each doc's rarest-first prefix of length n − ⌈τ·n⌉ + 1)
-      ∪ (tokens with df ≤ ``df_cap``).
-    - The prefix part alone already guarantees no qualifying pair is lost
-      (the PPJoin prefix-filter theorem — see dedup_jaccard_prefix), so
-      adding df-capped tokens keeps a superset of a lossless candidate
-      set: still exact, proven equal to the naive join in
-      tests/test_dedup_determinism.py with a cap small enough to bite.
-    - Postings of a token are bounded by max(df_cap, its prefix
-      occurrences); a hot token enters a doc's prefix only when the doc
-      has almost nothing rarer, so the quadratic blowup is gone.
+    Theory: for Jaccard ≥ τ, any qualifying pair overlaps in ≥ ⌈τ·n⌉ tokens
+    of EACH document (a pair failing min-size τ·max can't reach τ at all),
+    so a document can withhold its ⌈τ·n⌉−1 most common tokens from the
+    inverted index and no pair is lost: prefix length L = n − ⌈τ·n⌉ + 1
+    under a global rarest-first (df asc, tok) token order. At τ=0.6 that
+    indexes ~40% of each token set, and because the withheld tokens are
+    precisely the highest-df ones, the hot-token skew that makes the naive
+    join's shuffle quadratic in the hottest token's document frequency at
+    100 TB is what gets dropped: a hot token enters a doc's prefix only
+    when the doc has almost nothing rarer (postings shrink and equality
+    with the naive join are asserted in tests/test_dedup_determinism.py).
 
     Candidates are then verified exactly via _verify_common_tokens
     (row-sized array intersection; this corpus is near-dup-SATURATED —
     1.8 M true pairs among 5 000 docs at sf0.1, see SCALE.md — so
     verification, not candidate generation, dominates and its shuffle
     must be output-bound)."""
+    tau = 0.6
     d = _docs_fanout(spark, sf_dir)
     docsets = d.select(
         "doc_id", "lang", F.array_distinct(tokens_expr(F.col("text"))).alias("ts")
@@ -207,15 +208,14 @@ def _ngram_jaccard_capped(
     toks = docsets.select("doc_id", "lang", F.explode("ts").alias("tok"))
     sizes = toks.groupBy("doc_id").agg(F.count("*").alias("n"))
     df_ = toks.groupBy("tok").agg(F.count("*").alias("df"))
-    from pyspark.sql import Window as W
-
     rk = F.row_number().over(W.partitionBy("doc_id").orderBy("df", "tok"))
     ranked = toks.join(df_, "tok").join(sizes, "doc_id").select(
-        "doc_id", "lang", "tok", "n", F.col("df"), rk.alias("rk")
+        "doc_id", "lang", "tok", "n", rk.alias("rk")
     )
-    prefix_len = F.col("n") - F.ceil(F.lit(tau) * F.col("n")) + 1
-    index = ranked.filter((F.col("rk") <= prefix_len) | (F.col("df") <= df_cap))
-    a, b = index.alias("a"), index.alias("b")
+    prefix = ranked.filter(
+        F.col("rk") <= F.col("n") - F.ceil(F.lit(tau) * F.col("n")) + 1
+    )
+    a, b = prefix.alias("a"), prefix.alias("b")
     cands = (
         a.join(
             b,
@@ -227,21 +227,13 @@ def _ngram_jaccard_capped(
         .distinct()
     )
     pairs = _verify_common_tokens(cands, docsets)
-    jac = F.col("common").cast("double") / (F.col("n_a") + F.col("n_b") - F.col("common"))
+    jac = F.col("common").cast("double") / (
+        F.col("n_a") + F.col("n_b") - F.col("common")
+    )
     return (
         pairs.select("doc_a", "doc_b", "common", "n_a", "n_b", jac.alias("jaccard"))
         .filter(F.col("jaccard") >= tau)
     )
-
-
-@query("dedup_ngram_jaccard", oracle=_JACCARD_SQL)
-def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup detection by token-set Jaccard ≥ 0.6 via an inverted-index
-    token join — with the hot-token postings capped in-plan (df ≤ 1000,
-    prefix rescue keeps it lossless; see _ngram_jaccard_capped) so the
-    candidate shuffle is no longer quadratic in the hottest token at
-    100 TB."""
-    return _ngram_jaccard_capped(spark, sf_dir, df_cap=1000)
 
 
 _COSDUP_SQL = """
@@ -1242,62 +1234,6 @@ def fuzzy_match_names(spark: SparkSession, sf_dir: str) -> DataFrame:
         c.join(s, "blk")
         .where(dist <= 1)
         .select("c_custkey", "s_suppkey", dist.alias("dist"))
-    )
-
-
-@query("dedup_jaccard_prefix", oracle=_JACCARD_SQL)
-def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Prefix-filtered set-similarity join (PPJoin-lite): identical result
-    contract to dedup_ngram_jaccard — the ORACLE IS THE NAIVE ALGORITHM, so
-    the driver gate re-proves losslessness every round — but candidates are
-    generated from only each document's prefix tokens.
-
-    Theory: for Jaccard ≥ τ, any qualifying pair overlaps in ≥ ⌈τ·n⌉ tokens
-    of EACH document (a pair failing min-size τ·max can't reach τ at all),
-    so a document can withhold its ⌈τ·n⌉−1 most common tokens from the
-    inverted index and no pair is lost: prefix length L = n − ⌈τ·n⌉ + 1
-    under a global rarest-first (df asc, tok) token order. At τ=0.6 that
-    indexes ~40% of each token set, and because the withheld tokens are
-    precisely the highest-df ones, the hot-token skew that dominates the
-    naive join's shuffle is what gets dropped (candidate-pair reduction
-    asserted in tests/test_dedup_determinism.py). Verification then counts
-    true overlap only for candidate pairs, via the row-sized
-    _verify_common_tokens array intersection."""
-    tau = 0.6
-    d = _docs_fanout(spark, sf_dir)
-    docsets = d.select(
-        "doc_id", "lang", F.array_distinct(tokens_expr(F.col("text"))).alias("ts")
-    )
-    toks = docsets.select("doc_id", "lang", F.explode("ts").alias("tok"))
-    sizes = toks.groupBy("doc_id").agg(F.count("*").alias("n"))
-    df_ = toks.groupBy("tok").agg(F.count("*").alias("df"))
-    from pyspark.sql import Window as W
-
-    rk = F.row_number().over(W.partitionBy("doc_id").orderBy("df", "tok"))
-    ranked = toks.join(df_, "tok").join(sizes, "doc_id").select(
-        "doc_id", "lang", "tok", "n", rk.alias("rk")
-    )
-    prefix = ranked.filter(
-        F.col("rk") <= F.col("n") - F.ceil(F.lit(tau) * F.col("n")) + 1
-    )
-    a, b = prefix.alias("a"), prefix.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.tok") == F.col("b.tok"))
-            & (F.col("a.lang") == F.col("b.lang"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    pairs = _verify_common_tokens(cands, docsets)
-    jac = F.col("common").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("common")
-    )
-    return (
-        pairs.select("doc_a", "doc_b", "common", "n_a", "n_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= tau)
     )
 
 

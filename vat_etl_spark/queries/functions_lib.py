@@ -9,13 +9,11 @@ non-padded strftime codes, RE2-vs-Java word boundaries all probed).
 
 from __future__ import annotations
 
-from datetime import datetime
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from vat_etl_spark.functions.dates import parse_date_compat, parse_date_compat_sql
-from vat_etl_spark.functions.months import MONTHS_MAP, month_expr
+from vat_etl_spark.functions.months import MONTH_ABBREVS, MONTHS_MAP, month_expr
 from vat_etl_spark.queries import query
 from vat_etl_spark.sources.catalog import read_table as _t
 
@@ -68,8 +66,7 @@ _SHEET_NAMES = [
     "sept data", "03-2024", "Apr", "Dec report",
 ]
 _NAME_LIST_SQL = "[" + ", ".join(f"'{n}'" for n in _SHEET_NAMES) + "]"
-_ABBREVS = [datetime(2000, m, 1).strftime("%b") for m in range(1, 13)]
-_ABBREV_LIST_SQL = "[" + ", ".join(f"'{a}'" for a in _ABBREVS) + "]"
+_ABBREV_LIST_SQL = "[" + ", ".join(f"'{a}'" for a in MONTH_ABBREVS) + "]"
 
 _MONTH_CASES_SQL = " ".join(
     f"WHEN instr(s, '{name}') > 0 THEN {num}" for name, num in MONTHS_MAP.items()

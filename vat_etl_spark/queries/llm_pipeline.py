@@ -1246,10 +1246,10 @@ def pipeline_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     join back → per-doc aggregate. At 100 TB the span index is the big
     relation: group on a 16-byte span hash instead of the string (exact
     modulo the documented collision bound — here the string keys keep
-    the DuckDB oracle bit-exact), cap hot spans' postings with the same
-    df-cap discipline as dedup_ngram_jaccard (a boilerplate span shared
-    by millions of docs is precisely the skew driver), and the join is
-    co-partitioned on the span key."""
+    the DuckDB oracle bit-exact), cap hot spans' postings at a
+    document-frequency bound (a boilerplate span shared by millions of
+    docs is precisely the skew driver), and the join is co-partitioned on
+    the span key."""
     from vat_etl_spark.queries.dedup import _docs_fanout
 
     # single-file local scan = one input partition: without the adaptive
@@ -2100,27 +2100,6 @@ def text_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.groupBy("pair").agg(F.sum("cnt").alias("pair_count"))
 
 
-def _merge_pair_expr(arr, a: str, b: str):
-    """Left-scan greedy merge of adjacent symbols (a, b) in a symbol array:
-    whenever the accumulator's last symbol is ``a`` and the next is ``b``,
-    fuse them into ``a+b``. A just-fused symbol can itself match ``a``
-    again only if a+b == a (impossible for non-empty b), mirroring the
-    leftmost-first convention of the Python reference in tests."""
-    empty = F.array().cast("array<string>")
-    return F.aggregate(
-        arr,
-        empty,
-        lambda acc, x: F.when(
-            (F.size(acc) > 0)
-            & (F.element_at(acc, F.size(acc)) == a)
-            & (x == F.lit(b)),
-            F.concat(
-                F.slice(acc, 1, F.size(acc) - 1), F.array(F.lit(a + b))
-            ),
-        ).otherwise(F.concat(acc, F.array(x))),
-    )
-
-
 # --- DuckDB replay of BPE training (K unrolled rounds) -------------------------
 #
 # The iterative loop is replayed as a STATIC chain of CTEs — one
@@ -2131,9 +2110,10 @@ def _merge_pair_expr(arr, a: str, b: str):
 # Fusing pair (a, b) is then ONE plain replace() of
 # chr(1)+a+chr(1)+chr(1)+b+chr(1) with chr(1)+ab+chr(1): replace() scans
 # left-to-right non-overlapping, which is exactly the leftmost-first greedy
-# convention of _merge_pair_expr, and the full separator frame makes a
-# match possible only on whole adjacent symbols (prefix/suffix substrings
-# of neighboring symbols can never sit between the right separators).
+# convention of py_bpe_merge in tests/conftest.py, and the full separator
+# frame makes a match possible only on whole adjacent symbols (prefix/suffix
+# substrings of neighboring symbols can never sit between the right
+# separators).
 _BPE_K = 5
 _BPE_SEP = "chr(1)"
 _BPE_SS = f"{_BPE_SEP} || {_BPE_SEP}"
@@ -2259,7 +2239,7 @@ def text_bpe_merges(
     vocab = toks.groupBy("w").agg(F.count("*").alias("cnt"))
     # seed symbol arrays: one single-char symbol per character
     # vocabulary state = separator-framed symbol STRING per word (the same
-    # construction the DuckDB oracle replays and text_bpe_apply executes):
+    # construction the DuckDB oracle replays):
     # pair counting splits it natively, and fusing the argmax pair is ONE
     # codegen'd replace() — no interpreted array-fold layer per merge.
     # Measured: identical merge tables, and the per-merge fuse drops out of
@@ -2433,79 +2413,20 @@ def text_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     encode the corpus with the merge table ``text_bpe_merges`` learned,
     reporting per-document token counts before (characters) and after the
     merges, plus the realized compression. The learned merges are
-    model-sized (K rows) driver data; applying them is K nested map-side
-    folds evaluated IN-ROW over each document's word array — zero
-    exchanges, the plan is a bare projection over the scan (asserted in
-    tests/test_plans.py). At production K~30k the folds compile into a
-    trie/priority encoder inside a pandas UDF instead of K expression
-    layers; the semantics pinned here (rank-ordered leftmost-first
-    fusion) are identical. A document with no non-space characters
-    reports NULL compression rather than dividing by zero. Verified
-    against a pure-Python encoder in tests.
-
-    Execution: each merge is ONE native string replace() over a
-    separator-framed symbol string (the exact construction the DuckDB
-    oracle replays — full chr(1) framing makes a match possible only on
-    whole adjacent symbols, and non-overlapping left-to-right scanning IS
-    the leftmost-first greedy convention); the symbol count falls out of
-    the length delta of collapsing the double separators. Measured
-    bit-identical to the _merge_pair_expr array-fold spelling and 8×
-    faster at sf0.1 (6.3 s → 0.8 s — the nested interpreted lambda
-    layers were the wall)."""
+    model-sized (K rows) driver data; applying them is one map-side
+    rank-priority encoder (`bpe_apply_counts_plan`) — zero exchanges
+    (asserted in tests/test_plans.py), and K only sizes a hash map, so the
+    same plan serves production K~30k. The semantics (rank-ordered
+    leftmost-first fusion) are defined twice outside this path: the DuckDB
+    oracle's unrolled training replay and the pure-Python sequential
+    encoder in tests/conftest.py. A document with no non-space characters
+    reports NULL compression rather than dividing by zero."""
     d = _t(spark, sf_dir, "documents")
     merges = [
         (r.left, r.right)
         for r in text_bpe_merges(spark, sf_dir).orderBy("rank").collect()
     ]
-    return bpe_apply_replace_plan(d, merges)
-
-
-def bpe_apply_replace_plan(
-    d: DataFrame, merges: list[tuple[str, str]], text_col: str = "text"
-) -> DataFrame:
-    """The replace-chain spelling of BPE application (text_bpe_apply's
-    body, factored so tools/bpe_bench.py can A/B it against the
-    production-K UDF path at arbitrary K). One native replace() per merge
-    over a separator-framed symbol string; plan size grows with K."""
-    # NULL text -> NULL token array would propagate NULL through the
-    # aggregate folds, but the oracle's LEFT JOIN + coalesce reports 0
-    # chars / 0 bpe_tokens — coalesce to the empty array so both engines
-    # agree (same pin simhash_frame carries for null text)
-    words = F.coalesce(
-        F.filter(tokens_expr(F.col(text_col)), lambda w: w != ""),
-        F.array().cast("array<string>"),
-    )
-    sep = chr(1)
-
-    def word_tokens(w):
-        w = _bpe_sep_guard(w)  # framing invariant, see _bpe_sep_guard
-        chars = F.filter(F.split(w, ""), lambda s: s != "")
-        r = F.concat(F.lit(sep), F.array_join(chars, sep + sep), F.lit(sep))
-        for a, b in merges:
-            r = F.replace(
-                r, F.lit(sep + a + sep + sep + b + sep), F.lit(sep + a + b + sep)
-            )
-        # n_syms = (#double-separators) + 1 = length delta of collapsing
-        # them + 1 (separator runs are only ever 1 or 2 long)
-        return (
-            F.length(r) - F.length(F.replace(r, F.lit(sep + sep), F.lit(sep))) + 1
-        )
-
-    counted = d.select(
-        "doc_id",
-        F.aggregate(
-            F.transform(words, lambda w: F.length(w)), F.lit(0), lambda acc, x: acc + x
-        ).cast("long").alias("chars"),
-        F.aggregate(
-            F.transform(words, word_tokens), F.lit(0), lambda acc, x: acc + x
-        ).cast("long").alias("bpe_tokens"),
-    )
-    return counted.select(
-        "doc_id", "chars", "bpe_tokens",
-        F.when(
-            F.col("chars") > 0, F.expr("(1000 * bpe_tokens) div chars")
-        ).alias("compression_per_mille"),
-    )
+    return bpe_apply_counts_plan(d, merges)
 
 
 def _bpe_encode_len(word: str, ranks: dict) -> int:
@@ -2515,16 +2436,18 @@ def _bpe_encode_len(word: str, ranks: dict) -> int:
     pair remains — the GPT-2-family encoder shape, with the K merges in a
     hash map instead of K expression layers.
 
-    Equivalence to the sequential replace chain (text_bpe_apply), proven
-    not assumed: (1) for a LEARNED merge table every pair's constituent
-    symbols are products of strictly earlier merges, so fusing rank r can
-    only create pairs of rank > r — ranks are therefore visited in
-    increasing order, exactly the sequential chain; (2) one leftmost-first
+    Equivalence to sequential merge application (the oracle's replace()
+    replay, py_bpe_merge in tests/conftest.py), proven not assumed: (1)
+    for a LEARNED merge table every pair's constituent symbols are
+    products of strictly earlier merges, so fusing rank r can only create
+    pairs of rank > r — ranks are therefore visited in increasing order,
+    exactly the sequential application; (2) one leftmost-first
     scan leaves no (a,b) adjacency behind (a surviving b must have been
     appended while the previous symbol was a — but then it would have
-    fused), so fuse-once and fuse-to-exhaustion agree. Pinned bit-identical
-    to the replace chain in tests/test_llm_pipeline.py and re-verified at
-    K in the thousands by tools/bpe_bench.py.
+    fused), so fuse-once and fuse-to-exhaustion agree. Pinned against the
+    sequential Python encoder on learned tables in
+    tests/test_llm_properties.py and tests/test_llm_pipeline.py, and
+    re-verified at K in the thousands by tools/bpe_bench.py.
 
     Round 10: heap + linked-list implementation (the tiktoken/SentencePiece
     shape) — O(len·log len + fusions·log len) instead of the previous
@@ -2581,13 +2504,12 @@ def _bpe_encode_len(word: str, ranks: dict) -> int:
 def bpe_apply_counts_plan(
     d: DataFrame, merges: list[tuple[str, str]], text_col: str = "text"
 ) -> DataFrame:
-    """The PRODUCTION-K half of BPE application: per-document (chars,
-    bpe_tokens, compression) with the K learned merges applied by ONE
-    Arrow-batched pandas UDF instead of K chained replace() expression
-    layers. The replace chain (text_bpe_apply) is optimal at oracle-window
-    K but is K layers of driver plan — at production K~30k that is plan
-    explosion; here K only sizes a broadcast hash map, the plan is one
-    projection regardless of K, and still zero exchanges (map-only).
+    """BPE application (text_bpe_apply's plan, factored so
+    tools/bpe_bench.py and tests can run it at any K): per-document
+    (chars, bpe_tokens, compression) with the K learned merges applied by
+    ONE Arrow-batched pandas UDF. K only sizes a hash map shipped with the
+    UDF, so the plan is one projection regardless of K — no K expression
+    layers to plan at production K~30k — and zero exchanges (map-only).
 
     Per batch the encoder memoizes word -> symbol count, so compute is
     vocab-grain per partition (the word-frequency trick at apply time);
@@ -2639,29 +2561,6 @@ def bpe_apply_counts_plan(
             F.col("chars") > 0, F.expr("(1000 * bpe_tokens) div chars")
         ).alias("compression_per_mille"),
     )
-
-
-@query("text_bpe_apply_trie", oracle=_BPE_APPLY_SQL)
-def text_bpe_apply_trie(
-    spark: SparkSession, sf_dir: str, n_merges: int = _BPE_K
-) -> DataFrame:
-    """`text_bpe_apply` on the production-K execution path: identical
-    output (same oracle, same K-at-registration), but the merges are
-    applied by the rank-priority pandas-UDF encoder
-    (`bpe_apply_counts_plan`) instead of K expression layers — the
-    registered form of the encoder a K~30k tokenizer needs ("trie" in the
-    verdict's naming; the pair hash map plays the trie's role at strictly
-    lower constant cost). Bit-equality with text_bpe_apply is pinned in
-    pytest at the oracle K and re-verified at K in the thousands by
-    tools/bpe_bench.py, where the expression chain cannot go."""
-    d = _t(spark, sf_dir, "documents")
-    merges = [
-        (r.left, r.right)
-        for r in text_bpe_merges(spark, sf_dir, n_merges=n_merges)
-        .orderBy("rank")
-        .collect()
-    ]
-    return bpe_apply_counts_plan(d, merges)
 
 
 _DSIR_B = 1024  # hashed n-gram feature buckets
@@ -2946,16 +2845,9 @@ def text_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(lm["heads"], "w1")
         .join(lm["tails"], "w2")
         .crossJoin(F.broadcast(lm["nd"]))
-        .select(
-            "w1",
-            "w2",
-            F.expr(
-                "cast((1000000 * (greatest(4 * cg - 3, 0L)"
-                " * cast(nd as decimal(38,0))"
-                " + 3 * n1f * cast(n1b as decimal(38,0))))"
-                " div (4 * cw * cast(nd as decimal(38,0))) as bigint)"
-            ).alias("pts"),
-        )
+        # every bigram type is seen here, so _KN_PTS_EXPR's backoff
+        # coalesces never fire
+        .select("w1", "w2", F.expr(_KN_PTS_EXPR).alias("pts"))
     )
     scored = bi.join(feats, ["w1", "w2"])
     return scored.groupBy("doc_id").agg(

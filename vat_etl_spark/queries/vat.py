@@ -12,14 +12,13 @@ from vat_etl_spark.functions.currency import (
     currency_to_aed_exact,
     currency_to_aed_exact_sql,
 )
+from vat_etl_spark.functions.months import MONTH_ABBREVS
 from vat_etl_spark.functions.numeric import dsum, dsum_sql
 from vat_etl_spark.operators.vat_summary import BOX_DESCRIPTIONS, vat_flagship
 from vat_etl_spark.queries import query
 from vat_etl_spark.sources.catalog import read_table as _t
 
-_MONTHS = ["Jan", "Feb", "Mar", "Apr", "May", "Jun",
-           "Jul", "Aug", "Sep", "Oct", "Nov", "Dec"]
-_MONTH_LIST_SQL = "[" + ", ".join(f"'{m}'" for m in _MONTHS) + "]"
+_MONTH_LIST_SQL = "[" + ", ".join(f"'{m}'" for m in MONTH_ABBREVS) + "]"
 
 _TX_SQL = f"""
   SELECT
@@ -95,8 +94,6 @@ def vat_period_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Messy-money strings synthesized deterministically from supplier rows so the
 # oracle can verify the currency parser (F1) value-for-value.
-_MESSY_CASES_SPARK = None  # built inline below
-
 _MESSY_SQL_EXPR = """
 CASE s_suppkey % 8
   WHEN 0 THEN 'USD ' || printf('%.2f', s_acctbal)

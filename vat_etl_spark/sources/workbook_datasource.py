@@ -35,10 +35,42 @@ WORKBOOK_SCHEMA = StructType(
 )
 
 
+def _sheet_files(directory: str) -> list[str]:
+    import os
+
+    return sorted(f for f in os.listdir(directory) if f.lower().endswith(".csv"))
+
+
+def _read_sheet_rows(directory: str, filename: str):
+    """One sheet's rows in WORKBOOK_SCHEMA order — the body both the batch
+    and the stream reader run. csv.reader stands in for openpyxl's row
+    iterator; everything else is format-agnostic. A canonical header that
+    occurs twice reads from its FIRST column, the rule
+    ``excel.read_workbook`` applies (``~columns.duplicated()``)."""
+    import csv
+    import os
+
+    path = os.path.join(directory, filename)
+    sheet = os.path.splitext(filename)[0]
+    with open(path, newline="", encoding="utf-8") as fh:
+        rows = list(csv.reader(fh))
+    if not rows:
+        return
+    header_row = detect_header_row(rows)
+    header = canonical_rename(rows[header_row])
+    idx: dict[str, int] = {}
+    for i, name in enumerate(header):
+        idx.setdefault(name, i)
+    for raw in rows[header_row + 1 :]:
+        yield tuple(
+            raw[idx[c]] if c in idx and idx[c] < len(raw) and raw[idx[c]] != "" else None
+            for c in VAT_REQUIRED_COLUMNS
+        ) + (sheet,)
+
+
 class SheetPartition(InputPartition):
-    def __init__(self, path: str, sheet: str):
-        self.path = path
-        self.sheet = sheet
+    def __init__(self, filename: str):
+        self.filename = filename
 
 
 class WorkbookReader(DataSourceReader):
@@ -48,35 +80,14 @@ class WorkbookReader(DataSourceReader):
             raise ValueError("vat_workbook requires a path (directory of sheet CSVs)")
 
     def partitions(self):
-        import os
-
-        sheets = sorted(
-            f for f in os.listdir(self.dir) if f.lower().endswith(".csv")
-        )
+        sheets = _sheet_files(self.dir)
         if not sheets:
             raise ValueError(f"no sheets (*.csv) found in {self.dir!r}")
-        return [
-            SheetPartition(os.path.join(self.dir, f), os.path.splitext(f)[0])
-            for f in sheets
-        ]
+        return [SheetPartition(f) for f in sheets]
 
     def read(self, partition: SheetPartition):
-        # runs ON THE EXECUTOR — one sheet per task. csv.reader stands in
-        # for openpyxl's row iterator; everything else is format-agnostic.
-        import csv
-
-        with open(partition.path, newline="", encoding="utf-8") as fh:
-            rows = list(csv.reader(fh))
-        if not rows:
-            return
-        header_row = detect_header_row(rows)
-        header = canonical_rename(rows[header_row])
-        idx = {name: i for i, name in enumerate(header)}
-        for raw in rows[header_row + 1 :]:
-            yield tuple(
-                raw[idx[c]] if c in idx and idx[c] < len(raw) and raw[idx[c]] != "" else None
-                for c in VAT_REQUIRED_COLUMNS
-            ) + (partition.sheet,)
+        # runs ON THE EXECUTOR — one sheet per task
+        yield from _read_sheet_rows(self.dir, partition.filename)
 
 
 class WorkbookDataSource(DataSource):
@@ -98,32 +109,6 @@ class WorkbookDataSource(DataSource):
 
 
 # --- streaming: sheets arriving in the directory become micro-batches --------
-
-
-def _sheet_files(directory: str) -> list[str]:
-    import os
-
-    return sorted(f for f in os.listdir(directory) if f.lower().endswith(".csv"))
-
-
-def _read_sheet_rows(directory: str, filename: str):
-    import csv
-    import os
-
-    path = os.path.join(directory, filename)
-    sheet = os.path.splitext(filename)[0]
-    with open(path, newline="", encoding="utf-8") as fh:
-        rows = list(csv.reader(fh))
-    if not rows:
-        return
-    header_row = detect_header_row(rows)
-    header = canonical_rename(rows[header_row])
-    idx = {name: i for i, name in enumerate(header)}
-    for raw in rows[header_row + 1 :]:
-        yield tuple(
-            raw[idx[c]] if c in idx and idx[c] < len(raw) and raw[idx[c]] != "" else None
-            for c in VAT_REQUIRED_COLUMNS
-        ) + (sheet,)
 
 
 class WorkbookStreamReader:
