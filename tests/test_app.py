@@ -44,32 +44,121 @@ def test_summary_csv_to_sqlite(spark, tmp_path, capsys):
     assert "Jan 2024" in out  # period mapping printed
 
 
-def test_vat_sheet_construction_round_trips(spark, tmp_path):
-    """Building a quarter's plans (3 × load_transactions + the box summary)
-    stays within a fixed budget of py4j round trips: the kernels reach the
-    JVM as SQL text in one call each, and the CSV header is read as file
-    metadata. Built from Column objects, the same plans cost ~11,000.
-    The block issues 552 commands on every repeat; the budget is that
-    plus 20%. Releases of collected JVM handles (148-216 per repeat,
-    depending on what the garbage collector frees) are not counted."""
-    import gc
-
-    from vat_etl_spark.app import load_transactions
-    from vat_etl_spark.operators.vat_summary import vat_box_summary
-    from vat_etl_spark.plans import py4j_round_trips
-
+def _quarter_csvs(tmp_path) -> list[str]:
+    """Three monthly sheets of one quarter, each dated in its own month."""
     paths = []
     for i, month in enumerate(("Jan", "Feb", "Mar"), 1):
         p = tmp_path / f"{month} 2024.csv"
         p.write_text(CSV.replace("/01/2024", f"/{i:02d}/2024"))
         paths.append(str(p))
+    return paths
+
+
+def _group_jobs(spark, group: str, fn):
+    """``fn()``'s result and the number of Spark jobs it ran, counted
+    through a job group (jobs submitted from subquery threads carry it)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _quarter_summary(spark, paths):
+    from vat_etl_spark.app import load_transactions
+    from vat_etl_spark.operators.vat_summary import vat_box_summary
+
+    frames = [load_transactions(spark, p) for p in paths]
+    tx = frames[0].unionByName(frames[1]).unionByName(frames[2])
+    return vat_box_summary(tx)
+
+
+def test_vat_sheet_construction_round_trips(spark, tmp_path):
+    """Building a quarter's plans (3 × load_transactions + the box summary)
+    stays within a fixed budget of py4j round trips: the kernels reach the
+    JVM as SQL text in one call each, and the CSV header is read as file
+    metadata. Built from Column objects, the same plans cost ~11,000.
+    The block issues 600 commands on every repeat; the budget is that
+    plus 10%. Releases of collected JVM handles (depending on what the
+    garbage collector frees, up to ~400 per repeat) are not counted."""
+    import gc
+
+    from vat_etl_spark.plans import py4j_round_trips
+
+    paths = _quarter_csvs(tmp_path)
     gc.collect()
     with py4j_round_trips(spark) as trips:
-        frames = [load_transactions(spark, p) for p in paths]
-        tx = frames[0].unionByName(frames[1]).unionByName(frames[2])
-        summary = vat_box_summary(tx)
+        summary = _quarter_summary(spark, paths)
     assert trips.n <= 660, trips.n
     assert summary.count() == 12
+
+
+def test_vat_sheet_construction_runs_no_job(spark, tmp_path):
+    """Building a quarter's plans runs no Spark job: each sheet's mode
+    year is a scalar subquery that runs inside the summary's execution,
+    and the CSV header is read without a Spark parse."""
+    paths = _quarter_csvs(tmp_path)
+    summary, jobs = _group_jobs(spark, "vat_construction", lambda: _quarter_summary(spark, paths))
+    assert jobs == 0
+    assert [r.Period for r in summary.collect()[::4]] == ["Jan 2024", "Feb 2024", "Mar 2024"]
+
+
+def test_second_sink_reads_the_first_sinks_execution(spark, tmp_path):
+    """The summary is executed once for both sinks: after the parquet
+    write, the SQLite write reads the persisted result in one job. The
+    run boundary then leaves no persisted RDD and no cached plan."""
+    from vat_etl_spark.session import release_engine_caches
+    from vat_etl_spark.sources import sinks
+
+    summary = _quarter_summary(spark, _quarter_csvs(tmp_path))
+    db = str(tmp_path / "out.db")
+    _, parquet_jobs = _group_jobs(
+        spark, "vat_sink_parquet", lambda: sinks.write_parquet(summary, str(tmp_path / "pq"))
+    )
+    _, sqlite_jobs = _group_jobs(spark, "vat_sink_sqlite", lambda: sinks.write_sqlite(summary, db))
+    assert parquet_jobs > 0
+    assert sqlite_jobs <= 1
+    con = sqlite3.connect(db)
+    rows = con.execute('SELECT * FROM "vat_summary" ORDER BY rowid').fetchall()
+    con.close()
+    back = spark.read.parquet(str(tmp_path / "pq")).collect()
+    assert rows == [tuple(r) for r in back] and len(rows) == 12
+    release_engine_caches(spark)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_detected_periods_print_in_calendar_order(spark, monkeypatch, capsys):
+    """Sheets of one year print by month, and sheets of one month by name,
+    whatever order the workbook holds them in."""
+    from vat_etl_spark import app
+    from vat_etl_spark.sources.excel import normalize_vat_sheet
+
+    cols = ["Supply Type", "Invoice Number", "Date", "Customer/supplier Name",
+            "Supply/Purchase Value", "VAT Value", "Invoice Value", "Recoverable", "Box"]
+    schema = ", ".join(f"`{c}` string" for c in cols)
+    frames = [
+        normalize_vat_sheet(
+            spark.createDataFrame(
+                [("Sales", "1", f"15/{m:02d}/2024", "x", "100", "5", "105", None, "A")],
+                schema,
+            ),
+            name,
+        )
+        for name, m in (("Mar 2024", 3), ("Jan 2024 b", 1), ("Jan 2024 a", 1))
+    ]
+    tx = frames[0].unionByName(frames[1]).unionByName(frames[2])
+    monkeypatch.setattr(app, "load_transactions", lambda *a, **kw: tx)
+    main(["summary", "--input", "workbook.xlsx"], spark=spark)
+    out = capsys.readouterr().out
+    listed = out.split("Detected periods:\n", 1)[1].splitlines()[:3]
+    assert listed == [
+        "  Jan 2024 a: Jan 2024",
+        "  Jan 2024 b: Jan 2024",
+        "  Mar 2024: Mar 2024",
+    ]
 
 
 def test_tab_only_first_line_loads_like_the_file_without_it(spark, tmp_path):

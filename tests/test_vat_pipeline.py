@@ -92,6 +92,43 @@ def test_year_mode_and_sheet_month(spark):
     assert (row.Month, row.MonthNum, row.Year) == ("Feb", 2, 2024)
 
 
+def _dated_sheet(spark, dates):
+    return spark.createDataFrame(
+        [("s", str(i), d, "x", "1", "0", "1", None, "A") for i, d in enumerate(dates)],
+        ", ".join(f"`{c}` string" for c in COLS),
+    ).coalesce(1)
+
+
+@pytest.mark.parametrize(
+    "dates, year",
+    [
+        (["15/01/2023", "16/01/2024", "17/01/2024", "18/01/2023"], 2023),
+        (["15/01/2024", "16/01/2023", "17/01/2023", "18/01/2024"], 2024),
+    ],
+)
+def test_year_mode_tie_goes_to_the_first_encountered_year(spark, dates, year):
+    # two years with equal counts: the one met first wins (reference
+    # Counter + max), whichever of them is smaller
+    norm = normalize_vat_sheet(_dated_sheet(spark, dates), "Jan", compat=True)
+    assert {r.Year for r in norm.select("Year").collect()} == {year}
+
+
+@pytest.mark.parametrize("as_of_year, year", [(2021, 2021), (None, 1970)])
+def test_unparseable_dates_fall_back_to_as_of_year(spark, as_of_year, year):
+    # a Date column with no parseable value: as_of_year, else 1970
+    raw = _dated_sheet(spark, ["not a date", None, "31/31/31"])
+    norm = normalize_vat_sheet(raw, "Jan", compat=True, as_of_year=as_of_year)
+    assert {r.Year for r in norm.select("Year").collect()} == {year}
+
+
+def test_year_is_a_non_null_int(spark):
+    from pyspark.sql.types import IntegerType
+
+    for dates in (["15/01/2024"], ["not a date"]):
+        field = normalize_vat_sheet(_dated_sheet(spark, dates), "Jan").schema["Year"]
+        assert field.dataType == IntegerType() and not field.nullable, dates
+
+
 def test_missing_columns_padded(spark):
     raw = spark.createDataFrame([("A", "100")], "`Box` string, `Supply/Purchase Value` string")
     norm = normalize_vat_sheet(raw, "Mar", compat=True, as_of_year=2024)

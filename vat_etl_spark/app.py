@@ -67,8 +67,13 @@ def run_summary(args: argparse.Namespace, spark: SparkSession | None = None) -> 
         raise SystemExit("no rows parsed from input (reference P7 guard)")
     summary = vat_box_summary(tx, compat=not args.sane)
 
-    # period-mapping display (reference fianl2.py:230-233)
-    periods = tx.select("SourceSheet", "Month", "Year").distinct().orderBy("Year")
+    # period-mapping display (reference fianl2.py:230-233), in calendar
+    # order, sheets of one period by name
+    periods = (
+        tx.select("SourceSheet", "Month", "MonthNum", "Year")
+        .distinct()
+        .orderBy("Year", "MonthNum", "SourceSheet")
+    )
     print("Detected periods:")
     for r in periods.collect():
         print(f"  {r.SourceSheet}: {r.Month} {r.Year}")

@@ -10,9 +10,17 @@ O(periods × rows) with full re-scans. Here it is ONE hash aggregate:
       → inline-explode to the 4-row (A/B/C/D) output shape
       → orderBy(Year, MonthNum)
 
-One shuffle, linear scan, map-side partial aggregation; at 100 TB the only
-cost is the scan plus a tiny per-period shuffle (group cardinality = number
-of periods, a few thousand at most).
+Two shuffles, both over partials: the executed plan's first Exchange
+carries the per-(Year, MonthNum, Month, spark_partition_id) partial sums,
+the second merges them per period. A linear scan with map-side partial
+aggregation; at 100 TB the only cost is the scan plus two tiny shuffles
+(group cardinality = periods × input partitions, then periods).
+
+The result is returned ``persist()``ed: every caller writes it to more
+than one sink (the CLI to parquet, SQLite, xlsx and the screen; perfbench
+to parquet and SQLite), so the first sink executes the plan once and the
+others read its ``InMemoryRelation``. The run boundary
+(``session.release_engine_caches``) releases it.
 
 Compat quirks reproduced (SURVEY.md §8): substring box matching (Q1), NULL
 box → "NAN" string → matches "A" (Q2), all-NULL sums → 0.0 not NULL (Q9),
@@ -60,7 +68,8 @@ def vat_box_summary(
     free text) keep the explicit column.
 
     Expressions are Spark SQL text, so building the plan costs a few py4j
-    round trips per DataFrame call, not one per sub-expression.
+    round trips per DataFrame call, not one per sub-expression. Returned
+    persisted (see the module docstring).
     """
     box, year, monthnum = ident(BOX_COL), ident(YEAR_COL), ident(MONTHNUM_COL)
 
@@ -134,7 +143,7 @@ def vat_box_summary(
         .sortWithinPartitions(F.expr(year), F.expr(monthnum), F.expr("`FTA Box`"))
         .drop(YEAR_COL, MONTHNUM_COL)
     )
-    return out
+    return out.persist()
 
 
 def lineitem_as_vat_transactions(lineitem: DataFrame, orders: DataFrame) -> DataFrame:

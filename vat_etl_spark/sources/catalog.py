@@ -8,9 +8,7 @@ footers carry exact types (FIXTURES.md §B).
 
 from __future__ import annotations
 
-import json
 import os
-import re
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -103,10 +101,13 @@ def hadoop_path(spark: SparkSession, path: str):
     return fs, fs.makeQualified(p)
 
 
-_BOM = b"\xef\xbb\xbf"
-_CHUNK = 1 << 16
-# the bytes Java's String.trim strips: every byte <= 0x20
-_JAVA_TRIM = bytes(range(0x21))
+def _jclass(spark: SparkSession, name: str):
+    """A py4j handle on the JVM class ``name``, built without a round
+    trip (``spark._jvm.a.b.C`` sends one reflection lookup per package
+    segment)."""
+    from py4j.java_gateway import JavaClass
+
+    return JavaClass(name, spark._jvm._gateway_client)
 
 
 def _hidden(name: str) -> bool:
@@ -116,23 +117,6 @@ def _hidden(name: str) -> bool:
         or name.startswith(".")
         or name.endswith("._COPYING_")
     )
-
-
-def _first_nonblank_line(stream) -> str | None:
-    """First line of a JVM ``InputStream`` that Java's ``trim`` does not
-    empty (every byte <= 0x20 is blank): the lines Spark's CSV data
-    reader skips before it drops the header line. Lines end at LF, CR or
-    CRLF, and a leading UTF-8 BOM is dropped, as in Hadoop's line reader.
-    Reads 64 KiB per round trip."""
-    buf, eof = b"", False
-    while not eof:
-        chunk = bytes(stream.readNBytes(_CHUNK))
-        buf, eof = buf + chunk, len(chunk) < _CHUNK
-        lines = re.split(rb"\r\n|\r|\n", buf.removeprefix(_BOM))
-        for line in lines if eof else lines[:-1]:
-            if line.strip(_JAVA_TRIM):
-                return line.decode("utf-8", "replace")
-    return None
 
 
 def csv_header(spark: SparkSession, path: str) -> list[str]:
@@ -145,14 +129,16 @@ def csv_header(spark: SparkSession, path: str) -> list[str]:
     skips it and drops the next line as the header; the names here are
     that next line's, so they name the rows the reader returns.
 
-    The header is read as file metadata: the first non-blank line of the
-    file inference reads first (for a directory or glob, the largest file:
-    Spark packs splits largest first and takes the first line), read
-    through the Hadoop ``FileSystem`` with the file's compression codec.
-    Spark's own CSV reader then parses that one line from a driver-local
-    ``Dataset[String]``, so quoting, empty names (``_c1``) and
-    case-insensitive duplicates (``Box0, box1``) come out as Spark names
-    them."""
+    The header is read as file metadata, with Spark's own CSV code on the
+    JVM: ``CSVUtils.readHeaderLine`` reads the first line Java's ``trim``
+    does not empty of the file inference reads first (for a directory or
+    glob, the largest file: Spark packs splits largest first and takes the
+    first line), through the file's compression codec and Hadoop's line
+    reader, which drops a leading UTF-8 BOM. The univocity parser
+    Spark configures (``CSVOptions.asParserSettings``) tokenizes it, and
+    ``CSVUtils.makeSafeHeader`` names empty (``_c1``) and duplicate
+    (``Box0, box1``, under the session's case sensitivity) columns. The
+    names come back in one py4j call, newline-joined: a line holds none."""
     jvm = spark._jvm
     fs, qpath = hadoop_path(spark, path)
     files = []
@@ -160,7 +146,7 @@ def csv_header(spark: SparkSession, path: str) -> list[str]:
         if not st.isDirectory():
             name = st.getPath().getName()
             if not _hidden(name):
-                files.append((st.getLen(), st.getPath(), name))
+                files.append((st.getLen(), st.getPath()))
             continue
         root = st.getPath().toString()
         it = fs.listFiles(st.getPath(), True)
@@ -168,30 +154,29 @@ def csv_header(spark: SparkSession, path: str) -> list[str]:
             f = it.next()
             parts = [p for p in f.getPath().toString()[len(root):].split("/") if p]
             if not any(_hidden(p) for p in parts):
-                files.append((f.getLen(), f.getPath(), parts[-1]))
+                files.append((f.getLen(), f.getPath()))
     if not files:  # Spark's own error: no such path, or nothing to infer from
         return spark.read.option("header", "true").csv(path).columns
     files.sort(key=lambda f: -f[0])  # stable: ties keep the listing order
-    lines = []
-    for _, fpath, name in files:
-        stream = fs.open(fpath)
-        try:
-            if not name.endswith(".csv"):  # maybe compressed, e.g. part-0.csv.gz
-                codec = jvm.org.apache.hadoop.io.compress.CompressionCodecFactory(
-                    spark._jsc.hadoopConfiguration()
-                ).getCodec(fpath)
-                if codec is not None:
-                    stream = codec.createInputStream(stream)
-            line = _first_nonblank_line(stream)
-        finally:
-            stream.close()
-        if line is not None:
-            lines.append(line)
+    csv = _jclass(spark, "org.apache.spark.sql.execution.datasources.csv.CSVUtils")
+    opts = _jclass(spark, "org.apache.spark.sql.catalyst.csv.CSVOptions")(
+        jvm.PythonUtils.toScalaMap({"header": "true"}),
+        False,
+        spark.conf.get("spark.sql.session.timeZone"),
+    )
+    conf = spark._jsc.hadoopConfiguration()
+    for _, fpath in files:
+        line = csv.readHeaderLine(fpath, opts, conf)
+        if line.isDefined():
             break
-    jspark = spark._jsparkSession
-    ds = jspark.createDataset(lines, jvm.Encoders.STRING())
-    schema = jspark.read().option("header", "true").csv(ds).schema().json()
-    return [f["name"] for f in json.loads(schema)["fields"]]
+    else:
+        return []
+    parser = _jclass(spark, "com.univocity.parsers.csv.CsvParser")(opts.asParserSettings())
+    tokens = parser.parseLine(line.get())
+    case_sensitive = spark.conf.get("spark.sql.caseSensitive") == "true"
+    names = csv.makeSafeHeader(tokens, case_sensitive, opts)
+    joined = _jclass(spark, "org.apache.hadoop.util.StringUtils").join("\n", names)
+    return joined.split("\n")
 
 
 def read_index(spark: SparkSession, idx_path: str, schema) -> DataFrame | None:

@@ -23,7 +23,7 @@ from __future__ import annotations
 import logging
 from typing import Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vat_etl_spark.functions.currency import currency_to_aed
@@ -59,9 +59,11 @@ def normalize_vat_sheet(
     - pad missing required columns with NULL  (P2)
     - currency-convert 3 money columns, native expressions (F1)
     - Month/MonthNum from the sheet name, driver-side (F3)
-    - Year = mode of parsed Date years, one tiny aggregate job (F4+A3);
-      fallback = ``as_of_year`` (explicit parameter replacing the reference's
-      nondeterministic ``datetime.now().year`` — quirk F11)
+    - Year = mode of parsed Date years (F4+A3), an uncorrelated scalar
+      subquery inside the plan, so building the frame runs no job and the
+      subquery runs inside whichever action first executes it; fallback =
+      ``as_of_year`` (explicit parameter replacing the reference's
+      nondeterministic ``datetime.now().year`` — quirk F11), else 1970
     - Box stringify/upper/trim (F5, quirk Q2) + BoxLetter (F6)
 
     Each step is one ``withColumn`` of the reference's order, applied to a
@@ -89,30 +91,42 @@ def normalize_vat_sheet(
         with_column(c, currency_to_aed(expr_of(c)))
 
     month_abbr, month_num = extract_month_from_name(sheet_name)
-    year_val = _mode_year(df, compat=compat)
-    if year_val is None:
-        year_val = as_of_year if as_of_year is not None else 1970
+    fallback = as_of_year if as_of_year is not None else 1970
+    mode_year = _mode_year(df, compat=compat)
 
     box_letter_re = r"([A-Z])" if compat else SANE_BOX_LETTER_RE
     box = expr_of("Box")
     with_column("Month", str_lit(month_abbr))
     with_column("MonthNum", f"CAST({int(month_num)} AS INT)")
-    with_column("Year", f"CAST({int(year_val)} AS INT)")
+    with_column("Year", f"CAST({int(fallback)} AS INT)")
     with_column("SourceSheet", str_lit(sheet_name))
     with_column("Box", box_normalize_compat(box) if compat else f"upper(trim({box}))")
     with_column("BoxLetter", f"regexp_extract({expr_of('Box')}, {str_lit(box_letter_re)}, 1)")
-    return df.selectExpr(
+    out = df.selectExpr(
         *[e if e == ident(c) else f"{e} AS {ident(c)}" for c, e in cols]
     )
+    if mode_year is None:
+        return out
+    # the mode year, else the fallback literal it replaces in place; the
+    # literal keeps the column non-null
+    return out.withColumn("Year", F.ifnull(mode_year, out["Year"]))
 
 
-def _mode_year(df: DataFrame, compat: bool = True) -> int | None:
-    """Most frequent year of the parsed Date column (fianl2.py:115-126).
+def _mode_year(df: DataFrame, compat: bool = True) -> Column | None:
+    """Most frequent year of the parsed Date column (fianl2.py:115-126),
+    as a scalar-subquery Column: NULL when no Date value parses.
 
     Tie-break = first-encountered (reference ``Counter`` + ``max`` behavior);
-    approximated at scale by min encounter id. Runs as one small aggregate
-    job; the distinct-year cardinality is tiny so the collect is safe. A
-    sheet without a Date column (padded with NULL) has no year.
+    approximated at scale by min encounter id. The subquery is the top-1
+    row of a per-year aggregate (the distinct-year cardinality is tiny);
+    it is uncorrelated, so Spark runs it once per execution, concurrently
+    with the other sheets' subqueries, before the main plan's stages: 2
+    jobs, the aggregate's map stage and the top-1 result. The aggregate is
+    coalesced to one partition first: a persisted plan (``vat_box_summary``
+    returns one) does not coalesce its subqueries' shuffle partitions, and
+    the scalar subquery's ``executeTake`` would then scan them in 3 jobs
+    instead of 1. A sheet without a Date column (padded with NULL) has no
+    year: None.
     """
     if "Date" not in df.columns:
         return None
@@ -122,11 +136,12 @@ def _mode_year(df: DataFrame, compat: bool = True) -> int | None:
         .where("y IS NOT NULL")
         .groupBy("y")
         .agg(F.expr("count(*) AS n"), F.expr("min(enc) AS first_enc"))
+        .coalesce(1)
         .orderBy(F.desc("n"), F.asc("first_enc"))
         .limit(1)
-        .collect()
+        .select("y")
     )
-    return int(years[0]["y"]) if years else None
+    return years.scalar()
 
 
 def read_workbook(
