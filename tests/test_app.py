@@ -161,6 +161,32 @@ def test_detected_periods_print_in_calendar_order(spark, monkeypatch, capsys):
     ]
 
 
+def test_cli_runs_each_sheets_mode_year_once(spark, tmp_path, monkeypatch):
+    """The summary CLI executes each sheet's mode-year subquery (2 jobs)
+    once: the emptiness check, the period list and the sinks read one
+    execution of the transactions. Two more sheets add 6 jobs to the run
+    (10 when the period list and the sinks each ran the subqueries)."""
+    from vat_etl_spark import app
+    from vat_etl_spark.session import release_engine_caches
+
+    load, paths = app.load_transactions, _quarter_csvs(tmp_path)
+    jobs = {}
+    for n in (1, 3):
+        def union(spark, path, n=n, **kw):
+            frames = [load(spark, p, **kw) for p in paths[:n]]
+            tx = frames[0]
+            for f in frames[1:]:
+                tx = tx.unionByName(f)
+            return tx
+
+        monkeypatch.setattr(app, "load_transactions", union)
+        argv = ["summary", "--input", "q.csv", "--out-parquet", str(tmp_path / f"pq{n}"),
+                "--out-sqlite", str(tmp_path / f"out{n}.db")]
+        _, jobs[n] = _group_jobs(spark, f"vat_cli_{n}", lambda: main(argv, spark=spark))
+        release_engine_caches(spark)
+    assert jobs[3] - jobs[1] <= 6, jobs
+
+
 def test_tab_only_first_line_loads_like_the_file_without_it(spark, tmp_path):
     """Spark's CSV data reader skips a line Java's ``trim`` empties (a lone
     tab) before it drops the header line, so the header is the next line

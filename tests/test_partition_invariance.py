@@ -7,10 +7,15 @@ accumulation)."""
 from __future__ import annotations
 
 from vat_etl_spark.queries import QUERIES
+from vat_etl_spark.session import release_engine_caches
 
 
-def _rows(spark, sf, name):
-    return sorted(map(tuple, QUERIES[name](spark, sf).collect()))
+def _rows(spark, sf, name, plans=None):
+    df = QUERIES[name](spark, sf)
+    rows = sorted(map(tuple, df.collect()))
+    if plans is not None:
+        plans[name] = df._jdf.queryExecution().executedPlan().toString()
+    return rows
 
 
 def test_money_aggregates_invariant_to_shuffle_partitions(spark, sf_smoke):
@@ -19,10 +24,17 @@ def test_money_aggregates_invariant_to_shuffle_partitions(spark, sf_smoke):
         results = {}
         for n in ("3", "17"):
             spark.conf.set("spark.sql.shuffle.partitions", n)
+            # a run boundary: no run reads what the last one persisted
+            release_engine_caches(spark)
+            plans = {}
             results[n] = {
-                q: _rows(spark, sf_smoke, q)
+                q: _rows(spark, sf_smoke, q, plans)
                 for q in ("vat_summary", "q1_pricing_summary", "topk_customers")
             }
+            # every run aggregates at its own partition count, none reads
+            # a cached result
+            for q, plan in plans.items():
+                assert "HashAggregate" in plan and "InMemoryTableScan" not in plan, (q, plan)
         assert results["3"] == results["17"]
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
@@ -38,6 +50,7 @@ def test_pipeline_ops_invariant_to_shuffle_partitions(spark, sf_smoke):
         results = {}
         for n in ("3", "17"):
             spark.conf.set("spark.sql.shuffle.partitions", n)
+            release_engine_caches(spark)
             results[n] = {
                 q: _rows(spark, sf_smoke, q)
                 for q in (

@@ -60,9 +60,11 @@ def run_summary(args: argparse.Namespace, spark: SparkSession | None = None) -> 
     from vat_etl_spark.sources import sinks
 
     spark = spark or get_spark("vat-etl-summary")
+    # persisted: the emptiness check, the period list and the summary all
+    # read it, so each sheet's mode-year subquery runs once per run
     tx = load_transactions(
         spark, args.input, compat=not args.sane, as_of_year=args.as_of_year
-    )
+    ).persist()
     if tx.isEmpty():
         raise SystemExit("no rows parsed from input (reference P7 guard)")
     summary = vat_box_summary(tx, compat=not args.sane)

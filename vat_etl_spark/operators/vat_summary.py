@@ -16,11 +16,13 @@ the second merges them per period. A linear scan with map-side partial
 aggregation; at 100 TB the only cost is the scan plus two tiny shuffles
 (group cardinality = periods × input partitions, then periods).
 
-The result is returned ``persist()``ed: every caller writes it to more
-than one sink (the CLI to parquet, SQLite, xlsx and the screen; perfbench
-to parquet and SQLite), so the first sink executes the plan once and the
-others read its ``InMemoryRelation``. The run boundary
-(``session.release_engine_caches``) releases it.
+``vat_box_summary`` returns the result ``persist()``ed: its callers write
+it to more than one sink (the CLI to parquet, SQLite, xlsx and the
+screen; perfbench to parquet and SQLite), so the first sink executes the
+plan once and the others read its ``InMemoryRelation``. The run boundary
+(``session.release_engine_caches``) releases it. ``vat_flagship``, which
+the registered ``vat_summary`` queries return for a single sink, builds
+the same plan unpersisted.
 
 Compat quirks reproduced (SURVEY.md §8): substring box matching (Q1), NULL
 box → "NAN" string → matches "A" (Q2), all-NULL sums → 0.0 not NULL (Q9),
@@ -55,6 +57,14 @@ BOX_DESCRIPTIONS: dict[str, str] = {
 def vat_box_summary(
     df: DataFrame, *, month_col: str | None = "Month", compat: bool = True
 ) -> DataFrame:
+    """The box summary of ``df``, persisted for its sinks to share (see
+    the module docstring); the plan is ``_box_summary_plan``'s."""
+    return _box_summary_plan(df, month_col=month_col, compat=compat).persist()
+
+
+def _box_summary_plan(
+    df: DataFrame, *, month_col: str | None = "Month", compat: bool = True
+) -> DataFrame:
     """Compute the 4-rows-per-period VAT summary from a normalized
     transaction DataFrame. Output schema = the golden ``vat_summary`` table
     (FIXTURES.md §A2): Period, FTA Box, Description, Net Value, VAT Value,
@@ -68,8 +78,7 @@ def vat_box_summary(
     free text) keep the explicit column.
 
     Expressions are Spark SQL text, so building the plan costs a few py4j
-    round trips per DataFrame call, not one per sub-expression. Returned
-    persisted (see the module docstring).
+    round trips per DataFrame call, not one per sub-expression.
     """
     box, year, monthnum = ident(BOX_COL), ident(YEAR_COL), ident(MONTHNUM_COL)
 
@@ -143,7 +152,7 @@ def vat_box_summary(
         .sortWithinPartitions(F.expr(year), F.expr(monthnum), F.expr("`FTA Box`"))
         .drop(YEAR_COL, MONTHNUM_COL)
     )
-    return out.persist()
+    return out
 
 
 def lineitem_as_vat_transactions(lineitem: DataFrame, orders: DataFrame) -> DataFrame:
@@ -188,7 +197,8 @@ def lineitem_as_vat_transactions(lineitem: DataFrame, orders: DataFrame) -> Data
 
 
 def vat_flagship(lineitem: DataFrame, orders: DataFrame, compat: bool = True) -> DataFrame:
-    """End-to-end flagship: testdata → VAT transaction shape → box summary."""
-    return vat_box_summary(
+    """End-to-end flagship: testdata → VAT transaction shape → box summary.
+    One sink reads it, so the plan is returned unpersisted."""
+    return _box_summary_plan(
         lineitem_as_vat_transactions(lineitem, orders), compat=compat, month_col=None
     )

@@ -92,8 +92,9 @@ def release_engine_caches(spark: SparkSession) -> int:
     The engine's one cache rule: a query ``persist()``s what it reuses
     within one invocation (banded-dedup slim/kept/dup frames, pHash
     signature frames, ANN serve inputs, per-grain aggregates, and the VAT
-    box summary that its sinks share — ``vat_box_summary`` returns it
-    persisted, so the second sink reads the first one's execution), and
+    box summary and transactions that its sinks share — ``vat_box_summary``
+    returns it persisted, so the second sink reads the first one's
+    execution, and the summary CLI persists its transactions), and
     whoever runs queries back to back calls this at each run boundary.
     Registered queries return LAZY plans, so a query cannot unpersist its
     own layers, and no cache may cross a run: two invocations of one
